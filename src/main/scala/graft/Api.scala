@@ -62,16 +62,6 @@ object Api {
     }
     (n, seqLen)
   }
-
-  private[graft] def embT(pack: ModelPack, emb: graft.kernel.WordShapeEmbedding,
-                          n: Int, seqLen: Int, ws: Workspace): Array[Float] = {
-    val ns = n * seqLen
-    val embOut = ws.f(WS.EMB, ns * emb.dim)
-    emb.into(ws.i(WS.WORD_IDS, ns), ws.i(WS.SHAPE_IDS, ns), ns, embOut)
-    val xT = ws.f(WS.XT, ns * emb.dim)
-    graft.kernel.CNNEncoder.transposeInto(embOut, n, seqLen, emb.dim, xT)
-    xT
-  }
 }
 
 /** Raw text -> entity spans (api.py:41-61, exec/infer.py:24-51). */
@@ -86,7 +76,7 @@ final class NER(val pack: ModelPack, val batchSize: Int = 8) extends Serializabl
       val toks = batch.iterator.map(t => Tokenizer.tokenize(t)).toArray
       val words = toks.map(_.map(_.text))
       val (n, seqLen) = encode(words, pack, ws)
-      val xT = embT(pack, pack.ner.emb, n, seqLen, ws)
+      val xT = pack.ner.encoder.embT(pack.ner.emb, n, seqLen, ws)
       val emissions = pack.ner.forwardT(xT, n, seqLen, ws.b(WS.PAD_MASK, n * seqLen), ws)
       val paths = pack.ner.crf.decode(emissions, n, seqLen, ws.b(WS.VALID, n * seqLen), ws)
       batch.indices.map { b =>
@@ -112,7 +102,7 @@ final class Morph(val pack: ModelPack, val batchSize: Int = 8) extends Serializa
     items.iterator.grouped(batchSize).flatMap { batch =>
       val words = batch.iterator.map(_.toArray).toArray
       val (n, seqLen) = encode(words, pack, ws)
-      val xT = embT(pack, pack.morph.emb, n, seqLen, ws)
+      val xT = pack.morph.encoder.embT(pack.morph.emb, n, seqLen, ws)
       val logits = pack.morph.forwardT(xT, n, seqLen, ws.b(WS.PAD_MASK, n * seqLen), ws)
       val t = pack.morphTags.size
       batch.indices.map { b =>
@@ -148,7 +138,7 @@ final class Syntax(val pack: ModelPack, val batchSize: Int = 8) extends Serializ
     items.iterator.grouped(batchSize).flatMap { batch =>
       val words = batch.iterator.map(_.toArray).toArray
       val (n, seqLen) = encode(words, pack, ws)
-      val xT = embT(pack, pack.syntax.emb, n, seqLen, ws)
+      val xT = pack.syntax.encoder.embT(pack.syntax.emb, n, seqLen, ws)
       val (headIds, relIds) = pack.syntax.forwardT(xT, n, seqLen,
         ws.b(WS.PAD_MASK, n * seqLen), ws.b(WS.VALID, n * seqLen), ws)
       batch.indices.map { b =>

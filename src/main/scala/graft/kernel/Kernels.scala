@@ -19,7 +19,7 @@ object Kernels {
     * SLOWER than this loop at the pipeline's shapes (biaffine n=32, rel
     * n=H*R; syntax stage 3.5s scalar vs 5.4s SIMD best-of-3) — C2 already
     * auto-vectorizes the inner j-loop and accumulates in place. SIMD
-    * dispatch is therefore only on the dense-conv path (gemmDense below).
+    * dispatch is therefore only on dense weights (gemmDense, convDirect).
     */
   def gemm(a: Array[Float], m: Int, k: Int, b: Array[Float], n: Int,
            out: Array[Float]): Unit = {
@@ -109,6 +109,48 @@ object Kernels {
     }
   }
 
+  /** Dense direct convolution: for every row r = b*S+s and filter f,
+    * prod = sum over p = c*kernel+t ascending of fma(x[b, c, s+t], w[p, f])
+    * — the FMA order of [[gemmDense]] over im2col row r, without the im2col
+    * copy — handed to `st` for the epilogue and store. x is the guarded
+    * layout [B, chans, S+2*pad] (see [[Conv1d]]), w is [chans*kernel, F].
+    * Dispatches to the SIMD twin when available; the two paths produce
+    * identical bits (KernelSpec asserts it).
+    */
+  private[graft] def convDirect(x: Array[Float], batch: Int, seqLen: Int, chans: Int,
+                                kernel: Int, pad: Int, w: Array[Float], filters: Int,
+                                st: ConvStore, ws: Workspace): Unit = {
+    if (simdAvailable) VectorGemm.convDirect(x, batch, seqLen, chans, kernel, pad, w, filters, st, ws)
+    else convDirectScalar(x, batch, seqLen, chans, kernel, pad, w, filters, st, ws)
+  }
+
+  private[graft] def convDirectScalar(x: Array[Float], batch: Int, seqLen: Int, chans: Int,
+                                      kernel: Int, pad: Int, w: Array[Float], filters: Int,
+                                      st: ConvStore, ws: Workspace): Unit = {
+    // one row at a time, accumulate-in-place over the filters like
+    // gemmDenseScalar; p walks the window flat: +1 per tap, and a jump of
+    // (S+2*pad-kernel) to the next channel's row
+    val sg = seqLen + 2 * pad
+    val k = chans * kernel
+    val acc = ws.f(WS.PROD, filters)
+    var r = 0
+    while (r < batch * seqLen) {
+      val xr = (r / seqLen) * chans * sg + r % seqLen
+      java.util.Arrays.fill(acc, 0, filters, 0f)
+      var p = 0; var off = 0; var t = 0
+      while (p < k) {
+        val av = x(xr + off)
+        val bOff = p * filters
+        var j = 0
+        while (j < filters) { acc(j) = Math.fma(av, w(bOff + j), acc(j)); j += 1 }
+        p += 1; off += 1; t += 1
+        if (t == kernel) { t = 0; off += sg - kernel }
+      }
+      st.put(acc, 0, filters, 1, r, 1, 0, filters)
+      r += 1
+    }
+  }
+
   def argmaxFirst(a: Array[Float], off: Int, len: Int): Int = {
     var best = 0
     var bv = a(off)
@@ -164,9 +206,16 @@ final case class Linear(weight: Array[Float], inDim: Int, outDim: Int,
   }
 }
 
-/** 1-D convolution via im2col + GEMM (exec/model.py:71-112).
-  * weight [filters, in, kernel] flattened as filters x (in*kernel);
-  * input [B, in, seq] -> output [B, filters, seq] (padding keeps seq).
+/** 1-D convolution (exec/model.py:71-112) over the ZERO-GUARDED layout.
+  * weight [filters, in, kernel] flattened as filters x (in*kernel).
+  *
+  * Guarded-layout contract: the input is channel-major [B, in, S+2*padding]
+  * whose `padding` guard columns on each side of every (b, c) row hold
+  * +0f, so window (s, t) of channel c reads index c*(S+2*padding) + s + t
+  * in place — the zeros im2col would have copied in are already there.
+  * Same padding only (windows == S). The product goes through a
+  * [[ConvStore]], which applies the layer's fused epilogue and picks the
+  * output layout.
   */
 final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
                         kernel: Int, bias: Array[Float], padding: Int)
@@ -175,7 +224,7 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
   // nonzero taps in (filter, channel, tap) ascending order — iterating only
   // these preserves the per-output-element accumulation order while
   // skipping the (dominant, for sparse weights) zero-weight scan
-  @transient private lazy val nzTaps: (Array[Int], Array[Int], Array[Float]) = {
+  @transient private lazy val taps: Conv1d.Taps = {
     // the 4-bit tap packing below holds only for small kernels/padding
     // (all shipped packs are kernel=3/padding=1); fail loudly otherwise
     require(padding <= 8 && kernel - padding <= 8,
@@ -197,13 +246,13 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
       }
       f += 1
     }
-    (fs.result(), cd.result(), vs.result())
+    new Conv1d.Taps(fs.result(), cd.result(), vs.result())
   }
 
   // fraction of nonzero weights decides the physical algorithm: rigged
   // synthetic packs are ~99% zeros (tap skipping wins); trained/production
-  // packs are fully dense (im2col+GEMM wins — the tap path's inner loops
-  // are seqLen-short and overhead-bound at 250k taps)
+  // packs are fully dense (the direct FMA-tile kernel wins — the tap path's
+  // inner loops are seqLen-short and overhead-bound at 250k taps)
   @transient private lazy val isDense: Boolean = {
     var nz = 0
     var i = 0
@@ -211,73 +260,8 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
     nz * 4 > weight.length
   }
 
-  // weight [F, C*K] — GEMM a-operand, rows are filters
-  def apply(input: Array[Float], batch: Int, seqLen: Int): Array[Float] = {
-    val windows = seqLen + 2 * padding - kernel + 1
-    val out = new Array[Float](batch * filters * windows)
-    into(input, batch, seqLen, out)
-    out
-  }
-
-  def into(input: Array[Float], batch: Int, seqLen: Int, out: Array[Float]): Unit =
-    into(input, batch, seqLen, out, null)
-
-  /** Convolution with two numerically-identical physical forms (per output
-    * element the products are added in the same (channel-major, tap-minor)
-    * order as the reference's im2col+GEMM, bias last):
-    *
-    *  - sparse weights: direct tap accumulation — each nonzero (filter,
-    *    channel, tap) is a unit-stride saxpy over the sequence; zero taps
-    *    skipped entirely (the rigged packs are ~99% zeros)
-    *  - dense weights: transposed im2col (each (c,tap) row is a shifted
-    *    arraycopy of the input channel) + GEMM weight[F,CK] x col[CK,S] —
-    *    long unit-stride inner loops, the right shape at production dims
-    *    (250k taps, where the tap path is loop-overhead-bound)
-    *
-    * out ≥ batch*filters*seqLen (requires the reference's same-pad config:
-    * windows == seqLen). ws (optional) provides the im2col scratch buffer.
-    */
-  def into(input: Array[Float], batch: Int, seqLen: Int, out: Array[Float],
-           ws: Workspace): Unit = {
-    // the direct form assumes same-padding output (windows == seqLen)
-    require(seqLen + 2 * padding - kernel + 1 == seqLen,
-      s"Conv1d.into requires same padding (kernel=$kernel padding=$padding)")
-    if (isDense) { intoGemm(input, batch, seqLen, out, ws); return }
-    val (nzF, nzCD, nzV) = nzTaps
-    val n = nzF.length
-    var b = 0
-    while (b < batch) {
-      val oBase = b * filters * seqLen
-      val iBase = b * inDim * seqLen
-      java.util.Arrays.fill(out, oBase, oBase + filters * seqLen, 0f)
-      var i = 0
-      while (i < n) {
-        val oOff = oBase + nzF(i) * seqLen
-        val cd = nzCD(i)
-        val d = (cd & 15) - 8 // out[s] += v * in[s + d]
-        val io = iBase + (cd >>> 4) * seqLen + d
-        val v = nzV(i)
-        var s = if (d < 0) -d else 0
-        val e = if (d > 0) seqLen - d else seqLen
-        while (s < e) { out(oOff + s) += v * input(io + s); s += 1 }
-        i += 1
-      }
-      var f = 0
-      while (f < filters) {
-        val bv = bias(f)
-        if (bv != 0f) {
-          val oOff = oBase + f * seqLen
-          var s = 0
-          while (s < seqLen) { out(oOff + s) += bv; s += 1 }
-        }
-        f += 1
-      }
-      b += 1
-    }
-  }
-
-  // weight [F, C*K] transposed to [C*K, F] once — the GEMM b-operand
-  // (L2-resident at production dims: 990x256 floats = 1 MB)
+  // weight [F, C*K] transposed to [C*K, F] once — the dense kernel's
+  // b-operand (L2-resident at production dims: 990x256 floats = 1 MB)
   @transient private lazy val weightT: Array[Float] = {
     val ck = inDim * kernel
     val wt = new Array[Float](ck * filters)
@@ -290,64 +274,139 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
     wt
   }
 
-  /** dense path: one im2col+GEMM over ALL positions of the batch —
-    * col[B*S, C*K] x weightT[C*K, F] — so the GEMM inner loop runs over
-    * the F=256 filters (long, unit-stride, vectorizable) instead of the
-    * ~8-token sequence. Per output element the summation over p = c*K+t
-    * ascending matches the reference im2col accumulation order exactly.
+  /** Allocating form (tests): input [B, in, S] -> [B, filters, S], bias
+    * added, no norm or mask.
     */
-  private def intoGemm(input: Array[Float], batch: Int, seqLen: Int,
-                       out: Array[Float], ws: Workspace): Unit = {
-    val ck = inDim * kernel
-    val rows = batch * seqLen
-    val col = if (ws != null) ws.f(WS.COL, rows * ck) else new Array[Float](rows * ck)
-    val tmp = if (ws != null) ws.f(WS.PROD, rows * filters)
-              else new Array[Float](rows * filters)
-    // col[(b*S+s), c*K+t] = in[b, c, s+t-padding] (zeros at the edges);
-    // row-major build: writes sequential, reads nearly so
-    var b = 0
-    while (b < batch) {
-      var s = 0
-      while (s < seqLen) {
-        val rOff = (b * seqLen + s) * ck
-        var c = 0
-        while (c < inDim) {
-          val iOff = (b * inDim + c) * seqLen + s - padding
-          val cOff = rOff + c * kernel
-          var t = 0
-          while (t < kernel) {
-            val si = s + t - padding
-            col(cOff + t) = if (si >= 0 && si < seqLen) input(iOff + t) else 0f
-            t += 1
-          }
-          c += 1
-        }
-        s += 1
-      }
-      b += 1
+  def apply(input: Array[Float], batch: Int, seqLen: Int): Array[Float] = {
+    val sg = seqLen + 2 * padding
+    val x = new Array[Float](batch * inDim * sg)
+    var bc = 0
+    while (bc < batch * inDim) {
+      System.arraycopy(input, bc * seqLen, x, bc * sg + padding, seqLen)
+      bc += 1
     }
-    Kernels.gemmDense(col, rows, ck, weightT, filters, tmp)
-    // tmp [B*S, F] (+bias) -> out [B, F, S]
-    b = 0
-    while (b < batch) {
-      var f = 0
-      while (f < filters) {
-        val bv = bias(f)
-        val oOff = (b * filters + f) * seqLen
-        var s = 0
-        while (s < seqLen) {
-          out(oOff + s) = tmp((b * seqLen + s) * filters + f) + bv
-          s += 1
+    val out = new Array[Float](batch * filters * seqLen)
+    forward(x, batch, seqLen, new ConvStore(bias, null, null, out, seqLen, filters, 0),
+      new Workspace)
+    out
+  }
+
+  /** Convolution of the guarded input x [B, in, S+2*padding] into `st`.
+    * Two numerically identical physical forms — per output element the
+    * products are summed over p = c*kernel + t ascending (the reference's
+    * im2col order), then the epilogue adds the bias:
+    *
+    *  - dense weights: [[Kernels.convDirect]], FMA register tiles that
+    *    broadcast each window value straight from x (no im2col buffer)
+    *  - sparse weights: direct tap accumulation — each nonzero (filter,
+    *    channel, tap) is a unit-stride saxpy over the sequence into a
+    *    per-item [F, S] product (ws(WS.PROD)); zero taps are skipped
+    *    entirely (the rigged packs are ~99% zeros) and the loop bounds
+    *    skip the guards, so no weight ever multiplies a guard zero
+    */
+  private[graft] def forward(x: Array[Float], batch: Int, seqLen: Int, st: ConvStore,
+                             ws: Workspace): Unit = {
+    require(kernel == 2 * padding + 1,
+      s"Conv1d requires same padding (kernel=$kernel padding=$padding)")
+    if (isDense)
+      Kernels.convDirect(x, batch, seqLen, inDim, kernel, padding, weightT, filters, st, ws)
+    else {
+      val tp = taps
+      val n = tp.f.length
+      val sg = seqLen + 2 * padding
+      val prod = ws.f(WS.PROD, filters * seqLen)
+      var b = 0
+      while (b < batch) {
+        val iBase = b * inDim * sg + padding
+        java.util.Arrays.fill(prod, 0, filters * seqLen, 0f)
+        var i = 0
+        while (i < n) {
+          val oOff = tp.f(i) * seqLen
+          val cd = tp.cd(i)
+          val d = (cd & 15) - 8 // prod[s] += v * in[s + d]
+          val io = iBase + (cd >>> 4) * sg + d
+          val v = tp.v(i)
+          var s = if (d < 0) -d else 0
+          val e = if (d > 0) seqLen - d else seqLen
+          while (s < e) { prod(oOff + s) += v * x(io + s); s += 1 }
+          i += 1
         }
-        f += 1
+        st.put(prod, 0, 1, seqLen, b * seqLen, seqLen, 0, filters)
+        b += 1
       }
-      b += 1
     }
+    st.zeroGuards(batch)
   }
 }
 
+object Conv1d {
+  /** nonzero taps as parallel arrays: filter, channel*16 + (tap-padding+8), value */
+  private final class Taps(val f: Array[Int], val cd: Array[Int], val v: Array[Float])
+}
+
+/** Where a conv layer's product goes, and the per-element epilogue applied
+  * on the way out, fused into that one store. For filter f of row
+  * r = b*S + s:
+  *   v = prod + bias(f)
+  *   with norm: v = ((if (v > 0f) v else 0f) - mean(f)) * scale(f) + shift(f)
+  *   mask(r) (a PAD position): v = 0f
+  * Per element these are the same float expressions, in the same order,
+  * as separate bias, relu + batchnorm and mask passes
+  * (exec/model.py:257-286). `out` layout: with outPad >= 0 the zero-guarded
+  * channel-major [B, F, S+2*outPad] that the next conv layer reads (guards
+  * written by [[zeroGuards]]); with outPad < 0 row-major [B, S, F].
+  */
+private[graft] final class ConvStore(
+    private[kernel] val bias: Array[Float], norm: BatchNorm1d,
+    private[kernel] val mask: Array[Boolean], private[kernel] val out: Array[Float],
+    seqLen: Int, filters: Int, private[kernel] val outPad: Int) {
+  private val sg = seqLen + 2 * outPad
+  /** distance in `out` between filters f and f+1 of one row */
+  private[kernel] val colStride = if (outPad < 0) 1 else sg
+  private[kernel] val mean = if (norm == null) null else norm.mean
+  private[kernel] val scale = if (norm == null) null else norm.scale
+  private[kernel] val shift = if (norm == null) null else norm.bias
+
+  /** offset in `out` of filter j0 of row r */
+  private[kernel] def outOffset(r: Int, j0: Int): Int =
+    if (outPad < 0) r * filters + j0
+    else { val b = r / seqLen; (b * filters + j0) * sg + outPad + r - b * seqLen }
+
+  /** Store prod(pOff + rr*rs + q*cs) as filter j0+q of row r0+rr, for
+    * rr < rows and q < cols.
+    */
+  def put(prod: Array[Float], pOff: Int, rs: Int, cs: Int,
+          r0: Int, rows: Int, j0: Int, cols: Int): Unit = {
+    var rr = 0
+    while (rr < rows) {
+      val r = r0 + rr
+      val o = outOffset(r, j0)
+      var q = 0
+      if (mask != null && mask(r)) {
+        while (q < cols) { out(o + q * colStride) = 0f; q += 1 }
+      } else {
+        val po = pOff + rr * rs
+        while (q < cols) {
+          val j = j0 + q
+          var v = prod(po + q * cs) + bias(j)
+          if (mean != null) v = ((if (v > 0f) v else 0f) - mean(j)) * scale(j) + shift(j)
+          out(o + q * colStride) = v
+          q += 1
+        }
+      }
+      rr += 1
+    }
+  }
+
+  /** Write +0f into the guard columns of a guarded output. */
+  def zeroGuards(batch: Int): Unit =
+    if (outPad > 0) CNNEncoder.zeroGuards(out, batch * filters, seqLen, outPad)
+}
+
 /** (x-mean)/std*w+b per channel on [B,C,L] (exec/model.py:120-138;
-  * std = sqrt(var+eps) folded at export, model/exec.py:39-46).
+  * std = sqrt(var+eps) folded at export, model/exec.py:39-46). Inside the
+  * encoder it runs as part of the conv epilogue ([[ConvStore]]), fused with
+  * the preceding relu.
   */
 final case class BatchNorm1d(weight: Array[Float], bias: Array[Float],
                              mean: Array[Float], std: Array[Float])
@@ -358,7 +417,7 @@ final case class BatchNorm1d(weight: Array[Float], bias: Array[Float],
   // (x-m)*(w/s) differs from ((x-m)/s)*w by <=1 ulp; every golden is
   // pinned at the DECODED (argmax) level, same tolerance the round-1
   // im2col->sparse-tap conv rewrite already relied on.
-  @transient private lazy val scale: Array[Float] = {
+  @transient private[kernel] lazy val scale: Array[Float] = {
     val a = new Array[Float](weight.length)
     var c = 0
     while (c < weight.length) { a(c) = weight(c) / std(c); c += 1 }
@@ -374,31 +433,6 @@ final case class BatchNorm1d(weight: Array[Float], bias: Array[Float],
         val m = mean(c); val a = sc(c); val bi = bias(c)
         var l = 0
         while (l < len) { x(off + l) = (x(off + l) - m) * a + bi; l += 1 }
-        c += 1
-      }
-      b += 1
-    }
-  }
-
-  /** Fused relu + batchnorm: the encoder layer (conv -> relu -> norm,
-    * exec/model.py:257-268) ran TWO full streaming passes over [B,C,S];
-    * per-element max(0,x) then the same affine as [[applyInPlace]] in one
-    * pass halves the tensor traffic of the activation/norm stage.
-    */
-  def reluNormInPlace(x: Array[Float], batch: Int, channels: Int, len: Int): Unit = {
-    val sc = scale
-    var b = 0
-    while (b < batch) {
-      var c = 0
-      while (c < channels) {
-        val off = (b * channels + c) * len
-        val m = mean(c); val a = sc(c); val bi = bias(c)
-        var l = 0
-        while (l < len) {
-          val v = x(off + l)
-          x(off + l) = ((if (v > 0f) v else 0f) - m) * a + bi
-          l += 1
-        }
         c += 1
       }
       b += 1
@@ -497,9 +531,17 @@ final case class CNNEncoderLayer(conv: Conv1d, norm: BatchNorm1d) extends Serial
 /** Masked CNN encoder (exec/model.py:271-286): runs layers on [B,C,S],
   * zeroing PAD positions after EVERY layer (parity-critical near
   * boundaries since conv kernels straddle the pad).
+  *
+  * Activations stay in the zero-guarded layout of [[Conv1d]] from the
+  * embedding to the last layer: [[embT]] writes the guarded input
+  * [B, E, S+2*inPad], each layer writes bias + relu + batchnorm + mask in
+  * one pass into the guarded input of the next ([[ConvStore]]), and the
+  * last layer writes [B, S, outDim] directly.
   */
 final case class CNNEncoder(layers: Seq[CNNEncoderLayer]) extends Serializable {
   val outDim: Int = layers.last.conv.filters
+  /** guard width of the encoder input: the first layer's padding */
+  def inPad: Int = layers.head.conv.padding
   @transient private lazy val layerArr: Array[CNNEncoderLayer] = layers.toArray
 
   /** input [B,S,E] row-major, padMask [B,S] (true = PAD) -> [B,S,outDim].
@@ -509,77 +551,78 @@ final case class CNNEncoder(layers: Seq[CNNEncoderLayer]) extends Serializable {
   def apply(input: Array[Float], batch: Int, seqLen: Int, embDim: Int,
             padMask: Array[Boolean]): Array[Float] = {
     val ws = new Workspace
-    val xT = new Array[Float](batch * embDim * seqLen)
-    CNNEncoder.transposeInto(input, batch, seqLen, embDim, xT)
-    val enc = forwardT(xT, batch, seqLen, embDim, padMask, ws)
+    val xT = new Array[Float](batch * embDim * (seqLen + 2 * inPad))
+    CNNEncoder.transposeGuarded(input, batch, seqLen, embDim, inPad, xT)
+    val enc = forwardT(xT, batch, seqLen, padMask, ws)
     java.util.Arrays.copyOf(enc, batch * seqLen * outDim)
   }
 
-  /** xT [B,E,S] (left untouched, reusable across the three trunks) ->
-    * [B,S,outDim] written into ws(WS.ENC_OUT); valid until the next
-    * forwardT call on the same workspace.
+  /** Embed the batch's word/shape ids (ws(WS.WORD_IDS), ws(WS.SHAPE_IDS),
+    * [B*S]) and write the encoder input: the guarded transpose
+    * [B, E, S+2*inPad] in ws(WS.XT), valid until the next embT on the same
+    * workspace (so one call serves every trunk with the same embedding
+    * and inPad).
     */
-  def forwardT(xT: Array[Float], batch: Int, seqLen: Int, embDim: Int,
+  def embT(emb: WordShapeEmbedding, batch: Int, seqLen: Int, ws: Workspace): Array[Float] = {
+    val ns = batch * seqLen
+    val embOut = ws.f(WS.EMB, ns * emb.dim)
+    emb.into(ws.i(WS.WORD_IDS, ns), ws.i(WS.SHAPE_IDS, ns), ns, embOut)
+    val xT = ws.f(WS.XT, batch * emb.dim * (seqLen + 2 * inPad))
+    CNNEncoder.transposeGuarded(embOut, batch, seqLen, emb.dim, inPad, xT)
+    xT
+  }
+
+  /** xT guarded [B, E, S+2*inPad] (left untouched, reusable across the
+    * three trunks) -> [B,S,outDim] written into ws(WS.ENC_OUT); valid
+    * until the next forwardT call on the same workspace.
+    */
+  def forwardT(xT: Array[Float], batch: Int, seqLen: Int,
                padMask: Array[Boolean], ws: Workspace): Array[Float] = {
     val ls = layerArr
     var x = xT
-    var channels = embDim
     var li = 0
     while (li < ls.length) {
       val layer = ls(li)
       val f = layer.conv.filters
-      val y = ws.f(if (li % 2 == 0) WS.ENC_A else WS.ENC_B, batch * f * seqLen)
-      layer.conv.into(x, batch, seqLen, y, ws)
-      layer.norm.reluNormInPlace(y, batch, f, seqLen)
-      // zero masked positions after EVERY layer (exec/model.py:277-286)
-      var bb = 0
-      while (bb < batch) {
-        var s = 0
-        while (s < seqLen) {
-          if (padMask(bb * seqLen + s)) {
-            var c = 0
-            while (c < f) { y((bb * f + c) * seqLen + s) = 0f; c += 1 }
-          }
-          s += 1
-        }
-        bb += 1
-      }
+      val last = li == ls.length - 1
+      val outPad = if (last) -1 else ls(li + 1).conv.padding
+      val y =
+        if (last) ws.f(WS.ENC_OUT, batch * seqLen * f)
+        else ws.f(if (li % 2 == 0) WS.ENC_A else WS.ENC_B, batch * f * (seqLen + 2 * outPad))
+      layer.conv.forward(x, batch, seqLen,
+        new ConvStore(layer.conv.bias, layer.norm, padMask, y, seqLen, f, outPad), ws)
       x = y
-      channels = f
       li += 1
     }
-    // swap back to [B,S,C]
-    val out = ws.f(WS.ENC_OUT, batch * seqLen * channels)
-    var b = 0
-    while (b < batch) {
-      var s = 0
-      while (s < seqLen) {
-        var c = 0
-        while (c < channels) {
-          out((b * seqLen + s) * channels + c) = x((b * channels + c) * seqLen + s)
-          c += 1
-        }
-        s += 1
-      }
-      b += 1
-    }
-    out
+    x
   }
 }
 
 object CNNEncoder {
-  /** [B,S,E] -> [B,E,S] */
-  def transposeInto(input: Array[Float], batch: Int, seqLen: Int, embDim: Int,
-                    out: Array[Float]): Unit = {
+  /** +0f into the `pad` guard columns on both sides of `rows` guarded rows */
+  def zeroGuards(x: Array[Float], rows: Int, seqLen: Int, pad: Int): Unit = {
+    val sg = seqLen + 2 * pad
+    var o = 0
+    while (o < rows * sg) {
+      var q = 0
+      while (q < pad) { x(o + q) = 0f; x(o + pad + seqLen + q) = 0f; q += 1 }
+      o += sg
+    }
+  }
+
+  /** [B,S,E] -> guarded [B, E, S+2*pad] (guard columns +0f) */
+  def transposeGuarded(input: Array[Float], batch: Int, seqLen: Int, embDim: Int,
+                       pad: Int, out: Array[Float]): Unit = {
+    val sg = seqLen + 2 * pad
+    zeroGuards(out, batch * embDim, seqLen, pad)
     var b = 0
     while (b < batch) {
       var s = 0
       while (s < seqLen) {
+        val iOff = (b * seqLen + s) * embDim
+        val oOff = b * embDim * sg + pad + s
         var c = 0
-        while (c < embDim) {
-          out((b * embDim + c) * seqLen + s) = input((b * seqLen + s) * embDim + c)
-          c += 1
-        }
+        while (c < embDim) { out(oOff + c * sg) = input(iOff + c); c += 1 }
         s += 1
       }
       b += 1

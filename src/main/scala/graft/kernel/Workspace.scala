@@ -41,26 +41,27 @@ final class Workspace {
 object WS {
   // float slots
   val EMB = 0        // [B,S,E] shared word+shape embedding (live across all 3 trunks)
-  val XT = 1         // [B,E,S] transposed emb (live across all 3 trunks)
-  val ENC_A = 2      // CNN layer ping
-  val ENC_B = 3      // CNN layer pong
-  val COL = 4        // conv im2col
-  val PROD = 5       // conv GEMM product
-  val ENC_OUT = 6    // [B,S,C] encoder output (live until the model's heads consume it)
-  val NER_OUT = 7    // NER emissions (live until CRF decode)
-  val MORPH_OUT = 8  // morph logits (live until assembly — syntax must not touch)
-  val SH_ROOT = 9    // syntax withRoot
-  val SH_H = 10      // FF head out (head stage, then reused by rel stage)
-  val SH_T = 11      // FF tail out
-  val SH_HK = 12     // biaffine h×kernel product
-  val SH_HB = 13     // per-batch h block
-  val HEAD_SC = 14   // arc scores [B,S,S+1]
-  val GATH = 15      // gathered head states
-  val REL_SC = 16    // rel scores [B,S,R]
-  val CRF_SCORE = 17 // viterbi running scores [B,T]
-  val CRF_CAND = 18  // viterbi candidate scores [T]
-  val CRF_NS = 19    // viterbi new scores [T]
-  val F_SLOTS = 20
+  val XT = 1         // guarded [B,E,S+2*pad] encoder input (live across all 3 trunks)
+  val ENC_A = 2      // guarded CNN layer output, ping
+  val ENC_B = 3      // guarded CNN layer output, pong
+  val PROD = 4       // conv product on its way to the epilogue: dense tile spill
+                     // or scalar row, sparse per-item [F,S] (live within one layer)
+  val ENC_OUT = 5    // [B,S,C] encoder output, written by the last layer
+                     // (live until the model's heads consume it)
+  val NER_OUT = 6    // NER emissions (live until CRF decode)
+  val MORPH_OUT = 7  // morph logits (live until assembly — syntax must not touch)
+  val SH_ROOT = 8    // syntax withRoot
+  val SH_H = 9       // FF head out (head stage, then reused by rel stage)
+  val SH_T = 10      // FF tail out
+  val SH_HK = 11     // biaffine h×kernel product
+  val SH_HB = 12     // per-batch h block
+  val HEAD_SC = 13   // arc scores [B,S,S+1]
+  val GATH = 14      // gathered head states
+  val REL_SC = 15    // rel scores [B,S,R]
+  val CRF_SCORE = 16 // viterbi running scores [B,T]
+  val CRF_CAND = 17  // viterbi candidate scores [T]
+  val CRF_NS = 18    // viterbi new scores [T]
+  val F_SLOTS = 19
 
   // int slots
   val WORD_IDS = 0

@@ -140,27 +140,23 @@ object Pipeline {
       b += 1
     }
 
-    // shared embedding + [B,E,S] transpose computed ONCE for all 3 trunks
+    // shared embedding + guarded transpose computed ONCE for all 3 trunks
     // when the pack shares the instance (navec weight sharing)
-    def embT(emb: graft.kernel.WordShapeEmbedding): Array[Float] = {
-      val embOut = ws.f(WS.EMB, ns * emb.dim)
-      emb.into(wordIds, shapeIds, ns, embOut)
-      val xT = ws.f(WS.XT, ns * emb.dim)
-      graft.kernel.CNNEncoder.transposeInto(embOut, n, seqLen, emb.dim, xT)
-      xT
-    }
-    val sharedXT = if (pack.sharedEmb) embT(pack.ner.emb) else null
+    val sharedXT = if (pack.sharedEmb) pack.ner.encoder.embT(pack.ner.emb, n, seqLen, ws) else null
 
     // NER: emissions -> CRF Viterbi -> BIO tags -> char spans
     val emissions = pack.ner.forwardT(
-      if (sharedXT != null) sharedXT else embT(pack.ner.emb), n, seqLen, padMask, ws)
+      if (sharedXT != null) sharedXT else pack.ner.encoder.embT(pack.ner.emb, n, seqLen, ws),
+      n, seqLen, padMask, ws)
     val nerPaths = pack.ner.crf.decode(emissions, n, seqLen, valid, ws)
     // Morph: logits -> masked argmax -> conll tag parse
     val morphLogits = pack.morph.forwardT(
-      if (sharedXT != null) sharedXT else embT(pack.morph.emb), n, seqLen, padMask, ws)
+      if (sharedXT != null) sharedXT else pack.morph.encoder.embT(pack.morph.emb, n, seqLen, ws),
+      n, seqLen, padMask, ws)
     // Syntax: biaffine head + rel decode
     val (headIds, relIds) = pack.syntax.forwardT(
-      if (sharedXT != null) sharedXT else embT(pack.syntax.emb), n, seqLen, padMask, valid, ws)
+      if (sharedXT != null) sharedXT else pack.syntax.encoder.embT(pack.syntax.emb, n, seqLen, ws),
+      n, seqLen, padMask, valid, ws)
 
     val out = new ArrayBuffer[ParsedSent](n)
     b = 0

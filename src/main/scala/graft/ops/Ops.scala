@@ -1298,9 +1298,10 @@ object Dedup {
     * consumers read (doc_id, shingle); the MinHash signature min-aggregate
     * reads mdh — a min over a per-doc value SET is unchanged by the
     * distinct being taken on (xx, mdh) pairs rather than strings unless
-    * two distinct shingles of one doc collide on BOTH 64-bit hashes
-    * simultaneously (~2^-124), strictly rarer than the 2^-64 single-hash
-    * caveat [[shingleHashes]] has always documented. */
+    * two distinct shingles of one doc collide on BOTH hashes — the 64-bit
+    * xxhash64 and the ~31-bit md5-mod-P base hash — simultaneously
+    * (~2^-95), strictly rarer than the 2^-64 single-hash caveat
+    * [[shingleHashes]] has always documented. */
   def shingleDoubleHashes(docs: DataFrame, n: Int): DataFrame = {
     val t = docs.select(col("doc_id"), TextStats.tokens(F.lower_simple(col("text"))).as("toks"))
     t.select(col("doc_id"),
@@ -1582,8 +1583,9 @@ object Dedup {
     * are near-duplicates of an eval doc. Signatures are row-local, so
     * per-table computation is exactly the whole-table computation; the
     * band join is cross-table (no a<b orientation — sides are disjoint
-    * corpora), candidates verify with exact Jaccard over the two shingle
-    * tables. At 10^12 train docs the bench side is tiny, so every join
+    * corpora), candidates verify with Jaccard over the two tables'
+    * xxhash64 shingle columns (exact up to the 2^-64 collision caveat of
+    * [[shingleHashes]]). At 10^12 train docs the bench side is tiny, so every join
     * here is a bench-keyed (band, bh) equi-join AQE will broadcast.
     */
   def minhashCrossPairs(docsA: DataFrame, docsB: DataFrame, n: Int = 3,

@@ -25,7 +25,7 @@ final case class Vocab(items: Array[String]) extends Serializable {
   // per token (the single largest garbage source in the NLP hot loop).
   // Items containing cased uppercase chars can never equal a lowered input,
   // exactly as in `encode(lowerFast(w))`.
-  @transient private lazy val probeTable: (Array[String], Array[Int], Int) = {
+  @transient private lazy val probeTable: Vocab.ProbeTable = {
     var cap = 16
     while (cap < items.length * 2) cap <<= 1
     val keys = new Array[String](cap)
@@ -42,7 +42,7 @@ final case class Vocab(items: Array[String]) extends Serializable {
       }
       i += 1
     }
-    (keys, ids, mask)
+    new Vocab.ProbeTable(keys, ids, mask)
   }
 
   private def lowerHash(s: String): Int = {
@@ -75,7 +75,10 @@ final case class Vocab(items: Array[String]) extends Serializable {
       if (c == 'İ' || c == 'Σ') return encode(graft.text.Shape.lowerFast(word))
       ci += 1
     }
-    val (keys, ids, mask) = probeTable
+    val table = probeTable
+    val keys = table.keys
+    val ids = table.ids
+    val mask = table.mask
     var h = lowerHash(word) & mask
     while (true) {
       val k = keys(h)
@@ -90,6 +93,11 @@ final case class Vocab(items: Array[String]) extends Serializable {
 object Vocab {
   val UNK = "<unk>"
   val PAD = "<pad>"
+
+  /** encodeLower's open-addressed table, read through plain fields (a
+    * destructured tuple would allocate and box `mask` on every token).
+    */
+  private final class ProbeTable(val keys: Array[String], val ids: Array[Int], val mask: Int)
 
   /** [PAD, O, B-t, I-t, ...] (reference: slovnet/vocab.py:61-70). */
   def bioTags(types: Seq[String]): Vocab =
@@ -109,10 +117,12 @@ final case class NerModel(emb: WordShapeEmbedding, encoder: CNNEncoder,
     proj(enc, batch * seqLen)
   }
 
-  /** xT = transposed embedding [B,E,S]; emissions land in ws(WS.NER_OUT). */
+  /** xT = guarded encoder input (CNNEncoder.embT); emissions land in
+    * ws(WS.NER_OUT).
+    */
   def forwardT(xT: Array[Float], batch: Int, seqLen: Int,
                padMask: Array[Boolean], ws: Workspace): Array[Float] = {
-    val enc = encoder.forwardT(xT, batch, seqLen, emb.dim, padMask, ws)
+    val enc = encoder.forwardT(xT, batch, seqLen, padMask, ws)
     val out = ws.f(WS.NER_OUT, batch * seqLen * proj.outDim)
     proj.into(enc, batch * seqLen, out)
     out
@@ -134,7 +144,7 @@ final case class MorphModel(emb: WordShapeEmbedding, encoder: CNNEncoder,
     */
   def forwardT(xT: Array[Float], batch: Int, seqLen: Int,
                padMask: Array[Boolean], ws: Workspace): Array[Float] = {
-    val enc = encoder.forwardT(xT, batch, seqLen, emb.dim, padMask, ws)
+    val enc = encoder.forwardT(xT, batch, seqLen, padMask, ws)
     val out = ws.f(WS.MORPH_OUT, batch * seqLen * proj.outDim)
     proj.into(enc, batch * seqLen, out)
     out
@@ -166,7 +176,7 @@ final case class SyntaxModel(emb: WordShapeEmbedding, encoder: CNNEncoder,
   def forwardT(xT: Array[Float], batch: Int, seqLen: Int,
                padMask: Array[Boolean], valid: Array[Boolean],
                ws: Workspace): (Array[Int], Array[Int]) = {
-    val enc = encoder.forwardT(xT, batch, seqLen, emb.dim, padMask, ws)
+    val enc = encoder.forwardT(xT, batch, seqLen, padMask, ws)
     val dim = encoder.outDim
     val headScores = ws.f(WS.HEAD_SC, batch * seqLen * (seqLen + 1))
     head.into(enc, batch, seqLen, dim, ws, headScores)
@@ -225,9 +235,10 @@ final case class ModelPack(
     graft.text.Shape.SHAPES.map(shapeVocab.encode).toArray
 
   /** all three task models share one embedding instance (navec weight
-    * sharing, exec/model.py:536-557) — then emb + transpose run once per
-    * batch instead of three times.
+    * sharing, exec/model.py:536-557) and one encoder input guard — then
+    * CNNEncoder.embT runs once per batch instead of three times.
     */
   @transient lazy val sharedEmb: Boolean =
-    (ner.emb eq morph.emb) && (ner.emb eq syntax.emb)
+    (ner.emb eq morph.emb) && (ner.emb eq syntax.emb) &&
+      ner.encoder.inPad == morph.encoder.inPad && ner.encoder.inPad == syntax.encoder.inPad
 }

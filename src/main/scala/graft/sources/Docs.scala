@@ -36,9 +36,10 @@ object Docs {
     // 25k-doc reference-dims leg's 8->32 wall scaling at ~0.61 (guide
     // §2.5 stragglers; a real scheduler over millions of splits never
     // sees a 1.2-wave layout). Bounds: at least one task per core (tiny
-    // inputs), at most 256 tasks (local sandbox cap ≈ 8 waves on 32
-    // cores, itself a multiple of every leg's core count; a real 100 TB
-    // input brings millions of data-sized splits and no cap).
+    // inputs), at most 256 tasks rounded down to a whole number of waves
+    // (local sandbox cap ≈ 8 waves on 32 cores; 256 itself at p = 4, 8,
+    // 16, 32; a real 100 TB input brings millions of data-sized splits
+    // and no cap).
     // graft.gen.slices overrides the count for granularity probes — unlike
     // a repartition() it keeps the generate->parse chain one fused
     // object-level stage (no encoder round-trip, no exchange)
@@ -46,7 +47,8 @@ object Docs {
       val p = spark.sparkContext.defaultParallelism
       val byData = math.min(nDocs / 640, 256L)
       val waves = math.max(1L, math.round(byData.toDouble / p))
-      math.min(math.max(p.toLong, waves * p), 256L).toInt
+      val cap = math.max(p, (256 / p) * p).toLong
+      math.min(math.max(p.toLong, waves * p), cap).toInt
     }
     spark.range(0, nDocs, 1, slices).as[Long].map { id =>
       // index straight off the array-backed spans — no intermediate

@@ -86,8 +86,11 @@ object Tokenizer {
   @inline private def pkStop(a: Long): Int = ((a >>> 4) & 0x3fffffffL).toInt
   @inline private def pkKind(a: Long): Int = (a & 0xfL).toInt
 
-  /** Split into packed typed atoms; returns (array, count). */
-  private def atoms(text: String): (Array[Long], Int) = {
+  /** Split into packed typed atoms. The array is zero-terminated: a packed
+    * atom is never 0L (its stop is >= 1), so the count is the index of the
+    * first 0L, or the array length when full (see [[atomCount]]).
+    */
+  private def atoms(text: String): Array[Long] = {
     var out = new Array[Long](math.max(8, text.length / 4))
     var m = 0
     def push(v: Long): Unit = {
@@ -116,7 +119,13 @@ object Tokenizer {
         i += 1
       }
     }
-    (out, m)
+    out
+  }
+
+  private def atomCount(as: Array[Long]): Int = {
+    var m = 0
+    while (m < as.length && as(m) != 0L) m += 1
+    m
   }
 
   /** Is atom `a` the single character `c`? */
@@ -168,7 +177,8 @@ object Tokenizer {
 
   /** Tokenize one text into char-offset tokens. */
   def tokenize(text: String): Array[Token] = {
-    val (as, m) = atoms(text)
+    val as = atoms(text)
+    val m = atomCount(as)
     val out = new ArrayBuffer[Token](m)
     var i = 0
     while (i < m) {

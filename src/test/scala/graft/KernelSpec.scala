@@ -223,4 +223,159 @@ class KernelSpec extends AnyFunSuite {
     assert(together.map(p => (p.docId, p.nerSpans.toSeq, p.morph.toSeq, p.syn.toSeq)) ==
       separate.map(p => (p.docId, p.nerSpans.toSeq, p.morph.toSeq, p.syn.toSeq)))
   }
+
+  // ---- direct convolution: generated-input properties (ScalaCheck) ----
+
+  import org.scalacheck.{Gen, Prop, Test}
+
+  private def check(name: String, p: Prop): Unit = {
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(150), p)
+    assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
+  }
+
+  private def bitsEqual(a: Array[Float], b: Array[Float], n: Int): Boolean =
+    (0 until n).forall(i =>
+      java.lang.Float.floatToRawIntBits(a(i)) == java.lang.Float.floatToRawIntBits(b(i)))
+
+  private val lanes = VectorGemm.lanes
+  // S = 1 and B*S not a multiple of 4 come up often; F straddles the
+  // 1-vector and 4-vector tile widths
+  private val genS = Gen.frequency(1 -> Gen.const(1), 3 -> Gen.choose(2, 11))
+  private val genF = Gen.frequency(1 -> Gen.choose(1, lanes - 1),
+    3 -> Gen.choose(lanes, 8 * lanes + 3))
+  private val genK = Gen.oneOf(1, 3, 5)
+
+  /** The seed's dense conv: im2col [B*S, C*K] + gemmDense + bias, [B,F,S]. */
+  private def im2colConv(w: Array[Float], bias: Array[Float], in: Array[Float],
+                         bN: Int, sN: Int, cN: Int, fN: Int, kN: Int): Array[Float] = {
+    val ck = cN * kN
+    val pad = kN / 2
+    val col = new Array[Float](bN * sN * ck)
+    for (b <- 0 until bN; s <- 0 until sN; c <- 0 until cN; t <- 0 until kN) {
+      val si = s + t - pad
+      col((b * sN + s) * ck + c * kN + t) =
+        if (si >= 0 && si < sN) in((b * cN + c) * sN + si) else 0f
+    }
+    val wT = new Array[Float](ck * fN)
+    for (f <- 0 until fN; p <- 0 until ck) wT(p * fN + f) = w(f * ck + p)
+    val tmp = new Array[Float](bN * sN * fN)
+    Kernels.gemmDense(col, bN * sN, ck, wT, fN, tmp)
+    val out = new Array[Float](bN * fN * sN)
+    for (b <- 0 until bN; f <- 0 until fN; s <- 0 until sN)
+      out((b * fN + f) * sN + s) = tmp((b * sN + s) * fN + f) + bias(f)
+    out
+  }
+
+  /** The seed's sparse tap conv: nonzero taps in (c, t) order, in-range
+    * windows only, bias added when nonzero; [B,F,S].
+    */
+  private def tapConv(w: Array[Float], bias: Array[Float], in: Array[Float],
+                      bN: Int, sN: Int, cN: Int, fN: Int, kN: Int): Array[Float] = {
+    val pad = kN / 2
+    val out = new Array[Float](bN * fN * sN)
+    for (b <- 0 until bN; f <- 0 until fN; s <- 0 until sN) {
+      var acc = 0f
+      for (c <- 0 until cN; t <- 0 until kN) {
+        val v = w((f * cN + c) * kN + t)
+        val si = s + t - pad
+        if (v != 0f && si >= 0 && si < sN) acc += v * in((b * cN + c) * sN + si)
+      }
+      out((b * fN + f) * sN + s) = if (bias(f) != 0f) acc + bias(f) else acc
+    }
+    out
+  }
+
+  private def randArr(rnd: java.util.Random, n: Int): Array[Float] =
+    Array.fill(n)(rnd.nextFloat() * 2 - 1)
+
+  test("property: direct dense conv == im2col + gemmDense + bias, bit for bit") {
+    check("direct-vs-im2col", Prop.forAll(Gen.choose(1, 5), genS, Gen.choose(1, 40), genF,
+        genK, Gen.long) { (bN, sN, cN, fN, kN, seed) =>
+      val rnd = new java.util.Random(seed)
+      val w = randArr(rnd, fN * cN * kN).map(v => if (v == 0f) 0.5f else v)
+      val bias = randArr(rnd, fN)
+      val in = randArr(rnd, bN * cN * sN)
+      val got = Conv1d(w, fN, cN, kN, bias, kN / 2)(in, bN, sN)
+      bitsEqual(got, im2colConv(w, bias, in, bN, sN, cN, fN, kN), bN * fN * sN)
+    })
+  }
+
+  test("property: SIMD direct conv kernel == its scalar twin (fused epilogue, both layouts)") {
+    assert(Kernels.simdAvailable, "vector module missing in test JVM")
+    val ws1 = new Workspace
+    val ws2 = new Workspace
+    check("simd-vs-scalar", Prop.forAll(Gen.choose(1, 5), genS, Gen.choose(1, 40), genF,
+        genK, Gen.oneOf(-1, 0, 1, 2), Gen.long) { (bN, sN, cN, fN, kN, outPad, seed) =>
+      val rnd = new java.util.Random(seed)
+      val pad = kN / 2
+      val sg = sN + 2 * pad
+      val x = new Array[Float](bN * cN * sg)
+      for (bc <- 0 until bN * cN; s <- 0 until sN) x(bc * sg + pad + s) = rnd.nextFloat() * 2 - 1
+      val w = randArr(rnd, cN * kN * fN)
+      val bias = randArr(rnd, fN)
+      val norm = BatchNorm1d(randArr(rnd, fN), randArr(rnd, fN), randArr(rnd, fN),
+        Array.fill(fN)(0.5f + rnd.nextFloat()))
+      val mask = Array.fill(bN * sN)(rnd.nextInt(4) == 0)
+      val n = if (outPad < 0) bN * sN * fN else bN * fN * (sN + 2 * outPad)
+      val o1 = Array.fill(n)(Float.NaN)
+      val o2 = Array.fill(n)(Float.NaN)
+      VectorGemm.convDirect(x, bN, sN, cN, kN, pad, w, fN,
+        new ConvStore(bias, norm, mask, o1, sN, fN, outPad), ws1)
+      Kernels.convDirectScalar(x, bN, sN, cN, kN, pad, w, fN,
+        new ConvStore(bias, norm, mask, o2, sN, fN, outPad), ws2)
+      bitsEqual(o1, o2, n)
+    })
+  }
+
+  test("property: CNNEncoder.forwardT == seed layer composition (conv, reluNorm, mask, swap)") {
+    val ws = new Workspace // reused across cases: stale buffers must not leak in
+    val genLayers = Gen.choose(1, 3).flatMap(l => Gen.listOfN(l, Gen.zip(genF, genK)))
+    check("encoder", Prop.forAll(Gen.choose(1, 5), genS, Gen.choose(1, 24), genLayers,
+        Gen.oneOf(true, false), Gen.long) { (bN, sN, eN, dims, dense, seed) =>
+      val rnd = new java.util.Random(seed)
+      var inDim = eN
+      val layers = dims.map { case (fN, kN) =>
+        val w = randArr(rnd, fN * inDim * kN).map { v =>
+          if (dense) { if (v == 0f) 0.5f else v } else if (rnd.nextInt(8) == 0) v else 0f
+        }
+        val l = CNNEncoderLayer(Conv1d(w, fN, inDim, kN, randArr(rnd, fN), kN / 2),
+          BatchNorm1d(randArr(rnd, fN), randArr(rnd, fN), randArr(rnd, fN),
+            Array.fill(fN)(0.5f + rnd.nextFloat())))
+        inDim = fN
+        l
+      }
+      val enc = CNNEncoder(layers)
+      val input = randArr(rnd, bN * sN * eN) // [B,S,E]
+      val mask = Array.fill(bN * sN)(rnd.nextInt(3) == 0)
+      // seed composition on [B,C,S]
+      var x = new Array[Float](bN * eN * sN)
+      for (b <- 0 until bN; s <- 0 until sN; c <- 0 until eN)
+        x((b * eN + c) * sN + s) = input((b * sN + s) * eN + c)
+      var cN = eN
+      for (l <- layers) {
+        val cv = l.conv
+        // the weight-density rule of Conv1d picks the seed's physical form
+        val denseW = cv.weight.count(_ != 0f) * 4 > cv.weight.length
+        val y = (if (denseW) im2colConv _ else tapConv _)(
+          cv.weight, cv.bias, x, bN, sN, cN, cv.filters, cv.kernel)
+        val nm = l.norm
+        for (b <- 0 until bN; f <- 0 until cv.filters; s <- 0 until sN) {
+          val i = (b * cv.filters + f) * sN + s
+          val v = y(i)
+          y(i) = if (mask(b * sN + s)) 0f
+            else ((if (v > 0f) v else 0f) - nm.mean(f)) * (nm.weight(f) / nm.std(f)) + nm.bias(f)
+        }
+        x = y
+        cN = cv.filters
+      }
+      val want = new Array[Float](bN * sN * cN)
+      for (b <- 0 until bN; s <- 0 until sN; c <- 0 until cN)
+        want((b * sN + s) * cN + c) = x((b * cN + c) * sN + s)
+      val xT = ws.f(WS.XT, bN * eN * (sN + 2 * enc.inPad))
+      CNNEncoder.transposeGuarded(input, bN, sN, eN, enc.inPad, xT)
+      val got = enc.forwardT(xT, bN, sN, mask, ws)
+      bitsEqual(got, want, want.length) &&
+        bitsEqual(enc(input, bN, sN, eN, mask), want, want.length)
+    })
+  }
 }
