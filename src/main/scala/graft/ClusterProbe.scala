@@ -89,15 +89,15 @@ object ClusterProbe {
     })
     // GRAFT_SLICES: force the generator's slice count — holds task
     // granularity CONSTANT across core counts (a real 100 TB scan sizes
-    // splits by data, not by cluster size). Via the graft.gen.slices
-    // property so the generate->parse chain stays one fused object stage;
+    // splits by data, not by cluster size). Passed to the generator as its
+    // slice count so the generate->parse chain stays one fused object stage;
     // GRAFT_SLICES_SHUFFLE=1 uses repartition() instead, which inserts an
     // encoder round-trip + exchange (probe for that boundary's cost).
     val forcedSlices = sys.env.get("GRAFT_SLICES").map(_.toInt)
     val sliceShuffle = sys.env.get("GRAFT_SLICES_SHUFFLE").contains("1")
-    if (!sliceShuffle) forcedSlices.foreach(n => sys.props("graft.gen.slices") = n.toString)
     def docsAt(docs: Long) = {
-      val d = graft.sources.Docs.russianDocs(spark, docs)
+      val d = graft.sources.Docs.russianDocs(spark, docs,
+        if (sliceShuffle) None else forcedSlices)
       if (sliceShuffle) forcedSlices.map(d.repartition(_)).getOrElse(d) else d
     }
     def run(docs: Long): Double = {

@@ -39,13 +39,13 @@ object Explain {
     "q_dup_spans" -> "gram agg + hit join + per-doc island windows (suffix-style dup spans)",
     "q_kg_pagerank" -> "iterative rank joins, lineage truncated per superstep",
     "q_kg_twohop" -> "hop equi-join: the AQE skew-split shape",
-    "q_kg_comentions" -> "per-doc pair self-join + two-phase agg",
+    "q_kg_comentions" -> "per-doc blocked pairs: driver count when sum C(n,2) fits, else self-join + two-phase agg",
     "q_asof_join" -> "union + ONE shuffle + running-last window (no per-row range probe)",
     "q_bm25" -> "inverted-index tf + broadcast term semi-join",
     "q_kg_triangles" -> "degree-oriented wedge joins; orientation bounds wedges on hubs",
     "q_length_stats" -> "exact percentile sort-agg per language",
     "q_kg_bfs" -> "frontier-only Pregel supersteps: one equi-join + min-agg per hop",
-    "q_kg_neighbor_jaccard" -> "hub-capped wedge self-join",
+    "q_kg_neighbor_jaccard" -> "hub-capped wedge pairs: driver count when they fit, else self-join",
     "q_kg_walks" -> "hash-pick composite equi-join per step over dense-ranked neighbor lists",
     "q_lm_perplexity" -> "bigram-LM joins + integer micro-nat agg (partition-order exact)",
     "q_tfidf_top" -> "tf x df equi-join (term-keyed, vocab NOT assumed broadcastable) + per-doc window top-k",
@@ -67,7 +67,7 @@ object Explain {
     "q_bpe_encode" -> "merge table applied over DISTINCT words (one projection per merge); corpus pays a single word-keyed join; piece-id table O(alphabet+rounds)",
     "q_bpe_fertility" -> "same single word-keyed vocab join as encode (pieces never exploded — only size(syms)+length travel); per-lang two-phase agg; integer ppm ratios",
     "q_kg_sample" -> "per-hop sampled adjacency via WindowGroupLimit top-k (hub costs k rows); expansion = frontier equi-joins; output bounded V*prod(fanouts)",
-    "q_kg_stories" -> "hub-capped entity-blocked doc self-join (pair volume sum C(df,2), df<=cap), minShared filter BEFORE CC; adaptive union-find",
+    "q_kg_stories" -> "hub-capped entity-blocked doc pairs (volume sum C(df,2), df<=cap): driver count + union-find when it fits, else self-join, minShared filter BEFORE CC; adaptive union-find",
     "q_kg_entity_cards" -> "one two-sided explode scan feeding 4 aggregates; top-k windows as WindowGroupLimit per (entity, side); entity-id equi-join stitches",
     "q_kg_node2vec" -> "per step: frontier x out-nbrs equi-join + d=1 membership left-join + per-walk windows (partition = one candidate list); no BNLJ",
     "q_kg_signatures" -> "one two-phase hash aggregate over triples; pred-keyed window runs on the aggregated signature table, not the corpus",

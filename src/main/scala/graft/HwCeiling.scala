@@ -78,6 +78,17 @@ object HwCeiling {
     * AVX-512 all-core frequency license as the inference GEMM, which the
     * scalar-double kernel above does not. 8 vectors x 2 flops x lanes
     * per iteration.
+    *
+    * It measures LATENCY, not throughput: the four accumulators form
+    * dependent mul -> add chains (a3 even reads the a0 of the same
+    * iteration), and mul and add are issued separately, with no FMA. A
+    * GEMM register tile runs independent FMA chains and overlaps those
+    * latencies, so it can beat this "ceiling": on a 4-vCPU AVX-512 Xeon
+    * (JDK 17) the probe read 38-42 GF/s per thread while
+    * `VectorGemm.gemmDense` alone ran 67-87 GF/s per thread at the conv
+    * shapes 384x900x256, 384x768x128 and 384x384x64. A
+    * `kernel.simd_ceiling_frac` near 1 thus does not mean the kernel is at
+    * the machine's peak.
     */
   private def simdKernel(iters: Long): Double = {
     import jdk.incubator.vector.FloatVector

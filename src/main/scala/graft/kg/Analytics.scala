@@ -1,8 +1,10 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Graph analytics over the materialized canonical triple table — the
   * queries a KG-construction user runs right after the build: degree
@@ -266,23 +268,129 @@ object Analytics {
   /** Co-mention mining: entity pairs appearing in the SAME document (on
     * either side of any triple), with the number of distinct supporting
     * documents. The per-doc distinct mention set is built first (hash
-    * aggregate), so the self-join fans out only over each doc's small
-    * entity list — never over the raw triple multiplicity.
+    * aggregate), so the pairs fan out only over each doc's small entity
+    * list — never over the raw triple multiplicity. Pairs are the
+    * [[blockedPairs]] of (doc, entity), uncapped: on the driver when
+    * Σ_doc C(entities, 2) <= `maxLocalPairs`, else a distributed self-join.
     */
-  def coMentions(triples: DataFrame, minDocs: Long = 1): DataFrame = {
-    // one scan (explode both sides), distinct, persisted for the
-    // self-join — without the cache the self-join would recompute the
-    // upstream pipeline once per join side
-    val mentions = triples
-      .select(col("docId"), explode(array(col("subj_id"), col("obj_id"))).as("e"))
-      .distinct()
-      .localCheckpoint()
-    mentions.as("a")
-      .join(mentions.as("b"),
-        col("a.docId") === col("b.docId") && col("a.e") < col("b.e"))
-      .groupBy(col("a.e").as("e1"), col("b.e").as("e2"))
-      .agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") >= minDocs)
+  def coMentions(triples: DataFrame, minDocs: Long = 1,
+                 maxLocalPairs: Long = 2000000L): DataFrame = {
+    val mentions = keyed(triples.select(col("docId").as("key"),
+      explode(array(col("subj_id"), col("obj_id"))).as("item")))
+    blockedPairs(mentions, Long.MaxValue, maxLocalPairs).fold(_.pairs(minDocs), pairsOf)
+      .where(col("n") >= minDocs)
+      .select(col("a").as("e1"), col("b").as("e2"), col("n").as("n_docs"))
+  }
+
+  /** The distinct (key, item) rows of `rows`, shuffled by the key only, so
+    * all rows of a key share one partition. Checkpointed lazily: the first
+    * job over the result (the bound in [[blockedPairs]]) also stores it.
+    */
+  private def keyed(rows: DataFrame): DataFrame =
+    rows.repartition(col("key")).distinct().localCheckpoint(eager = false)
+
+  /** The blocked item pairs of a [[keyed]] (key, item) table — the
+    * self-join shared by [[coMentions]], [[neighborJaccard]] and
+    * [[storyClusters]]. Keys with more than `hubCap` items are dropped
+    * (`Long.MaxValue`: no cap), then every item pair a < b in Spark's
+    * string order (UTF-8 bytes) gets n = the number of kept keys the two
+    * share.
+    *
+    * Exactly two implementations, picked before any pair exists by one
+    * narrow job over the table: it counts the rows and the exact pair
+    * count Σ_key C(size, 2) over the kept keys, counting the key sizes
+    * within each partition (a key's rows share one). When both are <=
+    * `maxLocalPairs`, the rows are collected and the pairs are counted on
+    * the driver (Left). The driver then holds the collected rows, a count
+    * map with one entry per distinct pair, and a local relation with one
+    * row per distinct pair over the caller's threshold: up to
+    * `maxLocalPairs` of each. Otherwise nothing is collected and the
+    * (key, item) rows of the kept keys come back (Right) for [[pairsOf]]
+    * and [[sizesOf]]. Both sides give the same rows with the same schema.
+    */
+  private def blockedPairs(rows: DataFrame, hubCap: Long,
+                           maxLocalPairs: Long): Either[DriverPairs, DataFrame] = {
+    val (nRows, bound) = rows.select("key").queryExecution.toRdd.mapPartitions { it =>
+      val size = new java.util.HashMap[UTF8String, Integer]()
+      var n = 0L
+      it.foreach { r =>
+        n += 1
+        if (!r.isNullAt(0)) size.merge(r.getUTF8String(0).clone(), 1, (a, b) => a + b)
+      }
+      var pairs = 0L
+      size.values.forEach(k => if (k <= hubCap) pairs += k.toLong * (k - 1) / 2)
+      Iterator((n, pairs))
+    }.fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+    if (nRows <= maxLocalPairs && bound <= maxLocalPairs)
+      Left(DriverPairs.count(rows, hubCap))
+    else if (hubCap == Long.MaxValue) Right(rows)
+    else Right(rows.join(rows.groupBy("key").agg(count(lit(1)).as("size"))
+        .where(col("size") <= hubCap).select("key"), "key")
+      .select("key", "item"))
+  }
+
+  /** (a, b, n): the self-join on the key of the kept rows. */
+  private def pairsOf(kept: DataFrame): DataFrame = kept.as("x")
+    .join(kept.as("y"),
+      col("x.key") === col("y.key") && col("x.item") < col("y.item"))
+    .groupBy(col("x.item").as("a"), col("y.item").as("b"))
+    .agg(count(lit(1)).as("n"))
+
+  /** (item, size): the number of kept keys of each item. */
+  private def sizesOf(kept: DataFrame): DataFrame =
+    kept.groupBy("item").agg(count(lit(1)).as("size"))
+
+  /** The driver side of [[blockedPairs]]. `items` are the distinct non-null
+    * items of every row (hub keys included) in Spark's string order;
+    * `shared` maps each item pair a < b, packed by rank as
+    * `a * items.length + b`, to its n; `itemSize(r)` is the size of item r,
+    * with the null item in the last slot.
+    */
+  private final class DriverPairs(rows: DataFrame, val items: Array[String],
+      val shared: scala.collection.mutable.LongMap[Int], itemSize: Array[Int]) {
+    def pairOf(k: Long): (String, String) =
+      (items((k / items.length).toInt), items((k % items.length).toInt))
+    /** The pairs with n >= `minN`: only those become rows. Both frames take
+      * the schemas of the distributed plans: analysis only, nothing runs. */
+    def pairs(minN: Long): DataFrame = frame(pairsOf(rows).schema,
+      shared.iterator.collect { case (k, n) if n >= minN =>
+        val (a, b) = pairOf(k); Row(a, b, n.toLong) }.toSeq)
+    lazy val sizes: DataFrame = frame(sizesOf(rows).schema,
+      itemSize.indices.filter(itemSize(_) > 0)
+        .map(r => Row(if (r < items.length) items(r) else null, itemSize(r).toLong)))
+    private def frame(schema: StructType, rs: Seq[Row]) =
+      rows.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+  }
+
+  private object DriverPairs {
+    /** Collects `rows` and counts the pairs of its kept keys. A null key is
+      * never kept (an equi-join drops it); a null item counts toward its
+      * key's size, as in the size aggregate, but never pairs. */
+    def count(rows: DataFrame, hubCap: Long): DriverPairs = {
+      val got = rows.select("key", "item").collect()
+      val sorted = got.iterator.map(_.getString(1)).filter(_ != null)
+        .distinct.map(UTF8String.fromString).toArray
+      java.util.Arrays.sort(sorted, (x: UTF8String, y: UTF8String) => x.compareTo(y))
+      val items = sorted.map(_.toString)
+      val nullRank = items.length
+      val rank = items.iterator.zipWithIndex.toMap
+      val shared = new scala.collection.mutable.LongMap[Int]()
+      val itemSize = new Array[Int](nullRank + 1)
+      // item ranks per kept key, ascending; the null item ranks last
+      for (g <- got.filter(_.getString(0) != null)
+             .groupMap(_.getString(0))(r => Option(r.getString(1)).fold(nullRank)(rank))
+             .valuesIterator if g.length <= hubCap) {
+        val s = g.sorted
+        for (x <- s.indices) {
+          itemSize(s(x)) += 1
+          for (y <- x + 1 until s.length if s(y) < nullRank) {
+            val k = s(x).toLong * nullRank + s(y)
+            shared(k) = shared.getOrElse(k, 0) + 1
+          }
+        }
+      }
+      new DriverPairs(rows, items, shared, itemSize)
+    }
   }
 
   /** Two-hop reachability with path counts: (a)-[p1]->(x)-[p2]->(c),
@@ -487,31 +595,25 @@ object Analytics {
     * wedges carry no discriminative signal anyway (mirrored exactly by
     * the oracle; both sizes and common counts use the capped sets, so
     * jaccard stays internally consistent). Orientation e1 < e2 halves
-    * the output; AQE splits what skew remains below the cap.
+    * the output; AQE splits what skew remains below the cap. The common
+    * counts and capped sizes are the [[blockedPairs]] of (neighbor,
+    * entity): on the driver when they fit `maxLocalPairs`.
     */
   def neighborJaccard(triples: DataFrame, minCommon: Long = 1,
-                      hubCap: Long = 10000): DataFrame = {
-    val ment = triples.select(explode(array(
-        struct(col("subj_id").as("e"), col("obj_id").as("n")),
-        struct(col("obj_id").as("e"), col("subj_id").as("n")))).as("m"))
-      .select(col("m.e"), col("m.n"))
-      .where(col("e") =!= col("n"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val keep = ment.groupBy("n").agg(count(lit(1)).as("nk"))
-      .where(col("nk") <= hubCap)
-      .select("n")
-    val capped = ment.join(keep, "n").select("e", "n")
-      .localCheckpoint() // three consumers (sizes + both join sides)
-    ment.unpersist()
-    val sizes = capped.groupBy("e").agg(count(lit(1)).as("sz"))
-    capped.as("a")
-      .join(capped.as("b"), col("a.n") === col("b.n") && col("a.e") < col("b.e"))
-      .groupBy(col("a.e").as("e1"), col("b.e").as("e2"))
-      .agg(count(lit(1)).as("common"))
-      .where(col("common") >= minCommon)
-      .join(sizes.select(col("e").as("e1"), col("sz").as("sz1")), "e1")
-      .join(sizes.select(col("e").as("e2"), col("sz").as("sz2")), "e2")
+                      hubCap: Long = 10000,
+                      maxLocalPairs: Long = 2000000L): DataFrame = {
+    val ment = keyed(triples.select(explode(array(
+        struct(col("obj_id").as("key"), col("subj_id").as("item")),
+        struct(col("subj_id").as("key"), col("obj_id").as("item")))).as("m"))
+      .select(col("m.key"), col("m.item"))
+      .where(col("key") =!= col("item")))
+    val (pairs, sizes) = blockedPairs(ment, hubCap, maxLocalPairs)
+      .fold(d => (d.pairs(minCommon), d.sizes), kept => (pairsOf(kept), sizesOf(kept)))
+    pairs
+      .where(col("n") >= minCommon)
+      .select(col("a").as("e1"), col("b").as("e2"), col("n").as("common"))
+      .join(sizes.select(col("item").as("e1"), col("size").as("sz1")), "e1")
+      .join(sizes.select(col("item").as("e2"), col("size").as("sz2")), "e2")
       .select(col("e1"), col("e2"), col("common"), col("sz1"), col("sz2"),
         (col("common").cast("double") /
           (col("sz1") + col("sz2") - col("common"))).as("jaccard"))
@@ -903,31 +1005,42 @@ object Analytics {
     * already demands a second, rarer shared entity for the edge).
     * Remaining pair volume is Σ_e C(df_e, 2) with df_e <= hubCap, an
     * entity-blocked equi-join AQE can split further.
+    *
+    * Size-adaptive through [[blockedPairs]] of (entity, doc): when that
+    * volume and the mention rows fit `maxLocalPairs`, the pairs are counted
+    * and the components closed on the driver from one collect of the
+    * mention rows; otherwise the distributed pairs go to
+    * `ConnectedComponents.runAdaptive` with the same driver budget.
     */
   def storyClusters(triples: DataFrame, minShared: Long = 2,
-                    hubCap: Long = 10000L): DataFrame = {
+                    hubCap: Long = 10000L,
+                    maxLocalPairs: Long = 2000000L): DataFrame = {
     require(minShared >= 1, s"storyClusters: minShared must be >= 1")
     require(hubCap >= 1, s"storyClusters: hubCap must be >= 1")
-    val mentions = triples
-      .select(col("docId"), explode(array(col("subj_id"), col("obj_id"))).as("e"))
-      .distinct()
-      .localCheckpoint()
-    val kept = mentions.join(
-      mentions.groupBy("e").agg(count(lit(1)).as("df"))
-        .where(col("df") <= hubCap).select("e"), "e")
-    val pairs = kept.as("a")
-      .join(kept.as("b"),
-        col("a.e") === col("b.e") && col("a.docId") < col("b.docId"))
-      .groupBy(col("a.docId").as("src"), col("b.docId").as("dst"))
-      .agg(count(lit(1)).as("shared"))
-      .where(col("shared") >= minShared)
-      .select("src", "dst")
-    val verts = mentions.select(col("docId").as("id")).distinct()
-    val cc = ConnectedComponents.runAdaptive(pairs, verts)
-    cc.join(cc.groupBy("component").agg(count(lit(1)).as("story_size")),
-        "component")
-      .select(col("id").as("doc_id"), col("component").as("story_id"),
-        col("story_size"))
+    val mentions = keyed(triples.select(
+      explode(array(col("subj_id"), col("obj_id"))).as("key"), col("docId").as("item")))
+    blockedPairs(mentions, hubCap, maxLocalPairs) match {
+      case Left(d) =>
+        val edges = d.shared.iterator.collect { case (k, n) if n >= minShared => d.pairOf(k) }
+        val story = ConnectedComponents.onDriver(edges, d.items)
+        val size = story.groupBy(identity).view.mapValues(_.length.toLong).toMap
+        val nullable = mentions.schema("item").nullable
+        triples.sparkSession.createDataFrame(
+          java.util.Arrays.asList(d.items.indices.map(i =>
+            Row(d.items(i), story(i), size(story(i)))): _*),
+          StructType(Seq(StructField("doc_id", StringType, nullable),
+            StructField("story_id", StringType, nullable),
+            StructField("story_size", LongType, nullable = false))))
+      case Right(kept) =>
+        val pairs = pairsOf(kept).where(col("n") >= minShared)
+          .select(col("a").as("src"), col("b").as("dst"))
+        val verts = mentions.select(col("item").as("id")).distinct()
+        val cc = ConnectedComponents.runAdaptive(pairs, verts, maxLocalPairs)
+        cc.join(cc.groupBy("component").agg(count(lit(1)).as("story_size")),
+            "component")
+          .select(col("id").as("doc_id"), col("component").as("story_id"),
+            col("story_size"))
+    }
   }
 
   /** Entity-card export — the per-entity profile a KG serving layer

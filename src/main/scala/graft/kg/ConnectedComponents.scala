@@ -1,7 +1,9 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components over an edge DataFrame via alternating
   * large-star / small-star (Kiveris et al., "Connected Components in
@@ -17,31 +19,55 @@ object ConnectedComponents {
     * (like the broadcast alias dictionary's same-as edges — broadcastable by
     * assumption) is solved with an in-memory union-find in O(E α(E));
     * anything bigger takes the distributed large-star/small-star path.
+    * The edge set is evaluated once: at most `driverMaxEdges + 1` edges are
+    * collected and their count picks the side. Both sides return the same
+    * rows and schema.
     */
   def runAdaptive(edges: DataFrame, vertices: DataFrame,
                   driverMaxEdges: Long = 2000000L): DataFrame = {
-    val spark = edges.sparkSession
-    val n = edges.limit((driverMaxEdges + 1).toInt).count()
-    if (n <= driverMaxEdges) {
-      import spark.implicits._
-      val es = edges.select("src", "dst").as[(String, String)].collect()
-      val vs = vertices.select("id").as[String].collect()
-      val parent = new java.util.HashMap[String, String]()
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x
-        while (parent.getOrDefault(c, c) != c) { val nx = parent.get(c); parent.put(c, r); c = nx }
-        r
-      }
-      def union(a: String, b: String): Unit = {
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      es.foreach { case (a, b) => union(a, b) }
-      vs.map(v => (v, find(v))).toSeq.toDF("id", "component")
-    } else run(edges, vertices)
+    val limit = math.min(driverMaxEdges, Int.MaxValue - 8L).toInt + 1
+    val es = edges.select("src", "dst").limit(limit).collect()
+    if (es.length >= limit) return run(edges, vertices)
+    val vs = vertices.select("id").collect().map(_.getString(0))
+    val comp = onDriver(es.iterator.map(r => (r.getString(0), r.getString(1))), vs)
+    // nullability as in run(): the component coalesces to the vertex id
+    val nullable = vertices.schema("id").nullable
+    edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(vs.indices.map(i => Row(vs(i), comp(i))): _*),
+      StructType(Seq(StructField("id", StringType, nullable),
+        StructField("component", StringType, nullable))))
   }
+
+  /** The driver-side twin of [[run]]: for each vertex, the smallest id in
+    * its component, by union-find in O(E α(E)) that keeps the smaller root
+    * in Spark's string order. Like `greatest`/`least` in [[run]], an edge
+    * with a null endpoint joins nothing.
+    */
+  private[kg] def onDriver(edges: Iterator[(String, String)],
+                           vertices: Array[String]): Array[String] = {
+    val parent = new java.util.HashMap[String, String]()
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+      var c = x
+      while (parent.getOrDefault(c, c) != c) { val nx = parent.get(c); parent.put(c, r); c = nx }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (a != null && b != null) {
+        val ra = find(a); val rb = find(b)
+        if (ra != rb) { if (sparkLess(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+      }
+    }
+    vertices.map(find)
+  }
+
+  /** `a < b` in Spark's string order: UTF-8 bytes, i.e. code points. Java's
+    * `String.compareTo` compares UTF-16 units and puts a supplementary
+    * character (a surrogate pair) below U+E000..U+FFFF.
+    */
+  private def sparkLess(a: String, b: String): Boolean =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
   /** @param edges    (src, dst) string ids, undirected
     * @param vertices (id) — all ids, including isolated ones

@@ -18,9 +18,11 @@ object Docs {
   /** Deterministic Russian corpus as an interleaved table, generated
     * DISTRIBUTEDLY from `spark.range` — content is a pure function of the
     * row id, so this scales to any count with no driver materialization
-    * and no skew (ids are uniformly partitioned).
+    * and no skew (ids are uniformly partitioned). `slices` fixes the
+    * partition count for granularity probes and layout tests.
     */
-  def russianDocs(spark: SparkSession, nDocs: Long): Dataset[InterleavedDoc] = {
+  def russianDocs(spark: SparkSession, nDocs: Long,
+                  slices: Option[Int] = None): Dataset[InterleavedDoc] = {
     import spark.implicits._
     // splits sized by DATA (like files.maxPartitionBytes on a real scan),
     // NOT by cluster size: 640 docs/slice ≈ one Pipeline sort-buffer fill
@@ -40,17 +42,17 @@ object Docs {
     // (local sandbox cap ≈ 8 waves on 32 cores; 256 itself at p = 4, 8,
     // 16, 32; a real 100 TB input brings millions of data-sized splits
     // and no cap).
-    // graft.gen.slices overrides the count for granularity probes — unlike
-    // a repartition() it keeps the generate->parse chain one fused
-    // object-level stage (no encoder round-trip, no exchange)
-    val slices = sys.props.get("graft.gen.slices").map(_.toInt).getOrElse {
+    // a given `slices` overrides the count — unlike a repartition() it
+    // keeps the generate->parse chain one fused object-level stage (no
+    // encoder round-trip, no exchange)
+    val n = slices.getOrElse {
       val p = spark.sparkContext.defaultParallelism
       val byData = math.min(nDocs / 640, 256L)
       val waves = math.max(1L, math.round(byData.toDouble / p))
       val cap = math.max(p, (256 / p) * p).toLong
       math.min(math.max(p.toLong, waves * p), cap).toInt
     }
-    spark.range(0, nDocs, 1, slices).as[Long].map { id =>
+    spark.range(0, nDocs, 1, n).as[Long].map { id =>
       // index straight off the array-backed spans — no intermediate
       // mapped collection before the SpanT array
       val sp = RuCorpus.docSpans(id)

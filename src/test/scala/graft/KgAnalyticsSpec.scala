@@ -847,4 +847,135 @@ class KgAnalyticsSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(g2.view.mapValues(_._1).toMap == bd)
   }
+
+  // ---- driver-local == distributed: generated-input properties ----
+
+  import org.scalacheck.{Gen, Prop, Test}
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+
+  private def check(name: String, cases: Int, p: Prop): Unit = {
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(cases), p)
+    assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
+  }
+
+  // id prefixes on which Java's String order (UTF-16 units) and Spark's
+  // (UTF-8 bytes) disagree: a supplementary character sorts below
+  // U+E000..U+FFFF in the first and above them in the second
+  private val marks = Seq("a", "z", "\u00e9", "\uE000", "\uFFFD", "\uD83D\uDE00", "\uD800\uDC00")
+
+  private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Same schema and the same rows as a multiset. */
+  private def same(a: DataFrame, b: DataFrame): Prop = {
+    def rows(df: DataFrame) = df.collect().toSeq
+      .map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted
+    val (ra, rb) = (rows(a), rows(b))
+    Prop((a.schema == b.schema) && ra == rb) :|
+      s"schemas ${a.schema.simpleString} / ${b.schema.simpleString}\nrows $ra\n / $rb"
+  }
+
+  /** Triple tables whose docs mention a few entities: two hub entities in
+    * most docs, some docs that mention only hubs, optional null entities
+    * and a null doc, ids with supplementary characters, and either
+    * nullability of the id columns. */
+  private val genTriples: Gen[DataFrame] = for {
+    nDocs <- Gen.choose(1, 10)
+    docMarks <- Gen.listOfN(nDocs, Gen.oneOf(marks))
+    entMarks <- Gen.listOfN(6, Gen.oneOf(marks))
+    hubMarks <- Gen.listOfN(2, Gen.oneOf(marks))
+    withNulls <- Gen.oneOf(false, false, true)
+    nullableIds <- Gen.oneOf(false, true)
+    ents = entMarks.zipWithIndex.map { case (m, i) => s"${m}e$i" }
+    hubs = hubMarks.zipWithIndex.map { case (m, i) => s"${m}H$i" }
+    ent = Gen.frequency(Seq(6 -> Gen.oneOf(ents), 3 -> Gen.oneOf(hubs)) ++
+      (if (withNulls) Seq(1 -> Gen.const(null: String)) else Nil): _*)
+    perDoc <- Gen.listOfN(nDocs, Gen.frequency(
+      1 -> Gen.const(List((hubs(0), hubs(1)))),
+      5 -> Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.zip(ent, ent)))))
+  } yield {
+    val rows = docMarks.zip(perDoc).zipWithIndex.flatMap { case ((m, so), d) =>
+      val doc = if (withNulls && d == 0) null else s"${m}d$d"
+      so.zipWithIndex.map { case ((a, b), i) =>
+        Row(doc, i, 0, a, "PER", "p", b, "ORG") }
+    }
+    def str(n: String, nullable: Boolean) = StructField(n, StringType, nullable)
+    val entNullable = withNulls || nullableIds
+    frame(StructType(Seq(str("docId", entNullable),
+      StructField("spanOrder", IntegerType, false), StructField("sentIdx", IntegerType, false),
+      str("subj_id", entNullable), str("subj_type", true), str("pred", true),
+      str("obj_id", entNullable), str("obj_type", true))), rows)
+  }
+
+  test("storyClusters: driver-local == distributed (hub caps, thresholds 1-3, UTF-8 order)") {
+    check("storyClusters", 25, Prop.forAllNoShrink(genTriples, Gen.choose(1L, 3L),
+        Gen.choose(1L, 4L)) { (t, minShared, hubCap) =>
+      same(kg.Analytics.storyClusters(t, minShared, hubCap),
+        kg.Analytics.storyClusters(t, minShared, hubCap, maxLocalPairs = 0))
+    })
+  }
+
+  test("coMentions: driver-local == distributed (thresholds 1-3, UTF-8 order)") {
+    check("coMentions", 25, Prop.forAllNoShrink(genTriples, Gen.choose(1L, 3L)) {
+      (t, minDocs) =>
+        same(kg.Analytics.coMentions(t, minDocs),
+          kg.Analytics.coMentions(t, minDocs, maxLocalPairs = 0))
+    })
+  }
+
+  test("neighborJaccard: driver-local == distributed (hub caps, thresholds 1-3, UTF-8 order)") {
+    check("neighborJaccard", 25, Prop.forAllNoShrink(genTriples, Gen.choose(1L, 3L),
+        Gen.choose(1L, 4L)) { (t, minCommon, hubCap) =>
+      same(kg.Analytics.neighborJaccard(t, minCommon, hubCap),
+        kg.Analytics.neighborJaccard(t, minCommon, hubCap, maxLocalPairs = 0))
+    })
+  }
+
+  test("blocked pairs: the driver side runs exactly when the rows and pairs fit maxLocalPairs") {
+    // 4 shuffle partitions, not coalesced: the bound must count each key
+    // whole although the rows spread over partitions
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    import s.implicits._
+    // star X -> A..F as (neighbor, entity): key X has 6 entities, C(6, 2) =
+    // 15 pairs; keys A..F have X only; 12 rows
+    val star = Seq("A", "B", "C", "D", "E", "F")
+      .map(e => ("d1", 0, 0, "X", "PER", "p", e, "ORG"))
+      .toDF("docId", "spanOrder", "sentIdx", "subj_id", "subj_type", "pred", "obj_id", "obj_type")
+    def onDriver(hubCap: Long, maxLocalPairs: Long) = kg.Analytics
+      .neighborJaccard(star, hubCap = hubCap, maxLocalPairs = maxLocalPairs)
+      .queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(onDriver(10, 15) && !onDriver(10, 14)) // the 15 pairs bind
+    assert(onDriver(5, 12) && !onDriver(5, 11))   // X is over the cap: the 12 rows bind
+  }
+
+  test("ConnectedComponents: runAdaptive == run (UTF-8 order, null endpoints, isolated ids)") {
+    def edges(es: Seq[(String, String)]) = frame(StructType(Seq(
+      StructField("src", StringType, true), StructField("dst", StringType, true))),
+      es.map { case (a, b) => Row(a, b) })
+    def verts(ids: Seq[String], nullable: Boolean) =
+      frame(StructType(Seq(StructField("id", StringType, nullable))), ids.map(Row(_)))
+    // U+FFFD is below U+1F600 in UTF-8 but above its surrogates in UTF-16
+    val hand = kg.ConnectedComponents.runAdaptive(
+      edges(Seq(("\uFFFD", "\uD83D\uDE00"))), verts(Seq("\uFFFD", "\uD83D\uDE00"), false))
+    assert(hand.collect().map(_.getString(1)).toSet == Set("\uFFFD"))
+
+    val ids = for (m <- marks; i <- 0 until 3) yield s"$m$i"
+    val end = Gen.frequency(12 -> Gen.oneOf(ids), 1 -> Gen.const(null: String))
+    val gen = for {
+      es <- Gen.choose(0, 14).flatMap(Gen.listOfN(_, Gen.zip(end, end)))
+      isolated <- Gen.someOf(ids)
+      dropped <- Gen.someOf(ids)
+      nullable <- Gen.oneOf(false, true)
+    } yield {
+      val vs = (es.flatMap { case (a, b) => Seq(a, b) }.filter(_ != null) ++ isolated)
+        .distinct.filterNot(dropped.toSet)
+      (edges(es), verts(vs, nullable))
+    }
+    check("runAdaptive", 30, Prop.forAllNoShrink(gen) { case (e, v) =>
+      same(kg.ConnectedComponents.runAdaptive(e, v), kg.ConnectedComponents.run(e, v))
+    })
+  }
 }

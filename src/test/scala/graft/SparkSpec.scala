@@ -77,17 +77,14 @@ class PipelineSpec extends AnyFunSuite {
     // the wave-aligned slice count changes only HOW docs are split across
     // tasks; per-doc generation is id-keyed, so any layout must produce
     // the same triples (the contract the bench-leg slicing change relies on)
-    def run(): Set[(String, Int, String, String, String)] =
+    def run(slices: Option[Int]): Set[(String, Int, String, String, String)] =
       graft.kg.Kg.triples(Pipeline.parse(
-          Docs.sentences(Docs.russianDocs(spark, 50L)), SparkEntry.packBc(spark)))
+          Docs.sentences(Docs.russianDocs(spark, 50L, slices)), SparkEntry.packBc(spark)))
         .collect().map(t => (t.docId, t.spanOrder, t.subj, t.pred, t.obj)).toSet
-    val base = run()
+    val base = run(None)
     assert(base.nonEmpty)
-    for (n <- Seq("1", "3", "17")) {
-      sys.props("graft.gen.slices") = n
-      try assert(run() == base, s"slices=$n changed the output")
-      finally sys.props.remove("graft.gen.slices")
-    }
+    for (n <- Seq(1, 3, 17))
+      assert(run(Some(n)) == base, s"slices=$n changed the output")
   }
 
   test("triples equal golden planted triples exactly") {
