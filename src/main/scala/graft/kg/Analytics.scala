@@ -13,10 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * provenance (docId) schema that `Kg.linkCanonicalize` emits.
   *
   * Scale notes (10^12-doc corpus => 10^10..10^11 triples):
-  *  - every op below reduces to equi-joins / hash aggregates on entity
-  *    ids — AQE handles the hot-entity skew (high-frequency PER/ORG
-  *    canonical ids) by splitting oversized partitions; nothing here
-  *    needs a driver-side pass or a cross join.
+  *  - the distributed side of every op below reduces to equi-joins /
+  *    hash aggregates on entity ids — AQE handles the hot-entity skew
+  *    (high-frequency PER/ORG canonical ids) by splitting oversized
+  *    partitions. The one cross join is HITS' broadcast single-row norm.
+  *  - some ops also have a driver-side twin, picked by input size: the
+  *    graph loops (the three PageRanks, HITS, label propagation, SCC)
+  *    through [[loadEdges]], the pair counts (co-mentions, Jaccard,
+  *    stories) through [[blockedPairs]]. A twin returns the same rows
+  *    and schema as the distributed side, ordering strings as Spark does
+  *    ([[sparkOrder]]).
   *  - PageRank uses FIXED-POINT integer arithmetic (micro-units, floor
   *    division) so results are bit-reproducible across partitionings,
   *    retries, and engines — float PageRank depends on summation order,
@@ -47,222 +53,173 @@ object Analytics {
         count(lit(1)).as("total_mentions"))
 
   /** Entity salience: damped PageRank over the distinct directed
-    * subj->obj edge set (self-loops dropped), `iters` fixed iterations.
-    *
-    * Exact fixed-point contract (what the oracle reproduces):
-    *   rank_0 = 1_000_000 for every node (micro-units);
-    *   contrib(e) = rank(src) div out_degree(src)    [integer floor]
-    *   rank_{i+1} = 150_000 + (850 * sum(contribs)) div 1000.
-    * Dangling mass is not redistributed (documented simplification — the
-    * standard contraction still holds, ranks just sum below N).
-    *
-    * Physical shape per iteration: one shuffle-hash join ranks><edges on
-    * src + one hash aggregate on dst. The edge set (with out-degree
-    * pre-joined) is computed ONCE, persisted, and reused by all
-    * iterations; rank lineage is truncated every iteration so the plan
-    * stays O(1) deep instead of O(iters).
+    * subj->obj edge set (self-loops dropped), `iters` fixed iterations:
+    * the [[rankKernel]] with every edge weighing 1 and every node a seed.
     */
   def pageRank(triples: DataFrame, iters: Int = 10,
                maxLocalEdges: Long = 2000000L): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
-    // edges persisted ONCE: the source (often a live extraction pipeline)
-    // is scanned a single time; withDeg/nodes re-derive from the cache.
-    val edges = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Size-adaptive, same policy as ConnectedComponents: a distinct edge
-    // set that fits the driver iterates locally — at that size the
-    // distributed supersteps are pure job-scheduling overhead — while
-    // bigger graphs take the Pregel-style loop below. Both paths compute
-    // the SAME integer fixed point, so outputs are bit-identical
-    // (asserted in KgAnalyticsSpec).
-    if (edges.count() <= maxLocalEdges) {
-      val spark = triples.sparkSession
-      val local = edges.collect().map(r => (r.getString(0), r.getString(1)))
-      edges.unpersist(blocking = false)
-      val odeg = local.groupBy(_._1).map { case (s, es) => s -> es.length.toLong }
-      val nodeIds = (local.map(_._1) ++ local.map(_._2)).distinct
-      var rank = nodeIds.map(_ -> 1000000L).toMap
-      for (_ <- 1 to iters) {
-        val sums = new scala.collection.mutable.HashMap[String, Long]()
-        local.foreach { case (s, d) =>
-          sums.update(d, sums.getOrElse(d, 0L) + rank(s) / odeg(s))
-        }
-        rank = nodeIds.map(n =>
-          n -> (150000L + 850L * sums.getOrElse(n, 0L) / 1000L)).toMap
-      }
-      import spark.implicits._
-      return spark.createDataset(nodeIds.toSeq.map(n => (n, rank(n))))
-        .toDF("entity_id", "rank")
-    }
-    // both persisted: every superstep probes them, and without the cache
-    // each of the `iters` jobs would rebuild the degree join / node set
-    val withDeg = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges
-      .select(explode(array(col("src"), col("dst"))).as("entity_id"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val contribs = withDeg
-        .join(ranks.withColumnRenamed("entity_id", "src"), "src")
-        .select(col("dst").as("entity_id"),
-          expr("rank div odeg").as("contrib"))
-        .groupBy("entity_id").agg(sum(col("contrib")).as("c"))
-      // eager: each iteration materializes (Pregel-style superstep), so
-      // the final plan is O(1) deep and edges can be unpersisted on exit
-      ranks = nodes.join(contribs, Seq("entity_id"), "left")
-        .select(col("entity_id"),
-          expr("150000L + (850L * coalesce(c, 0L)) div 1000L").as("rank"))
-        .localCheckpoint()
-    }
-    edges.unpersist(blocking = false)
-    withDeg.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    ranks
+    rankKernel(triples, weighted = false, None, iters, maxLocalEdges)
   }
 
-  /** Mention-weighted PageRank: rank flows proportionally to integer
-    * edge weights — here the triple-mention count per (src, dst), so an
-    * entity pair asserted by 40 documents carries 40× the rank flow of a
-    * single-mention pair (plain [[pageRank]] treats both as one edge).
-    *
-    * Exact fixed-point contract (oracle-mirrored):
-    *   w(u,v) = COUNT of triples u→v (parallel predicates and repeat
-    *            docs each count; self-loops dropped); W(u) = Σ_v w(u,v);
-    *   contrib(u→v) = (rank(u) * w(u,v)) div W(u)   [integer floor]
-    *   rank' = 150000 + (850 * Σ contribs) div 1000, rank_0 = 10^6.
-    * Overflow bound: rank ≤ 10^6·N and rank·w must fit a Long — fine
-    * through w·N ≤ ~9·10^12 (10^10 triples onto 10^8 entities is w·N ≈
-    * 10^10); beyond that pre-scale the weights (documented trade).
-    *
-    * Same physical shape and size-adaptive driver-local fast path as
-    * [[pageRank]] (bit-identical, spec-asserted): the weighted edge set
-    * with W pre-joined is computed once and persisted; each superstep is
-    * one equi-join + one hash aggregate, lineage truncated per iter.
+  /** Mention-weighted PageRank: rank flows proportionally to the
+    * triple-mention count per (src, dst), so an entity pair asserted by 40
+    * documents carries 40× the rank flow of a single-mention pair (plain
+    * [[pageRank]] treats both as one edge). The [[rankKernel]] with those
+    * counts as weights and every node a seed.
     */
   def weightedPageRank(triples: DataFrame, iters: Int = 10,
                        maxLocalEdges: Long = 2000000L): DataFrame = {
     require(iters >= 1, s"weightedPageRank: iters must be >= 1, got $iters")
-    val edges = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (edges.count() <= maxLocalEdges) {
-      val spark = triples.sparkSession
-      val local = edges.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      edges.unpersist(blocking = false)
-      val wsum = local.groupBy(_._1)
-        .map { case (s, es) => s -> es.map(_._3).sum }
-      val nodeIds = (local.map(_._1) ++ local.map(_._2)).distinct
-      var rank = nodeIds.map(_ -> 1000000L).toMap
-      for (_ <- 1 to iters) {
-        val sums = new scala.collection.mutable.HashMap[String, Long]()
-        local.foreach { case (s, d, w) =>
-          sums.update(d, sums.getOrElse(d, 0L) + rank(s) * w / wsum(s))
-        }
-        rank = nodeIds.map(n =>
-          n -> (150000L + 850L * sums.getOrElse(n, 0L) / 1000L)).toMap
-      }
-      import spark.implicits._
-      return spark.createDataset(nodeIds.toSeq.map(n => (n, rank(n))))
-        .toDF("entity_id", "rank")
-    }
-    val withW = edges
-      .join(edges.groupBy("src").agg(sum("w").as("wsum")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges
-      .select(explode(array(col("src"), col("dst"))).as("entity_id"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val contribs = withW
-        .join(ranks.withColumnRenamed("entity_id", "src"), "src")
-        .select(col("dst").as("entity_id"),
-          expr("(rank * w) div wsum").as("contrib"))
-        .groupBy("entity_id").agg(sum(col("contrib")).as("c"))
-      ranks = nodes.join(contribs, Seq("entity_id"), "left")
-        .select(col("entity_id"),
-          expr("150000L + (850L * coalesce(c, 0L)) div 1000L").as("rank"))
-        .localCheckpoint()
-    }
-    edges.unpersist(blocking = false)
-    withW.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    ranks
+    rankKernel(triples, weighted = true, None, iters, maxLocalEdges)
   }
 
   /** Personalized PageRank: teleport mass restarts ONLY at `seeds`
     * (entity-centric relevance — "salience as seen from these PER
-    * entities"), same fixed-point integer contract as [[pageRank]]:
-    * rank_i(v) = (150000 if seed else 0) + 850·Σcontrib div 1000,
-    * rank_0 = 10^6 on seeds, 0 elsewhere. Same superstep shape, same
-    * size-adaptive driver-local fast path (bit-identical, spec-asserted).
+    * entities"). The [[rankKernel]] with every edge weighing 1.
     */
   def personalizedPageRank(triples: DataFrame, seeds: DataFrame,
                            iters: Int = 10,
                            maxLocalEdges: Long = 2000000L): DataFrame = {
     require(iters >= 1, s"personalizedPageRank: iters must be >= 1, got $iters")
-    val edges = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedSet = seeds.select(col("entity_id")).distinct()
-    if (edges.count() <= maxLocalEdges) {
-      val spark = triples.sparkSession
-      val local = edges.collect().map(r => (r.getString(0), r.getString(1)))
-      edges.unpersist(blocking = false)
-      val sd = seedSet.collect().map(_.getString(0)).toSet
-      val odeg = local.groupBy(_._1).map { case (s, es) => s -> es.length.toLong }
-      val nodeIds = (local.map(_._1) ++ local.map(_._2)).distinct
-      var rank = nodeIds.map(n => n -> (if (sd(n)) 1000000L else 0L)).toMap
-      for (_ <- 1 to iters) {
-        val sums = new scala.collection.mutable.HashMap[String, Long]()
-        local.foreach { case (s, d) =>
-          sums.update(d, sums.getOrElse(d, 0L) + rank(s) / odeg(s))
-        }
-        rank = nodeIds.map(n =>
-          n -> ((if (sd(n)) 150000L else 0L) +
-            850L * sums.getOrElse(n, 0L) / 1000L)).toMap
-      }
-      import spark.implicits._
-      return spark.createDataset(nodeIds.toSeq.map(n => (n, rank(n))))
-        .toDF("entity_id", "rank")
+    rankKernel(triples, weighted = false, Some(seeds), iters, maxLocalEdges)
+  }
+
+  /** The fixed-point PageRank of [[pageRank]], [[weightedPageRank]] and
+    * [[personalizedPageRank]]. Exact integer contract (what the oracle
+    * reproduces):
+    *   w(u,v) = 1 on each [[edgeSet]] edge or, `weighted`, the number of
+    *            triples u→v (parallel predicates and repeat docs each
+    *            count; self-loops dropped); W(u) = Σ_v w(u,v);
+    *   t(v)   = 1 if v is a seed, else 0 (no `seeds`: every node is one);
+    *   rank_0(v) = 10^6 · t(v)   (micro-units);
+    *   contrib(u→v) = (rank(u) · w(u,v)) div W(u)   [integer floor];
+    *   rank_{i+1}(v) = 150000 · t(v) + (850 · Σ contribs into v) div 1000.
+    * With w = 1, contrib = rank(u) div out_degree(u). Dangling mass is not
+    * redistributed (documented simplification — the standard contraction
+    * still holds, ranks just sum below N). Overflow bound: rank ≤ 10^6·N
+    * and rank·w must fit a Long — fine through w·N ≤ ~9·10^12; beyond
+    * that pre-scale the weights (documented trade).
+    *
+    * Exactly two implementations, picked by [[loadEdges]]: an edge set of
+    * at most `maxLocalEdges` iterates on the driver, where distributed
+    * supersteps would be pure job-scheduling overhead; a bigger one runs
+    * one shuffle-hash join ranks><edges on src plus one hash aggregate on
+    * dst per iteration, with W pre-joined once and the ranks checkpointed
+    * every iteration, so the plan stays O(1) deep. Both return the same
+    * rows with the same schema (spec-asserted).
+    */
+  private def rankKernel(triples: DataFrame, weighted: Boolean, seeds: Option[DataFrame],
+                         iters: Int, maxLocalEdges: Long): DataFrame = {
+    val edges =
+      if (weighted) edgeSet(triples, weighted = true) else edgeSet(triples).withColumn("w", lit(1L))
+    val seedSet = seeds.map(_.select(col("entity_id")).distinct())
+    def withW(e: DataFrame) = e.join(e.groupBy("src").agg(sum("w").as("wsum")), "src")
+    // the nodes with their teleport factor t
+    def teleport(e: DataFrame) = {
+      val ids = nodesOf(e)
+      seedSet.fold(ids.withColumn("t", lit(1L)))(sd =>
+        ids.join(sd.withColumn("t", lit(1L)), Seq("entity_id"), "left").na.fill(0L, Seq("t")))
     }
-    val withDeg = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges
-      .select(explode(array(col("src"), col("dst"))).as("entity_id"))
-      .distinct()
-      .join(seedSet.withColumn("sd", lit(1L)), Seq("entity_id"), "left")
-      .na.fill(0L, Seq("sd"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("entity_id"),
-      (col("sd") * 1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contribs = withDeg
+    def start(nodes: DataFrame) =
+      nodes.select(col("entity_id"), (col("t") * 1000000L).as("rank"))
+    def step(withW: DataFrame, nodes: DataFrame, ranks: DataFrame) = {
+      val contribs = withW
         .join(ranks.withColumnRenamed("entity_id", "src"), "src")
-        .select(col("dst").as("entity_id"),
-          expr("rank div odeg").as("contrib"))
+        .select(col("dst").as("entity_id"), expr("(rank * w) div wsum").as("contrib"))
         .groupBy("entity_id").agg(sum(col("contrib")).as("c"))
-      ranks = nodes.join(contribs, Seq("entity_id"), "left")
+      nodes.join(contribs, Seq("entity_id"), "left")
         .select(col("entity_id"),
-          expr("sd * 150000L + (850L * coalesce(c, 0L)) div 1000L").as("rank"))
-        .localCheckpoint()
+          expr("t * 150000L + (850L * coalesce(c, 0L)) div 1000L").as("rank"))
     }
-    edges.unpersist(blocking = false)
-    withDeg.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    ranks
+    loadEdges(edges, maxLocalEdges) match {
+      case Left(rows) =>
+        val g = new LocalGraph(rows)
+        val w = rows.map(_.getLong(2))
+        val wsum = new Array[Long](g.ids.length)
+        for (e <- rows.indices) wsum(g.src(e)) += w(e)
+        val sd = seedSet.map(_.collect().map(_.getString(0)).toSet)
+        val t = g.ids.map(n => if (sd.forall(_(n))) 1L else 0L)
+        var rank = t.map(_ * 1000000L)
+        for (_ <- 1 to iters) {
+          val c = new Array[Long](g.ids.length)
+          for (e <- rows.indices) c(g.dst(e)) += rank(g.src(e)) * w(e) / wsum(g.src(e))
+          rank = Array.tabulate(g.ids.length)(v => 150000L * t(v) + 850L * c(v) / 1000L)
+        }
+        val nodes = teleport(edges)
+        localFrame(triples, step(withW(edges), nodes, start(nodes)).schema,
+          g.ids.indices.map(v => Row(g.ids(v), rank(v))))
+      case Right(cached) =>
+        // both persisted: every superstep probes them, and without the
+        // cache each of the `iters` jobs would rebuild the W join / node set
+        val ww = withW(cached).persist(StorageLevel.MEMORY_AND_DISK)
+        val nodes = teleport(cached).persist(StorageLevel.MEMORY_AND_DISK)
+        var ranks = start(nodes)
+        for (_ <- 1 to iters) ranks = step(ww, nodes, ranks).localCheckpoint()
+        Seq(cached, ww, nodes).foreach(_.unpersist(blocking = false))
+        ranks
+    }
+  }
+
+  /** The distinct `subj_id -> obj_id` pairs of `triples` as (src, dst),
+    * self-loops and null endpoints dropped; `undirected` adds each pair's
+    * reverse first. `weighted` adds w = the number of triples of each pair.
+    * Lazy: each caller persists or checkpoints it as its loop needs.
+    */
+  private def edgeSet(triples: DataFrame, undirected: Boolean = false,
+                      weighted: Boolean = false): DataFrame = {
+    val e = (if (undirected) triples.select(explode(array(
+        struct(col("subj_id").as("src"), col("obj_id").as("dst")),
+        struct(col("obj_id").as("src"), col("subj_id").as("dst")))).as("m"))
+      .select(col("m.src"), col("m.dst"))
+    else triples.select(col("subj_id").as("src"), col("obj_id").as("dst")))
+      .where(col("src") =!= col("dst"))
+    if (weighted) e.groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    else e.distinct()
+  }
+
+  /** The distinct endpoints of a (src, dst) edge set, as column `name`. */
+  private def nodesOf(edges: DataFrame, name: String = "entity_id"): DataFrame =
+    edges.select(explode(array(col("src"), col("dst"))).as(name)).distinct()
+
+  /** Picks the side of a size-adaptive graph loop from ONE evaluation of
+    * `edges`: it is persisted and at most `maxLocalEdges + 1` rows are
+    * collected. Left(the rows) when that is all of them (the cache is
+    * dropped), else Right(the persisted frame) for the distributed loop,
+    * which unpersists it when done.
+    */
+  private def loadEdges(edges: DataFrame, maxLocalEdges: Long): Either[Array[Row], DataFrame] = {
+    val cached = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val limit = math.min(maxLocalEdges, Int.MaxValue - 8L).toInt + 1
+    val rows = cached.limit(limit).collect()
+    if (rows.length >= limit) Right(cached)
+    else { cached.unpersist(blocking = false); Left(rows) }
+  }
+
+  /** The driver side's view of collected (src, dst, ...) edge rows: the
+    * distinct node ids, and each edge's endpoints as indices into them. */
+  private final class LocalGraph(rows: Array[Row]) {
+    val ids: Array[String] =
+      (rows.iterator.map(_.getString(0)) ++ rows.iterator.map(_.getString(1))).distinct.toArray
+    private val index = ids.iterator.zipWithIndex.toMap
+    val src: Array[Int] = rows.map(r => index(r.getString(0)))
+    val dst: Array[Int] = rows.map(r => index(r.getString(1)))
+  }
+
+  /** A driver-side result as a local relation with `schema` — the schema
+    * of the distributed plan, taken by analysis alone. */
+  private def localFrame(like: DataFrame, schema: StructType, rows: Seq[Row]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Spark's string order: UTF-8 bytes, i.e. code points. Java's
+    * `String.compareTo` compares UTF-16 units and puts a supplementary
+    * character (a surrogate pair) below U+E000..U+FFFF. Every driver-side
+    * twin orders ids by this one, so that it agrees with Spark's `min`,
+    * `<` and sort on the distributed side.
+    */
+  private[kg] val sparkOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
   }
 
   /** Co-mention mining: entity pairs appearing in the SAME document (on
@@ -352,14 +309,12 @@ object Analytics {
       (items((k / items.length).toInt), items((k % items.length).toInt))
     /** The pairs with n >= `minN`: only those become rows. Both frames take
       * the schemas of the distributed plans: analysis only, nothing runs. */
-    def pairs(minN: Long): DataFrame = frame(pairsOf(rows).schema,
+    def pairs(minN: Long): DataFrame = localFrame(rows, pairsOf(rows).schema,
       shared.iterator.collect { case (k, n) if n >= minN =>
         val (a, b) = pairOf(k); Row(a, b, n.toLong) }.toSeq)
-    lazy val sizes: DataFrame = frame(sizesOf(rows).schema,
+    lazy val sizes: DataFrame = localFrame(rows, sizesOf(rows).schema,
       itemSize.indices.filter(itemSize(_) > 0)
         .map(r => Row(if (r < items.length) items(r) else null, itemSize(r).toLong)))
-    private def frame(schema: StructType, rs: Seq[Row]) =
-      rows.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
   }
 
   private object DriverPairs {
@@ -368,10 +323,8 @@ object Analytics {
       * key's size, as in the size aggregate, but never pairs. */
     def count(rows: DataFrame, hubCap: Long): DriverPairs = {
       val got = rows.select("key", "item").collect()
-      val sorted = got.iterator.map(_.getString(1)).filter(_ != null)
-        .distinct.map(UTF8String.fromString).toArray
-      java.util.Arrays.sort(sorted, (x: UTF8String, y: UTF8String) => x.compareTo(y))
-      val items = sorted.map(_.toString)
+      val items = got.iterator.map(_.getString(1)).filter(_ != null)
+        .distinct.toArray.sorted(sparkOrder)
       val nullRank = items.length
       val rank = items.iterator.zipWithIndex.toMap
       val shared = new scala.collection.mutable.LongMap[Int]()
@@ -436,64 +389,57 @@ object Analytics {
     * Deterministic contract (what the oracle reproduces): every node
     * starts labeled with its own id; each round every node adopts the
     * most frequent label among its NEIGHBORS, ties broken by smallest
-    * label. Synchronous updates + total tie order make the result a pure
-    * function of the edge set — no randomized visit order, so two
-    * engines (or two cluster sizes) agree bit-for-bit. Fixed `iters`
+    * label in Spark's string order. Synchronous updates + total tie order
+    * make the result a pure function of the edge set — no randomized
+    * visit order, so two engines (or two cluster sizes) agree bit-for-bit. Fixed `iters`
     * rather than convergence detection: sync LPA can 2-cycle on
     * bipartite-ish regions, so a fixpoint test may never fire.
     *
     * Physical shape per round: one equi-join labels><edges + two hash
     * aggregates (vote count, then arg-max with min-label tie-break) —
-    * all AQE-splittable on hot entities. Same size-adaptive driver-local
-    * fast path as pageRank (bit-identical, asserted in spec).
+    * all AQE-splittable on hot entities. An edge set within
+    * `maxLocalEdges` iterates on the driver instead ([[loadEdges]]); both
+    * sides return the same rows and schema (spec-asserted).
     */
   def labelProp(triples: DataFrame, iters: Int = 5,
                 maxLocalEdges: Long = 2000000L): DataFrame = {
     require(iters >= 1, s"labelProp: iters must be >= 1, got $iters")
-    val edges = triples
-      .select(explode(array(
-        struct(col("subj_id").as("src"), col("obj_id").as("dst")),
-        struct(col("obj_id").as("src"), col("subj_id").as("dst")))).as("m"))
-      .select(col("m.src"), col("m.dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (edges.count() <= maxLocalEdges) {
-      val spark = triples.sparkSession
-      val local = edges.collect().map(r => (r.getString(0), r.getString(1)))
-      edges.unpersist(blocking = false)
-      val in = local.groupBy(_._2)                      // dst -> incoming srcs
-      val nodeIds = local.map(_._1).distinct
-      var label = nodeIds.map(n => n -> n).toMap
-      for (_ <- 1 to iters) {
-        label = nodeIds.map { n =>
-          val votes = in(n).map(e => label(e._1))
-            .groupBy(identity).map { case (l, vs) => (l, vs.length) }
-          val mx = votes.values.max
-          n -> votes.collect { case (l, c) if c == mx => l }.min
-        }.toMap
-      }
-      import spark.implicits._
-      return spark.createDataset(nodeIds.toSeq.map(n => (n, label(n))))
-        .toDF("entity_id", "community")
-    }
-    val nodes = edges.select(col("src").as("entity_id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.withColumn("label", col("entity_id"))
-    for (_ <- 1 to iters) {
-      val votes = edges
+    val edges = edgeSet(triples, undirected = true)
+    def start(e: DataFrame) =
+      e.select(col("src").as("entity_id")).distinct().withColumn("label", col("entity_id"))
+    def round(e: DataFrame, labels: DataFrame) = {
+      val votes = e
         .join(labels.withColumnRenamed("entity_id", "src"), "src")
         .groupBy(col("dst").as("entity_id"), col("label"))
         .agg(count(lit(1)).as("c"))
       val mx = votes.groupBy("entity_id").agg(max(col("c")).as("mx"))
-      labels = votes.join(mx, "entity_id")
+      votes.join(mx, "entity_id")
         .where(col("c") === col("mx"))
         .groupBy("entity_id").agg(min(col("label")).as("label"))
-        .localCheckpoint() // superstep: O(1)-deep plan, edges reused
     }
-    edges.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    labels.select(col("entity_id"), col("label").as("community"))
+    def output(labels: DataFrame) = labels.select(col("entity_id"), col("label").as("community"))
+    loadEdges(edges, maxLocalEdges) match {
+      case Left(rows) =>
+        // symmetric edges: every node is a src and receives votes
+        val g = new LocalGraph(rows)
+        val in = rows.indices.groupBy(g.dst(_))
+        var label = g.ids
+        for (_ <- 1 to iters) {
+          label = Array.tabulate(g.ids.length) { v =>
+            val votes = in(v).groupMapReduce(e => label(g.src(e)))(_ => 1)(_ + _)
+            val mx = votes.values.max
+            votes.collect { case (l, c) if c == mx => l }.min(sparkOrder)
+          }
+        }
+        localFrame(triples, output(round(edges, start(edges))).schema,
+          g.ids.indices.map(v => Row(g.ids(v), label(v))))
+      case Right(cached) =>
+        var labels = start(cached)
+        for (_ <- 1 to iters)
+          labels = round(cached, labels).localCheckpoint() // superstep: O(1)-deep plan
+        cached.unpersist(blocking = false)
+        output(labels)
+    }
   }
 
   /** Per-entity triangle counts over an undirected pair table
@@ -558,16 +504,7 @@ object Analytics {
   def bfsDistances(triples: DataFrame, seeds: DataFrame, maxHops: Int,
                    undirected: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"bfsDistances: maxHops must be >= 1, got $maxHops")
-    val base = triples.select(col("subj_id").as("src"), col("obj_id").as("dst"))
-    val edges = (if (undirected)
-      base.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("m"))
-        .select(col("m.src"), col("m.dst"))
-    else base)
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = edgeSet(triples, undirected).persist(StorageLevel.MEMORY_AND_DISK)
     var dist = seeds.select(col("entity_id")).distinct()
       .withColumn("dist", lit(0))
       .localCheckpoint()
@@ -642,10 +579,7 @@ object Analytics {
     require(walksPerStart >= 1 && walkLen >= 1,
       s"randomWalks: walksPerStart/walkLen must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val edges = triples.select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val withIdx = edges
+    val withIdx = edgeSet(triples)
       .withColumn("idx",
         (row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
           .cast("long"))
@@ -688,7 +622,7 @@ object Analytics {
     * authority but a strong hub: a survey-like document entity that
     * points at many authorities).
     *
-    * FIXED-POINT integer arithmetic, same rationale as [[pageRank]]:
+    * FIXED-POINT integer arithmetic, same rationale as [[rankKernel]]:
     * scores live in micro-units; each half-step sums the opposite score
     * over edges and max-normalizes with floor division
     * (`raw * 10^6 div max(raw)`), so the argmax node sits at exactly
@@ -699,57 +633,18 @@ object Analytics {
     * trade: quantization). The norm rides a broadcast single-row cross
     * join (not a driver collect), so each superstep stays one job.
     *
-    * Size-adaptive like [[pageRank]]: small edge sets iterate on the
-    * driver, big ones take the superstep loop — bit-identical outputs
+    * Size-adaptive through [[loadEdges]]: small edge sets iterate on the
+    * driver, big ones take the superstep loop — the same rows and schema
     * (asserted in KgAnalyticsSpec).
     */
   def hits(triples: DataFrame, iters: Int = 5,
            maxLocalEdges: Long = 2000000L): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val edges = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (edges.count() <= maxLocalEdges) {
-      val spark = triples.sparkSession
-      val local = edges.collect().map(r => (r.getString(0), r.getString(1)))
-      edges.unpersist(blocking = false)
-      import spark.implicits._
-      // no (non-self) edges: empty graph, empty result — matches the
-      // distributed path and pageRank/personalizedPageRank on the same
-      // input (and keeps aRaw.values.max from throwing on an empty map)
-      if (local.isEmpty)
-        return spark.emptyDataset[(String, Long, Long)]
-          .toDF("entity_id", "hub", "auth")
-      val nodeIds = (local.map(_._1) ++ local.map(_._2)).distinct
-      var hub = nodeIds.map(_ -> 1000000L).toMap
-      var auth = Map.empty[String, Long]
-      for (_ <- 1 to iters) {
-        val aRaw = new scala.collection.mutable.HashMap[String, Long]()
-        local.foreach { case (s, d) =>
-          aRaw.update(d, aRaw.getOrElse(d, 0L) + hub(s)) }
-        val aMax = math.max(aRaw.values.max, 1L)
-        auth = nodeIds.map(n =>
-          n -> aRaw.getOrElse(n, 0L) * 1000000L / aMax).toMap
-        val hRaw = new scala.collection.mutable.HashMap[String, Long]()
-        local.foreach { case (s, d) =>
-          hRaw.update(s, hRaw.getOrElse(s, 0L) + auth(d)) }
-        val hMax = math.max(hRaw.values.max, 1L)
-        hub = nodeIds.map(n =>
-          n -> hRaw.getOrElse(n, 0L) * 1000000L / hMax).toMap
-      }
-      return spark.createDataset(nodeIds.toSeq.map(n => (n, hub(n), auth(n))))
-        .toDF("entity_id", "hub", "auth")
-    }
-    val nodes = edges
-      .select(explode(array(col("src"), col("dst"))).as("entity_id"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = edgeSet(triples)
     // one half-step: sum `score` over edges in direction (from -> to),
     // max-normalize to micro-units; left join keeps sink/source nodes at 0
-    def halfStep(score: DataFrame, from: String, to: String): DataFrame = {
-      val raw = edges
+    def halfStep(e: DataFrame, nodes: DataFrame, score: DataFrame, from: String, to: String) = {
+      val raw = e
         .join(score.withColumnRenamed("entity_id", from), from)
         .groupBy(col(to).as("entity_id")).agg(sum("score").as("raw"))
       val mx = raw.agg(greatest(max("raw"), lit(1L)).as("mx"))
@@ -757,20 +652,43 @@ object Analytics {
         .crossJoin(broadcast(mx))
         .select(col("entity_id"),
           expr("(coalesce(raw, 0L) * 1000000L) div mx").as("score"))
-        .localCheckpoint() // superstep: O(1)-deep plan, edges reused
     }
-    var hub = nodes.withColumn("score", lit(1000000L))
-    var auth = hub
-    for (_ <- 1 to iters) {
-      auth = halfStep(hub, "src", "dst")
-      hub = halfStep(auth, "dst", "src")
-    }
-    val out = nodes
+    def output(nodes: DataFrame, hub: DataFrame, auth: DataFrame) = nodes
       .join(hub.withColumnRenamed("score", "hub"), "entity_id")
       .join(auth.withColumnRenamed("score", "auth"), "entity_id")
-    edges.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    loadEdges(edges, maxLocalEdges) match {
+      case Left(rows) =>
+        val g = new LocalGraph(rows)
+        def half(score: Array[Long], from: Array[Int], to: Array[Int]) = {
+          val raw = new Array[Long](g.ids.length)
+          for (e <- rows.indices) raw(to(e)) += score(from(e))
+          val mx = raw.foldLeft(1L)(math.max)
+          raw.map(_ * 1000000L / mx)
+        }
+        var hub = Array.fill(g.ids.length)(1000000L)
+        var auth = hub
+        for (_ <- 1 to iters) {
+          auth = half(hub, g.src, g.dst)
+          hub = half(auth, g.dst, g.src)
+        }
+        val nodes = nodesOf(edges)
+        val a = halfStep(edges, nodes, nodes.withColumn("score", lit(1000000L)), "src", "dst")
+        localFrame(triples, output(nodes, halfStep(edges, nodes, a, "dst", "src"), a).schema,
+          g.ids.indices.map(v => Row(g.ids(v), hub(v), auth(v))))
+      case Right(cached) =>
+        val nodes = nodesOf(cached).persist(StorageLevel.MEMORY_AND_DISK)
+        def step(score: DataFrame, from: String, to: String) =
+          halfStep(cached, nodes, score, from, to).localCheckpoint() // superstep: O(1)-deep plan
+        var hub = nodes.withColumn("score", lit(1000000L))
+        var auth = hub
+        for (_ <- 1 to iters) {
+          auth = step(hub, "src", "dst")
+          hub = step(auth, "dst", "src")
+        }
+        cached.unpersist(blocking = false)
+        nodes.unpersist(blocking = false)
+        output(nodes, hub, auth)
+    }
   }
 
   /** Bounded k-core peeling over the undirected canonical graph: `rounds`
@@ -789,14 +707,7 @@ object Analytics {
     */
   def kCore(triples: DataFrame, k: Int = 2, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1, s"kCore: k/rounds must be >= 1")
-    var edges = triples
-      .select(explode(array(
-        struct(col("subj_id").as("src"), col("obj_id").as("dst")),
-        struct(col("obj_id").as("src"), col("subj_id").as("dst")))).as("m"))
-      .select(col("m.src"), col("m.dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+    var edges = edgeSet(triples, undirected = true).localCheckpoint()
     for (_ <- 1 to rounds) {
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
@@ -835,10 +746,7 @@ object Analytics {
   def adjacency(triples: DataFrame, maxDegree: Int = 10000): DataFrame = {
     require(maxDegree >= 1, s"adjacency: maxDegree must be >= 1, got $maxDegree")
     import org.apache.spark.sql.expressions.Window
-    val de = triples
-      .select(col("subj_id").as("entity_id"), col("obj_id"))
-      .where(col("entity_id") =!= col("obj_id"))
-      .distinct()
+    val de = edgeSet(triples).select(col("src").as("entity_id"), col("dst").as("obj_id"))
     val byEntity = Window.partitionBy("entity_id")
     de.select(col("entity_id"), col("obj_id"),
         row_number().over(byEntity.orderBy("obj_id")).as("rn"),
@@ -956,11 +864,7 @@ object Analytics {
     require(fanouts.nonEmpty && fanouts.forall(_ >= 1),
       s"neighborSample: fanouts must be non-empty positive, got $fanouts")
     import org.apache.spark.sql.expressions.Window
-    val edges = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+    val edges = edgeSet(triples).localCheckpoint()
     val sampled = fanouts.zipWithIndex.map { case (k, i) =>
       val h = graft.functions.F.poly_hash(concat_ws("\u0001",
         lit("sample"), lit(seed.toString), lit((i + 1).toString),
@@ -1025,12 +929,10 @@ object Analytics {
         val story = ConnectedComponents.onDriver(edges, d.items)
         val size = story.groupBy(identity).view.mapValues(_.length.toLong).toMap
         val nullable = mentions.schema("item").nullable
-        triples.sparkSession.createDataFrame(
-          java.util.Arrays.asList(d.items.indices.map(i =>
-            Row(d.items(i), story(i), size(story(i)))): _*),
-          StructType(Seq(StructField("doc_id", StringType, nullable),
+        localFrame(triples, StructType(Seq(StructField("doc_id", StringType, nullable),
             StructField("story_id", StringType, nullable),
-            StructField("story_size", LongType, nullable = false))))
+            StructField("story_size", LongType, nullable = false))),
+          d.items.indices.map(i => Row(d.items(i), story(i), size(story(i)))))
       case Right(kept) =>
         val pairs = pairsOf(kept).where(col("n") >= minShared)
           .select(col("a").as("src"), col("b").as("dst"))
@@ -1126,11 +1028,7 @@ object Analytics {
     require(returnWeight >= 0L && inOutWeight >= 0L,
       s"node2vecWalks: weights must be >= 0")
     import org.apache.spark.sql.expressions.Window
-    val edges = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+    val edges = edgeSet(triples).localCheckpoint()
     var cur = edges.select(col("src")).distinct()
       .select(col("src").as("start"),
         explode(sequence(lit(0), lit(walksPerStart - 1))).as("walk_no"),
@@ -1191,16 +1089,7 @@ object Analytics {
                          maxHops: Int,
                          undirected: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"shortestPathForest: maxHops must be >= 1")
-    val base = triples.select(col("subj_id").as("src"), col("obj_id").as("dst"))
-    val edges = (if (undirected)
-      base.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("m"))
-        .select(col("m.src"), col("m.dst"))
-    else base)
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = edgeSet(triples, undirected).persist(StorageLevel.MEMORY_AND_DISK)
     var dist = seeds.select(col("entity_id")).distinct()
       .withColumn("dist", lit(0))
       .withColumn("parent", lit(""))
@@ -1224,9 +1113,10 @@ object Analytics {
   /** Strongly connected components over the directed canonical graph —
     * the cycle structure CC cannot see (entity A cites B cites A is one
     * SCC; a DAG of influence is all singletons). scc_id = min entity id
-    * in the component, so output is a pure function of the edge set.
+    * in the component (Spark's string order), so output is a pure
+    * function of the edge set.
     *
-    * Size-adaptive like [[pageRank]]: an edge set within
+    * Size-adaptive through [[loadEdges]]: an edge set within
     * `maxLocalEdges` runs iterative Kosaraju on the driver; bigger
     * graphs take the distributed trim + double-min-label loop (the
     * Pregel/GraphX SCC shape):
@@ -1249,57 +1139,53 @@ object Analytics {
   def scc(triples: DataFrame, maxLocalEdges: Long = 2000000L,
           maxRounds: Int = 20): DataFrame = {
     require(maxRounds >= 1, s"scc: maxRounds must be >= 1")
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val edges0 = triples
-      .select(col("subj_id").as("src"), col("obj_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
-    if (edges0.count() <= maxLocalEdges) {
-      val es = edges0.as[(String, String)].collect()
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
-      val adj = es.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-      val radj = es.groupBy(_._2).map { case (d, xs) => d -> xs.map(_._1) }
-      // iterative Kosaraju: explicit stacks (no recursion — a 10^6-long
-      // path must not overflow), component id fixed to min member after
-      val visited = new java.util.HashSet[String]()
-      val order = new scala.collection.mutable.ArrayBuffer[String](nodes.length)
-      val stack = new scala.collection.mutable.ArrayBuffer[(String, Int)]()
-      for (s <- nodes if !visited.contains(s)) {
-        visited.add(s); stack += ((s, 0))
-        while (stack.nonEmpty) {
-          val (v, i) = stack.remove(stack.length - 1)
-          val nb = adj.getOrElse(v, Array.empty[String])
-          if (i < nb.length) {
-            stack += ((v, i + 1))
-            val w = nb(i)
-            if (!visited.contains(w)) { visited.add(w); stack += ((w, 0)) }
-          } else order += v
+    val edges0 = edgeSet(triples)
+    def sized(all: DataFrame) =
+      all.join(all.groupBy("scc_id").agg(count(lit(1)).as("scc_size")), "scc_id")
+        .select(col("entity_id"), col("scc_id"), col("scc_size"))
+    val cached = loadEdges(edges0, maxLocalEdges) match {
+      case Left(rows) =>
+        val g = new LocalGraph(rows)
+        val n = g.ids.length
+        val adj = rows.indices.groupMap(g.src(_))(g.dst(_))
+        val radj = rows.indices.groupMap(g.dst(_))(g.src(_))
+        // iterative Kosaraju: explicit stacks (no recursion — a 10^6-long
+        // path must not overflow), component id fixed to min member after
+        val visited = new Array[Boolean](n)
+        val order = new scala.collection.mutable.ArrayBuffer[Int](n)
+        val stack = new scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+        for (s <- 0 until n if !visited(s)) {
+          visited(s) = true; stack += ((s, 0))
+          while (stack.nonEmpty) {
+            val (v, i) = stack.remove(stack.length - 1)
+            val nb = adj.getOrElse(v, IndexedSeq.empty)
+            if (i < nb.length) {
+              stack += ((v, i + 1))
+              val w = nb(i)
+              if (!visited(w)) { visited(w) = true; stack += ((w, 0)) }
+            } else order += v
+          }
         }
-      }
-      val comp = new java.util.HashMap[String, String]()
-      val dfs2 = new scala.collection.mutable.ArrayBuffer[String]()
-      for (s <- order.reverseIterator if !comp.containsKey(s)) {
-        val members = new scala.collection.mutable.ArrayBuffer[String]()
-        comp.put(s, s); dfs2 += s
-        while (dfs2.nonEmpty) {
-          val v = dfs2.remove(dfs2.length - 1); members += v
-          for (w <- radj.getOrElse(v, Array.empty[String]))
-            if (!comp.containsKey(w)) { comp.put(w, s); dfs2 += w }
+        val comp = Array.fill(n)(-1)
+        val dfs2 = new scala.collection.mutable.ArrayBuffer[Int]()
+        for (s <- order.reverseIterator if comp(s) < 0) {
+          val members = new scala.collection.mutable.ArrayBuffer[Int]()
+          comp(s) = s; dfs2 += s
+          while (dfs2.nonEmpty) {
+            val v = dfs2.remove(dfs2.length - 1); members += v
+            for (w <- radj.getOrElse(v, IndexedSeq.empty) if comp(w) < 0) { comp(w) = s; dfs2 += w }
+          }
+          val m = members.minBy(g.ids(_))(sparkOrder)
+          members.foreach(comp(_) = m)
         }
-        val m = members.min
-        members.foreach(comp.put(_, m))
-      }
-      val sizes = nodes.groupBy(n => comp.get(n))
-        .map { case (c, vs) => c -> vs.length.toLong }
-      return spark.createDataset(nodes.toSeq.map(n =>
-          (n, comp.get(n), sizes(comp.get(n)))))
-        .toDF("entity_id", "scc_id", "scc_size")
+        val size = comp.groupMapReduce(identity)(_ => 1L)(_ + _)
+        return localFrame(triples,
+          sized(nodesOf(edges0).select(col("entity_id"), col("entity_id").as("scc_id"))).schema,
+          (0 until n).map(v => Row(g.ids(v), g.ids(comp(v)), size(comp(v)))))
+      case Right(c) => c
     }
-    var edges = edges0
-    var nodes = edges.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct().localCheckpoint()
+    var edges = cached
+    var nodes = nodesOf(edges, "id").localCheckpoint()
     val acc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var rounds = 0
     var live = nodes.count()
@@ -1346,9 +1232,12 @@ object Analytics {
         }
         val f = fixpoint(edges, "src", "dst")
         val b = fixpoint(edges, "dst", "src")
+        // `min` is nullable in Spark's schema, though no label is null:
+        // coalescing to the id gives scc_id the ids' nullability, as on the
+        // trimmed side, so the output schema does not depend on the data
         val assigned = f.join(b.withColumnRenamed("lab", "blab"), "id")
           .where(col("lab") === col("blab"))
-          .select(col("id").as("entity_id"), col("lab").as("scc_id"))
+          .select(col("id").as("entity_id"), coalesce(col("lab"), col("id")).as("scc_id"))
           .localCheckpoint()
         acc += assigned
         nodes = nodes.join(assigned.select(col("entity_id").as("id")),
@@ -1360,12 +1249,10 @@ object Analytics {
         live = nodes.count()
       }
     }
+    cached.unpersist(blocking = false)
     require(live == 0,
       s"scc: did not converge within $maxRounds rounds ($live nodes live)")
-    val all = acc.reduce(_ unionByName _)
-    all.join(all.groupBy("scc_id").agg(count(lit(1)).as("scc_size")),
-        "scc_id")
-      .select(col("entity_id"), col("scc_id"), col("scc_size"))
+    sized(acc.reduce(_ unionByName _))
   }
 
   /** Deterministic annotation batches: up to `k` supporting mentions

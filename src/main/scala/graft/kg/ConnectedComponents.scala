@@ -3,7 +3,6 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components over an edge DataFrame via alternating
   * large-star / small-star (Kiveris et al., "Connected Components in
@@ -40,8 +39,9 @@ object ConnectedComponents {
 
   /** The driver-side twin of [[run]]: for each vertex, the smallest id in
     * its component, by union-find in O(E α(E)) that keeps the smaller root
-    * in Spark's string order. Like `greatest`/`least` in [[run]], an edge
-    * with a null endpoint joins nothing.
+    * in Spark's string order ([[Analytics.sparkOrder]]). Like
+    * `greatest`/`least` in [[run]], an edge with a null endpoint joins
+    * nothing.
     */
   private[kg] def onDriver(edges: Iterator[(String, String)],
                            vertices: Array[String]): Array[String] = {
@@ -56,18 +56,13 @@ object ConnectedComponents {
     edges.foreach { case (a, b) =>
       if (a != null && b != null) {
         val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (sparkLess(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+        if (ra != rb) {
+          if (Analytics.sparkOrder.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+        }
       }
     }
     vertices.map(find)
   }
-
-  /** `a < b` in Spark's string order: UTF-8 bytes, i.e. code points. Java's
-    * `String.compareTo` compares UTF-16 units and puts a supplementary
-    * character (a surrogate pair) below U+E000..U+FFFF.
-    */
-  private def sparkLess(a: String, b: String): Boolean =
-    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
   /** @param edges    (src, dst) string ids, undirected
     * @param vertices (id) — all ids, including isolated ones

@@ -978,4 +978,80 @@ class KgAnalyticsSpec extends AnyFunSuite {
       same(kg.ConnectedComponents.runAdaptive(e, v), kg.ConnectedComponents.run(e, v))
     })
   }
+
+  // ---- the size-adaptive graph loops: driver-local == distributed ----
+
+  private val genIters = Gen.choose(1, 3)
+
+  /** A generated triple table and seeds drawn from its ids plus one absent id. */
+  private val genSeeded: Gen[(DataFrame, DataFrame)] = genTriples.flatMap { t =>
+    val ids = t.select("subj_id", "obj_id").collect().toSeq
+      .flatMap(r => Seq(r.getString(0), r.getString(1))).filter(_ != null).distinct
+    Gen.someOf(ids :+ "absent").map(s =>
+      (t, frame(StructType(Seq(StructField("entity_id", StringType, true))), s.toSeq.map(Row(_)))))
+  }
+
+  test("pageRank: driver-local == distributed (iters 1-3, schema and rows)") {
+    check("pageRank", 10, Prop.forAllNoShrink(genTriples, genIters) { (t, iters) =>
+      same(kg.Analytics.pageRank(t, iters), kg.Analytics.pageRank(t, iters, maxLocalEdges = 0))
+    })
+  }
+
+  test("weightedPageRank: driver-local == distributed (iters 1-3, schema and rows)") {
+    check("weightedPageRank", 10, Prop.forAllNoShrink(genTriples, genIters) { (t, iters) =>
+      same(kg.Analytics.weightedPageRank(t, iters),
+        kg.Analytics.weightedPageRank(t, iters, maxLocalEdges = 0))
+    })
+  }
+
+  test("personalizedPageRank: driver-local == distributed (seeds incl. an absent id, iters 1-3)") {
+    check("personalizedPageRank", 10, Prop.forAllNoShrink(genSeeded, genIters) {
+      case ((t, seeds), iters) =>
+        same(kg.Analytics.personalizedPageRank(t, seeds, iters),
+          kg.Analytics.personalizedPageRank(t, seeds, iters, maxLocalEdges = 0))
+    })
+  }
+
+  test("hits: driver-local == distributed (iters 1-3, schema and rows)") {
+    check("hits", 10, Prop.forAllNoShrink(genTriples, genIters) { (t, iters) =>
+      same(kg.Analytics.hits(t, iters), kg.Analytics.hits(t, iters, maxLocalEdges = 0))
+    })
+  }
+
+  test("labelProp: driver-local == distributed (iters 1-3, UTF-8 order)") {
+    check("labelProp", 10, Prop.forAllNoShrink(genTriples, genIters) { (t, iters) =>
+      same(kg.Analytics.labelProp(t, iters), kg.Analytics.labelProp(t, iters, maxLocalEdges = 0))
+    })
+  }
+
+  test("scc: driver-local == distributed (UTF-8 order, schema and rows)") {
+    check("scc", 10, Prop.forAllNoShrink(genTriples) { t =>
+      same(kg.Analytics.scc(t), kg.Analytics.scc(t, maxLocalEdges = 0))
+    })
+  }
+
+  // U+FFFD is below U+1F600 in UTF-8 but above its surrogates in UTF-16
+  private val (fffd, smile) = ("\uFFFD", "\uD83D\uDE00")
+
+  private def edgesOf(es: (String, String)*): DataFrame = {
+    import spark.implicits._
+    es.map { case (a, b) => ("d", 0, 0, a, "PER", "p", b, "ORG") }
+      .toDF("docId", "spanOrder", "sentIdx", "subj_id", "subj_type", "pred", "obj_id", "obj_type")
+  }
+
+  test("labelProp: a vote tie goes to the smaller label in UTF-8 order on both sides") {
+    val star = edgesOf(("X", fffd), ("X", smile))
+    val want = Map("X" -> fffd, fffd -> "X", smile -> "X")
+    for (maxLocal <- Seq(2000000L, 0L))
+      assert(kg.Analytics.labelProp(star, iters = 1, maxLocalEdges = maxLocal).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap == want)
+  }
+
+  test("scc: the component id is the smallest member in UTF-8 order on both sides") {
+    val cycle = edgesOf((fffd, smile), (smile, fffd))
+    val want = Map(fffd -> ((fffd, 2L)), smile -> ((fffd, 2L)))
+    for (maxLocal <- Seq(2000000L, 0L))
+      assert(kg.Analytics.scc(cycle, maxLocalEdges = maxLocal).collect()
+        .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap == want)
+  }
 }
