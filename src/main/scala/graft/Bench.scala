@@ -79,19 +79,6 @@ object Bench {
     s
   }
 
-  private def localSession(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** end-to-end pipeline: returns (triples, seconds) */
   private def pipeline(spark: SparkSession, nDocs: Long): (Long, Double) = {
     val t0 = System.nanoTime()
@@ -106,11 +93,9 @@ object Bench {
   // one seeded reference-dims pack per session (navec 250K x 300d x 100q,
   // CNN [256,128,64] — the honest production-FLOPs workload)
   private val refPackCache =
-    new graft.runtime.SessionCache[
-      org.apache.spark.broadcast.Broadcast[graft.pack.ModelPack]]
+    new graft.runtime.SessionCache[Unit, org.apache.spark.broadcast.Broadcast[graft.pack.ModelPack]]
   private def refPackBc(s: SparkSession) =
-    refPackCache.getOrUpdate(s)(
-      ss => ss.sparkContext.broadcast(graft.pack.SynthPack.buildRandom()))
+    refPackCache(s, ())(s.sparkContext.broadcast(graft.pack.SynthPack.buildRandom()))
 
   /** NLP inference at production model dims: returns (sentences, seconds).
     * Parse-only count: at these dims the forward pass is >99% of pipeline
@@ -351,7 +336,7 @@ object Bench {
           }
         } else (try s.stop() catch { case _: Throwable => })
       } catch { case _: Throwable => }
-      val s = localSession(totalCores)
+      val s = graft.runtime.LocalSession(totalCores, s"graft-bench-$totalCores")
       try {
         val tally = new CpuTally
         s.sparkContext.addSparkListener(tally)
@@ -529,7 +514,7 @@ object Bench {
     // --- per-query catalog timings on plain local[cpus]; best-of-2 (the
     // host has hypervisor-level steal spikes that single-shot timings hit)
     def runCatalog(): Seq[(String, Double)] = {
-      val spark = localSession(cpus)
+      val spark = graft.runtime.LocalSession(cpus, s"graft-bench-$cpus")
       mark("catalog start")
       val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       // untimed warmup of the first catalog query: a fresh session bills

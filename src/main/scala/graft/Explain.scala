@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan auditor: dumps formatted physical plans for the FULL query catalog
@@ -125,10 +124,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.LocalSession(4, "graft-explain")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by graft.Explain)\n\n")

@@ -2,7 +2,9 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.broadcast.Broadcast
 import graft.nlp.ParsedSent
+import graft.runtime.SessionCache
 import graft.corpus.RuCorpus
 import scala.collection.mutable.ArrayBuffer
 
@@ -286,11 +288,11 @@ object Kg {
     * solves it driver-side; cached per session (dict-derived, reusable
     * across buckets and queries).
     */
-  private val canonCache = new graft.runtime.SessionCache[DataFrame]
+  private val canonCache = new SessionCache[Unit, DataFrame]
   def canonicalMap(spark: SparkSession): DataFrame =
-    canonCache.getOrUpdate(spark) { s =>
-      val edges = aliasEdges(s)
-      val vertices = aliasDf(s).select(col("entity_id").as("id")).distinct()
+    canonCache(spark, ()) {
+      val edges = aliasEdges(spark)
+      val vertices = aliasDf(spark).select(col("entity_id").as("id")).distinct()
       ConnectedComponents.runAdaptive(edges, vertices).cache()
     }
 
@@ -300,12 +302,11 @@ object Kg {
     * instead of four (link probe + canonical probe per side) — the join
     * probes were the top CPU frame once inference went zero-alloc.
     */
-  private val aliasCanonCache = new graft.runtime.SessionCache[DataFrame]
+  private val aliasCanonCache = new SessionCache[Unit, DataFrame]
   def aliasCanonicalDf(spark: SparkSession): DataFrame =
-    aliasCanonCache.getOrUpdate(spark) { s =>
-      val rep = aliasDf(s).groupBy("alias").agg(min("entity_id").as("entity_id"))
-      val cm = canonicalMap(s)
-      rep.join(cm, col("entity_id") === col("id"), "left")
+    aliasCanonCache(spark, ()) {
+      val rep = aliasDf(spark).groupBy("alias").agg(min("entity_id").as("entity_id"))
+      rep.join(canonicalMap(spark), col("entity_id") === col("id"), "left")
         .select(col("alias"),
           coalesce(col("component"), col("entity_id")).as("canonical_id"))
         .cache()
@@ -319,14 +320,14 @@ object Kg {
     * cluster), while an explicit `sc.broadcast` ships once and is
     * memory-mapped by every subsequent job in the session.
     */
-  private val aliasCanonBcCache = new graft.runtime.SessionCache[
-    org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, String]]]
+  private val aliasCanonBcCache =
+    new SessionCache[Unit, Broadcast[java.util.HashMap[String, String]]]
   private def aliasCanonicalBc(spark: SparkSession) =
-    aliasCanonBcCache.getOrUpdate(spark) { s =>
-      val rows = aliasCanonicalDf(s).select("alias", "canonical_id").collect()
+    aliasCanonBcCache(spark, ()) {
+      val rows = aliasCanonicalDf(spark).select("alias", "canonical_id").collect()
       val m = new java.util.HashMap[String, String](rows.length * 2)
       rows.foreach(r => m.put(r.getString(0), r.getString(1)))
-      s.sparkContext.broadcast(m)
+      spark.sparkContext.broadcast(m)
     }
 
   /** same simple-casemap as the lower_simple expression — per-codepoint

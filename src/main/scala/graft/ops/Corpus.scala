@@ -125,6 +125,21 @@ object Corpus {
              dupPairs: Option[DataFrame] = None,
              benchFilter: Option[(DataFrame, Array[Long])] = None,
              docShingles: Option[DataFrame] = None): DataFrame = {
+    val clean = cleanPool(docs, bench, minTokens, dedupThreshold,
+      dupPairs, benchFilter, docShingles)
+    val sampled = clean.join(
+      stratifiedSample(clean, rates).select("doc_id"), Seq("doc_id"))
+    packSequencesByCounts(sampled.select(col("doc_id"), col("n_tokens")),
+      budget, shards)
+  }
+
+  /** The clean pool (doc_id, lang, text, n_tokens) that [[curate]] and
+    * [[curateDsir]] select from: quality gate → near-dup survivors →
+    * decontaminated, each stage stitched back by a doc_id equi-join. */
+  private def cleanPool(docs: DataFrame, bench: DataFrame, minTokens: Int,
+                        dedupThreshold: Double, dupPairs: Option[DataFrame],
+                        benchFilter: Option[(DataFrame, Array[Long])],
+                        docShingles: Option[DataFrame]): DataFrame = {
     // ONE tokenization pass: the quality gate and the final packing both
     // need size(tokens(text)) — compute it in the gate projection and
     // carry the count through the (doc_id-keyed) stitches to
@@ -138,13 +153,9 @@ object Corpus {
           gatedPairs(gated, dupPairs, dedupThreshold))
         .where(col("keep")).select("doc_id"),
       Seq("doc_id"))
-    val clean = survivors.join(
+    survivors.join(
       decontaminated(survivors, bench, benchFilter, docShingles).select("doc_id"),
       Seq("doc_id"), "left_anti")
-    val sampled = clean.join(
-      stratifiedSample(clean, rates).select("doc_id"), Seq("doc_id"))
-    packSequencesByCounts(sampled.select(col("doc_id"), col("n_tokens")),
-      budget, shards)
   }
 
   /** Bloom-decontamination stage over either a prebuilt bench filter
@@ -211,18 +222,8 @@ object Corpus {
                  dupPairs: Option[DataFrame] = None,
                  benchFilter: Option[(DataFrame, Array[Long])] = None,
                  docShingles: Option[DataFrame] = None): DataFrame = {
-    // single tokenization pass for gate + packing, as in [[curate]]
-    val gated = docs.select(col("doc_id"), col("lang"), col("text"),
-        size(TextStats.tokens(col("text"))).cast("long").as("n_tokens"))
-      .where(col("n_tokens") >= minTokens)
-    val survivors = gated.join(
-      Dedup.dedupClustersFromPairs(gated,
-          gatedPairs(gated, dupPairs, dedupThreshold))
-        .where(col("keep")).select("doc_id"),
-      Seq("doc_id"))
-    val clean = survivors.join(
-      decontaminated(survivors, bench, benchFilter, docShingles).select("doc_id"),
-      Seq("doc_id"), "left_anti")
+    val clean = cleanPool(docs, bench, minTokens, dedupThreshold,
+      dupPairs, benchFilter, docShingles)
     val selected = clean.join(
       TextStats.dsirSelect(clean, target, k).select("doc_id"), Seq("doc_id"))
     packSequencesByCounts(selected.select(col("doc_id"), col("n_tokens")),

@@ -873,7 +873,7 @@ class KgAnalyticsSpec extends AnyFunSuite {
       .map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted
     val (ra, rb) = (rows(a), rows(b))
     Prop((a.schema == b.schema) && ra == rb) :|
-      s"schemas ${a.schema.simpleString} / ${b.schema.simpleString}\nrows $ra\n / $rb"
+      s"schemas ${a.schema.treeString} / ${b.schema.treeString}\nrows $ra\n / $rb"
   }
 
   /** Triple tables whose docs mention a few entities: two hub entities in
