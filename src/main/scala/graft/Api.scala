@@ -30,44 +30,10 @@ object Api {
     val navec = navecTar.map(f => graft.pack.NavecTar.load(f).emb)
     graft.pack.SlovnetPack.loadAll(dir, navec)
   }
-
-  /** rectangular encode of pre-tokenized items (exec/encoders.py:25-49) */
-  private[graft] def encode(words: Array[Array[String]], pack: ModelPack,
-                            ws: Workspace): (Int, Int) = {
-    val n = words.length
-    var seqLen = 1
-    var i = 0
-    while (i < n) { if (words(i).length > seqLen) seqLen = words(i).length; i += 1 }
-    val ns = n * seqLen
-    val wordIds = ws.i(WS.WORD_IDS, ns)
-    val shapeIds = ws.i(WS.SHAPE_IDS, ns)
-    val padMask = ws.b(WS.PAD_MASK, ns)
-    val valid = ws.b(WS.VALID, ns)
-    java.util.Arrays.fill(wordIds, 0, ns, pack.wordVocab.padId)
-    java.util.Arrays.fill(shapeIds, 0, ns, pack.shapeVocab.padId)
-    i = 0
-    while (i < n) {
-      var s = 0
-      while (s < seqLen) {
-        val p = i * seqLen + s
-        if (s < words(i).length) {
-          val w = words(i)(s)
-          wordIds(p) = pack.wordVocab.encodeLower(w)
-          shapeIds(p) = pack.shapeIdByOrdinal(Shape.shapeOrdinal(w))
-          padMask(p) = false; valid(p) = true
-        } else { padMask(p) = true; valid(p) = false }
-        s += 1
-      }
-      i += 1
-    }
-    (n, seqLen)
-  }
 }
 
 /** Raw text -> entity spans (api.py:41-61, exec/infer.py:24-51). */
 final class NER(val pack: ModelPack, val batchSize: Int = 8) extends Serializable {
-  import Api._
-
   def apply(text: String): Markup.SpanMarkup = map(Seq(text)).next()
 
   def map(texts: Iterable[String]): Iterator[Markup.SpanMarkup] = {
@@ -75,7 +41,8 @@ final class NER(val pack: ModelPack, val batchSize: Int = 8) extends Serializabl
     texts.iterator.grouped(batchSize).flatMap { batch =>
       val toks = batch.iterator.map(t => Tokenizer.tokenize(t)).toArray
       val words = toks.map(_.map(_.text))
-      val (n, seqLen) = encode(words, pack, ws)
+      val n = words.length
+      val seqLen = pack.encode(words, (w: String) => w, ws)
       val xT = pack.ner.encoder.embT(pack.ner.emb, n, seqLen, ws)
       val emissions = pack.ner.forwardT(xT, n, seqLen, ws.b(WS.PAD_MASK, n * seqLen), ws)
       val paths = pack.ner.crf.decode(emissions, n, seqLen, ws.b(WS.VALID, n * seqLen), ws)
@@ -93,15 +60,14 @@ object NER {
 
 /** Pre-tokenized words -> POS + feats (api.py:66-88, exec/infer.py:54-74). */
 final class Morph(val pack: ModelPack, val batchSize: Int = 8) extends Serializable {
-  import Api._
-
   def apply(words: Seq[String]): Api.MorphMarkup = map(Seq(words)).next()
 
   def map(items: Iterable[Seq[String]]): Iterator[Api.MorphMarkup] = {
     val ws = new Workspace
     items.iterator.grouped(batchSize).flatMap { batch =>
       val words = batch.iterator.map(_.toArray).toArray
-      val (n, seqLen) = encode(words, pack, ws)
+      val n = words.length
+      val seqLen = pack.encode(words, (w: String) => w, ws)
       val xT = pack.morph.encoder.embT(pack.morph.emb, n, seqLen, ws)
       val logits = pack.morph.forwardT(xT, n, seqLen, ws.b(WS.PAD_MASK, n * seqLen), ws)
       val t = pack.morphTags.size
@@ -129,15 +95,14 @@ object Morph {
   * (api.py:91-113, exec/infer.py:78-112).
   */
 final class Syntax(val pack: ModelPack, val batchSize: Int = 8) extends Serializable {
-  import Api._
-
   def apply(words: Seq[String]): Api.SyntaxMarkup = map(Seq(words)).next()
 
   def map(items: Iterable[Seq[String]]): Iterator[Api.SyntaxMarkup] = {
     val ws = new Workspace
     items.iterator.grouped(batchSize).flatMap { batch =>
       val words = batch.iterator.map(_.toArray).toArray
-      val (n, seqLen) = encode(words, pack, ws)
+      val n = words.length
+      val seqLen = pack.encode(words, (w: String) => w, ws)
       val xT = pack.syntax.encoder.embT(pack.syntax.emb, n, seqLen, ws)
       val (headIds, relIds) = pack.syntax.forwardT(xT, n, seqLen,
         ws.b(WS.PAD_MASK, n * seqLen), ws.b(WS.VALID, n * seqLen), ws)

@@ -84,9 +84,10 @@ object HwCeiling {
     * iteration), and mul and add are issued separately, with no FMA. A
     * GEMM register tile runs independent FMA chains and overlaps those
     * latencies, so it can beat this "ceiling": on a 4-vCPU AVX-512 Xeon
-    * (JDK 17) the probe read 38-42 GF/s per thread while
-    * `VectorGemm.gemmDense` alone ran 67-87 GF/s per thread at the conv
-    * shapes 384x900x256, 384x768x128 and 384x384x64. A
+    * (JDK 17) the probe read 38-42 GF/s per thread while the 4x4-vector
+    * FMA tile of `VectorGemm.convDirect`, run as a plain GEMM, reached
+    * 67-87 GF/s per thread at the conv shapes 384x900x256, 384x768x128 and
+    * 384x384x64. A
     * `kernel.simd_ceiling_frac` near 1 thus does not mean the kernel is at
     * the machine's peak.
     */

@@ -19,7 +19,7 @@ object Kernels {
     * SLOWER than this loop at the pipeline's shapes (biaffine n=32, rel
     * n=H*R; syntax stage 3.5s scalar vs 5.4s SIMD best-of-3) — C2 already
     * auto-vectorizes the inner j-loop and accumulates in place. SIMD
-    * dispatch is therefore only on dense weights (gemmDense, convDirect).
+    * dispatch is therefore only on dense weights ([[convDirect]]).
     */
   def gemm(a: Array[Float], m: Int, k: Int, b: Array[Float], n: Int,
            out: Array[Float]): Unit = {
@@ -41,14 +41,16 @@ object Kernels {
     }
   }
 
-  /** Density/size gate shared by the non-conv weight matrices (Linear,
-    * biaffine kernels): the SIMD dense GEMM pays off only for big, mostly
-    * nonzero operands; rigged synthetic packs stay below BOTH bars (tiny
-    * tensors, ~99% zeros), so the oracle-checked toy path keeps the
-    * sequential bit-exact kernel structurally.
+  /** The density rule of every weight that can take [[convDirect]]: more
+    * than a quarter nonzero and at least `minLen` elements. Trained/
+    * production packs are fully dense; rigged synthetic packs are ~99%
+    * zeros, so the oracle-checked toy path keeps the sequential bit-exact
+    * kernels structurally. Linear and the biaffine-rel kernel also pass a
+    * size floor of 2048 (the FMA tile pays off only for big operands, and
+    * the rigged tensors are tiny); Conv1d passes 0 (see its isDense).
     */
-  def denseWorthy(w: Array[Float]): Boolean = {
-    if (w.length < 2048) return false
+  def denseWorthy(w: Array[Float], minLen: Int): Boolean = {
+    if (w.length < minLen) return false
     var nz = 0
     var i = 0
     while (i < w.length) { if (w(i) != 0f) nz += 1; i += 1 }
@@ -56,7 +58,7 @@ object Kernels {
   }
 
   /** True when the JDK Vector API (jdk.incubator.vector) loaded — then
-    * gemmDense runs the SIMD kernel. Probed once; any linkage error means
+    * convDirect runs the SIMD kernel. Probed once; any linkage error means
     * the JVM was started without --add-modules=jdk.incubator.vector and we
     * keep the scalar loop. Both paths are bit-identical (see VectorGemm).
     */
@@ -64,58 +66,24 @@ object Kernels {
     try VectorGemm.lanes >= 4
     catch { case _: LinkageError => false }
 
-  /** Dense GEMM: out[m,n] = a[m,k] x b[k,n]. Each output element
-    * accumulates its k terms in ascending order as FUSED multiply-adds
-    * (one rounding per term) — a fixed, deterministic order (bit-identical
-    * across runs, batch sizes and parallelism levels) but not the
-    * mul-then-add sequential order of [[gemm]]. Used only on dense trained
-    * weights, where the reference's own numpy matmul delegates to BLAS
-    * with an implementation-defined accumulation order anyway —
+  /** The dense FMA kernel. Direct convolution: for every row r = b*S+s and
+    * filter f, prod = sum over p = c*kernel+t ascending of
+    * fma(x[b, c, s+t], w[p, f]) — a GEMM over im2col row r without the
+    * im2col copy — handed to `st` for the epilogue and store. x is the
+    * guarded layout [B, chans, S+2*pad] (see [[Conv1d]]), w is
+    * [chans*kernel, F]. With seqLen = 1, kernel = 1 and pad = 0 it is the
+    * dense GEMM x[B, chans] x w[chans, F] (Linear, SyntaxRel).
+    *
+    * Each output element accumulates its terms in ascending order as FUSED
+    * multiply-adds (one rounding per term) — a fixed, deterministic order
+    * (bit-identical across runs, batch sizes and parallelism levels) but
+    * not the mul-then-add sequential order of [[gemm]]. Used only on dense
+    * trained weights, where the reference's own numpy matmul delegates to
+    * BLAS with an implementation-defined accumulation order anyway —
     * sequential-order parity is not a meaningful target there; the rigged
-    * sparse packs keep the bit-exact sequential path. Dispatches to the
+    * sparse packs keep the bit-exact sequential paths. Dispatches to the
     * SIMD twin when available; the two paths produce identical bits
     * (KernelSpec asserts it on all tail shapes).
-    */
-  def gemmDense(a: Array[Float], m: Int, k: Int, b: Array[Float], n: Int,
-                out: Array[Float]): Unit = {
-    if (simdAvailable) { VectorGemm.gemmDense(a, m, k, b, n, out); return }
-    gemmDenseScalar(a, m, k, b, n, out)
-  }
-
-  def gemmDenseScalar(a: Array[Float], m: Int, k: Int, b: Array[Float], n: Int,
-                      out: Array[Float]): Unit = {
-    // FMA contract (see VectorGemm): every output element accumulates its
-    // k terms in ascending order as fused multiply-adds — Math.fma is
-    // C2-intrinsified to the same vfmadd the SIMD twin uses, so the two
-    // paths are bit-identical. The row-major accumulate-in-out form walks
-    // b exactly once per row in long unit-stride runs.
-    var i = 0
-    while (i < m) {
-      val oOff = i * n
-      java.util.Arrays.fill(out, oOff, oOff + n, 0f)
-      val aOff = i * k
-      var p = 0
-      while (p < k) {
-        val av = a(aOff + p)
-        val bOff = p * n
-        var j = 0
-        while (j < n) {
-          out(oOff + j) = Math.fma(av, b(bOff + j), out(oOff + j))
-          j += 1
-        }
-        p += 1
-      }
-      i += 1
-    }
-  }
-
-  /** Dense direct convolution: for every row r = b*S+s and filter f,
-    * prod = sum over p = c*kernel+t ascending of fma(x[b, c, s+t], w[p, f])
-    * — the FMA order of [[gemmDense]] over im2col row r, without the im2col
-    * copy — handed to `st` for the epilogue and store. x is the guarded
-    * layout [B, chans, S+2*pad] (see [[Conv1d]]), w is [chans*kernel, F].
-    * Dispatches to the SIMD twin when available; the two paths produce
-    * identical bits (KernelSpec asserts it).
     */
   private[graft] def convDirect(x: Array[Float], batch: Int, seqLen: Int, chans: Int,
                                 kernel: Int, pad: Int, w: Array[Float], filters: Int,
@@ -127,9 +95,10 @@ object Kernels {
   private[graft] def convDirectScalar(x: Array[Float], batch: Int, seqLen: Int, chans: Int,
                                       kernel: Int, pad: Int, w: Array[Float], filters: Int,
                                       st: ConvStore, ws: Workspace): Unit = {
-    // one row at a time, accumulate-in-place over the filters like
-    // gemmDenseScalar; p walks the window flat: +1 per tap, and a jump of
-    // (S+2*pad-kernel) to the next channel's row
+    // one row at a time, accumulate-in-place over the filters: w is walked
+    // once per row in long unit-stride runs, and Math.fma is C2-intrinsified
+    // to the vfmadd the SIMD twin uses; p walks the window flat: +1 per
+    // tap, and a jump of (S+2*pad-kernel) to the next channel's row
     val sg = seqLen + 2 * pad
     val k = chans * kernel
     val acc = ws.f(WS.PROD, filters)
@@ -177,33 +146,38 @@ object Kernels {
   */
 final case class Linear(weight: Array[Float], inDim: Int, outDim: Int,
                         bias: Array[Float]) extends Serializable {
-  // same density dispatch as Conv1d (see its isDense rationale): trained/
-  // production packs are fully dense and big — the SIMD 4-way-group GEMM
+  // trained/production packs are fully dense and big — the SIMD FMA tile
   // is the right physical form there, exactly as the reference's own
   // numpy matmul delegates to BLAS with implementation-defined
   // accumulation order. Rigged synthetic packs (the oracle-checked path)
   // are small AND sparse, so the size floor + density test keep them on
   // the bit-exact sequential kernel by construction.
-  @transient private lazy val dense: Boolean = Kernels.denseWorthy(weight)
+  @transient private lazy val dense: Boolean = Kernels.denseWorthy(weight, 2048)
 
   def apply(input: Array[Float], rows: Int): Array[Float] = {
     val out = new Array[Float](rows * outDim)
-    into(input, rows, out)
+    into(input, rows, out, new Workspace)
     out
   }
 
-  /** write x·W + b into a caller-provided buffer (≥ rows*outDim). */
-  def into(input: Array[Float], rows: Int, out: Array[Float]): Unit = {
-    if (dense) Kernels.gemmDense(input, rows, inDim, weight, outDim, out)
-    else Kernels.gemm(input, rows, inDim, weight, outDim, out)
-    var r = 0
-    while (r < rows) {
-      val off = r * outDim
-      var j = 0
-      while (j < outDim) { out(off + j) += bias(j); j += 1 }
-      r += 1
+  /** write x·W + b into a caller-provided buffer (≥ rows*outDim). Dense
+    * weights run the FMA kernel as a kernel-1 convolution over S = 1 (row
+    * r of x is its own window), whose store adds the bias.
+    */
+  def into(input: Array[Float], rows: Int, out: Array[Float], ws: Workspace): Unit =
+    if (dense)
+      Kernels.convDirect(input, rows, 1, inDim, 1, 0, weight, outDim,
+        new ConvStore(bias, null, null, out, 1, outDim, -1), ws)
+    else {
+      Kernels.gemm(input, rows, inDim, weight, outDim, out)
+      var r = 0
+      while (r < rows) {
+        val off = r * outDim
+        var j = 0
+        while (j < outDim) { out(off + j) += bias(j); j += 1 }
+        r += 1
+      }
     }
-  }
 }
 
 /** 1-D convolution (exec/model.py:71-112) over the ZERO-GUARDED layout.
@@ -252,13 +226,9 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
   // fraction of nonzero weights decides the physical algorithm: rigged
   // synthetic packs are ~99% zeros (tap skipping wins); trained/production
   // packs are fully dense (the direct FMA-tile kernel wins — the tap path's
-  // inner loops are seqLen-short and overhead-bound at 250k taps)
-  @transient private lazy val isDense: Boolean = {
-    var nz = 0
-    var i = 0
-    while (i < weight.length) { if (weight(i) != 0f) nz += 1; i += 1 }
-    nz * 4 > weight.length
-  }
+  // inner loops are seqLen-short and overhead-bound at 250k taps); no size
+  // floor, unlike Linear
+  @transient private lazy val isDense: Boolean = Kernels.denseWorthy(weight, 0)
 
   // weight [F, C*K] transposed to [C*K, F] once — the dense kernel's
   // b-operand (L2-resident at production dims: 990x256 floats = 1 MB)
@@ -347,7 +317,7 @@ object Conv1d {
 /** Where a conv layer's product goes, and the per-element epilogue applied
   * on the way out, fused into that one store. For filter f of row
   * r = b*S + s:
-  *   v = prod + bias(f)
+  *   v = prod + bias(f)   (no add when bias is null)
   *   with norm: v = ((if (v > 0f) v else 0f) - mean(f)) * scale(f) + shift(f)
   *   mask(r) (a PAD position): v = 0f
   * Per element these are the same float expressions, in the same order,
@@ -388,7 +358,8 @@ private[graft] final class ConvStore(
         val po = pOff + rr * rs
         while (q < cols) {
           val j = j0 + q
-          var v = prod(po + q * cs) + bias(j)
+          var v = prod(po + q * cs)
+          if (bias != null) v += bias(j)
           if (mean != null) v = ((if (v > 0f) v else 0f) - mean(j)) * scale(j) + shift(j)
           out(o + q * colStride) = v
           q += 1
@@ -734,8 +705,8 @@ final case class FF(proj: Linear) extends Serializable {
     Kernels.relu(out)
     out
   }
-  def into(input: Array[Float], rows: Int, out: Array[Float]): Unit = {
-    proj.into(input, rows, out)
+  def into(input: Array[Float], rows: Int, out: Array[Float], ws: Workspace): Unit = {
+    proj.into(input, rows, out, ws)
     Kernels.relu(out, rows * proj.outDim)
   }
 }
@@ -760,9 +731,9 @@ final case class SyntaxHead(head: FF, tail: FF, root: Array[Float],
     val withRoot = ws.f(WS.SH_ROOT, batch * s1 * dim)
     SyntaxOps.appendRootInto(input, batch, seqLen, dim, root, withRoot)
     val h = ws.f(WS.SH_H, batch * s1 * hidden)
-    head.into(withRoot, batch * s1, h) // [B,S+1,H]
+    head.into(withRoot, batch * s1, h, ws) // [B,S+1,H]
     val t = ws.f(WS.SH_T, batch * s1 * hidden)
-    tail.into(withRoot, batch * s1, t)
+    tail.into(withRoot, batch * s1, t, ws)
     // x = (h x kernel) x t^T -> [B,S+1,S+1], strip root row.
     // ONE whole-batch gemm instead of a copy + small gemm per item:
     // every output row's accumulation is independent and ordered
@@ -837,7 +808,7 @@ final case class SyntaxHead(head: FF, tail: FF, root: Array[Float],
 final case class SyntaxRel(head: FF, tail: FF, root: Array[Float],
                            kernel: Array[Float], hidden: Int, rels: Int)
     extends Serializable {
-  @transient private lazy val kernelDense: Boolean = Kernels.denseWorthy(kernel)
+  @transient private lazy val kernelDense: Boolean = Kernels.denseWorthy(kernel, 2048)
   /** input [B,S,D], headIds [B,S] (0=root) -> scores [B,S,R] */
   def apply(input: Array[Float], batch: Int, seqLen: Int, dim: Int,
             headIds: Array[Int]): Array[Float] = {
@@ -851,39 +822,22 @@ final case class SyntaxRel(head: FF, tail: FF, root: Array[Float],
     val gathered = ws.f(WS.GATH, batch * seqLen * dim)
     SyntaxOps.gatherHeadInto(input, batch, seqLen, dim, root, headIds, gathered)
     val h = ws.f(WS.SH_H, batch * seqLen * hidden)
-    head.into(gathered, batch * seqLen, h) // [B,S,H]
+    head.into(gathered, batch * seqLen, h, ws) // [B,S,H]
     val t = ws.f(WS.SH_T, batch * seqLen * hidden)
-    tail.into(input, batch * seqLen, t)    // [B,S,H]
+    tail.into(input, batch * seqLen, t, ws)    // [B,S,H]
     // The h x kernel product is the biaffine-rel FLOPs king (H*H*R MACs
-    // per token). Dense trained kernels take ONE whole-batch SIMD GEMM
+    // per token). Dense trained kernels take ONE whole-batch FMA product
     // (per-output-row independence makes batching exact; BLAS-order like
-    // the reference's einsum); rigged sparse packs keep the old per-item
-    // sequential gemm — there the hk tile is a few KB and stays L1-hot,
-    // which measured faster than one batch-wide buffer.
+    // the reference's einsum) through a store that adds no bias (a zero
+    // bias would turn -0f into +0f); rigged sparse packs keep the old
+    // per-item sequential gemm — there the hk tile is a few KB and stays
+    // L1-hot, which measured faster than one batch-wide buffer.
     if (kernelDense) {
       val hk = ws.f(WS.SH_HK, batch * seqLen * hidden * rels)
-      Kernels.gemmDense(h, batch * seqLen, hidden, kernel, hidden * rels, hk)
+      Kernels.convDirect(h, batch * seqLen, 1, hidden, 1, 0, kernel, hidden * rels,
+        new ConvStore(null, null, null, hk, 1, hidden * rels, -1), ws)
       var b = 0
-      while (b < batch) {
-        // out[s,r] = hk[b,s, r*hidden:(r+1)*hidden] . t[b,s,:]
-        // NOTE kernel layout is [H, H*R]; numpy reshape of the product row
-        // (len H*R) to [R,H] means rel r occupies columns [r*H, (r+1)*H)
-        var s = 0
-        while (s < seqLen) {
-          val tOff = (b * seqLen + s) * hidden
-          var r = 0
-          while (r < rels) {
-            var d = 0
-            var acc = 0f
-            val hkOff = (b * seqLen + s) * hidden * rels + r * hidden
-            while (d < hidden) { acc += hk(hkOff + d) * t(tOff + d); d += 1 }
-            out((b * seqLen + s) * rels + r) = acc
-            r += 1
-          }
-          s += 1
-        }
-        b += 1
-      }
+      while (b < batch) { relDots(hk, b * seqLen, t, b, seqLen, out); b += 1 }
     } else {
       val hk = ws.f(WS.SH_HK, seqLen * hidden * rels)
       val hBlock = ws.f(WS.SH_HB, seqLen * hidden)
@@ -891,22 +845,32 @@ final case class SyntaxRel(head: FF, tail: FF, root: Array[Float],
       while (b < batch) {
         System.arraycopy(h, b * seqLen * hidden, hBlock, 0, seqLen * hidden)
         Kernels.gemm(hBlock, seqLen, hidden, kernel, hidden * rels, hk)
-        var s = 0
-        while (s < seqLen) {
-          val tOff = (b * seqLen + s) * hidden
-          var r = 0
-          while (r < rels) {
-            var d = 0
-            var acc = 0f
-            val hkOff = s * hidden * rels + r * hidden
-            while (d < hidden) { acc += hk(hkOff + d) * t(tOff + d); d += 1 }
-            out((b * seqLen + s) * rels + r) = acc
-            r += 1
-          }
-          s += 1
-        }
+        relDots(hk, 0, t, b, seqLen, out)
         b += 1
       }
+    }
+  }
+
+  /** out[b,s,r] = hk[row0+s, r*hidden:(r+1)*hidden] . t[b,s,:] for every
+    * s < seqLen and rel r. NOTE kernel layout is [H, H*R]; numpy reshape
+    * of the product row (len H*R) to [R,H] means rel r occupies columns
+    * [r*H, (r+1)*H).
+    */
+  private def relDots(hk: Array[Float], row0: Int, t: Array[Float], b: Int, seqLen: Int,
+                      out: Array[Float]): Unit = {
+    var s = 0
+    while (s < seqLen) {
+      val tOff = (b * seqLen + s) * hidden
+      var r = 0
+      while (r < rels) {
+        var d = 0
+        var acc = 0f
+        val hkOff = (row0 + s) * hidden * rels + r * hidden
+        while (d < hidden) { acc += hk(hkOff + d) * t(tOff + d); d += 1 }
+        out((b * seqLen + s) * rels + r) = acc
+        r += 1
+      }
+      s += 1
     }
   }
 

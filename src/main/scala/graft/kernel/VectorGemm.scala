@@ -2,32 +2,34 @@ package graft.kernel
 
 import jdk.incubator.vector.{FloatVector, VectorOperators, VectorSpecies}
 
-/** SIMD twins of the scalar dense kernels (Kernels.gemmDenseScalar,
-  * Kernels.convDirectScalar), built on the JDK Vector API (16 f32 lanes
-  * with AVX-512): the dense GEMM of the Linear and biaffine weights,
-  * and the direct convolution of the dense CNN encoder.
+/** SIMD twin of the scalar dense kernel (Kernels.convDirectScalar), built
+  * on the JDK Vector API (16 f32 lanes with AVX-512): the one dense FMA
+  * register tile. It runs the direct convolution of the dense CNN encoder
+  * and, as a kernel-1 convolution over S = 1, the dense products of the
+  * Linear and biaffine-rel weights.
   *
   * BIT-EXACT CONTRACT: per-output-element arithmetic — operation order and
   * per-op rounding — is IDENTICAL to the scalar path. Lanes are independent
   * output columns; every element accumulates its k terms in ascending-k
   * order as FUSED multiply-adds (one rounding per term):
-  *   acc_p = fma(a[i,p], b[p,j], acc_{p-1}),  acc_{-1} = 0.
-  * The scalar twins use java.lang.Math.fma, which C2 intrinsifies to the
+  *   acc_p = fma(a[i,p], w[p,j], acc_{p-1}),  acc_{-1} = 0.
+  * The scalar twin uses java.lang.Math.fma, which C2 intrinsifies to the
   * same vfmadd instruction, so the two paths agree bit-for-bit (KernelSpec
-  * asserts it on all tail shapes). The dense paths serve only dense
+  * asserts it on all tail shapes). The dense path serves only dense
   * trained/production weights, where the reference's own numpy matmul
   * delegates to BLAS with an implementation-defined accumulation order —
   * FMA is as faithful as any; the rigged sparse packs (the oracle-checked
   * toy path) keep the sequential mul-then-add kernels.
   *
-  * gemmDense layout: a[m,k] row-major, b[k,n] row-major (pre-transposed
-  * weight), out[m,n]. convDirect is the same product with row i of `a`
-  * being the conv window of position i (exec/model.py:97-108's im2col
-  * row), read in place from the zero-guarded activation tensor (see
-  * Conv1d) instead of from a copied im2col buffer.
+  * Layout: w[k,n] row-major (pre-transposed weight). Row i of the virtual
+  * im2col matrix `a` is the conv window of position i (exec/model.py:97-108's
+  * im2col row), read in place from the zero-guarded activation tensor (see
+  * Conv1d) instead of from a copied im2col buffer. A plain GEMM
+  * a[m,k] x w[k,n] is the case batch = m, seqLen = 1, chans = k,
+  * kernel = 1, pad = 0: row i is then a(i*k until (i+1)*k).
   *
   * Register blocking: 4 output rows x 4 vectors (4x64 floats at AVX-512)
-  * held in registers across the whole k loop — each loaded b vector feeds
+  * held in registers across the whole k loop — each loaded w vector feeds
   * four rows, and the 16 independent accumulator chains cover the FMA
   * latency-bandwidth product.
   */
@@ -38,132 +40,7 @@ private[graft] object VectorGemm {
   /** Used by Kernels to decide dispatch once at class-load. */
   def lanes: Int = L
 
-  def gemmDense(a: Array[Float], m: Int, k: Int, b: Array[Float], n: Int,
-                out: Array[Float]): Unit = {
-    val n4v = n - n % (4 * L) // columns covered by 4-vector tiles
-    val n1v = n - n % L       // columns covered by single-vector tiles
-    var i = 0
-    // --- 4 rows x 4 vectors register tile
-    while (i + 4 <= m) {
-      val aA = i * k; val aB = aA + k; val aC = aB + k; val aD = aC + k
-      val oA = i * n; val oB = oA + n; val oC = oB + n; val oD = oC + n
-      var j = 0
-      while (j < n4v) {
-        var acc00 = FloatVector.zero(SP); var acc01 = FloatVector.zero(SP)
-        var acc02 = FloatVector.zero(SP); var acc03 = FloatVector.zero(SP)
-        var acc10 = FloatVector.zero(SP); var acc11 = FloatVector.zero(SP)
-        var acc12 = FloatVector.zero(SP); var acc13 = FloatVector.zero(SP)
-        var acc20 = FloatVector.zero(SP); var acc21 = FloatVector.zero(SP)
-        var acc22 = FloatVector.zero(SP); var acc23 = FloatVector.zero(SP)
-        var acc30 = FloatVector.zero(SP); var acc31 = FloatVector.zero(SP)
-        var acc32 = FloatVector.zero(SP); var acc33 = FloatVector.zero(SP)
-        var p = 0
-        while (p < k) {
-          val vA = FloatVector.broadcast(SP, a(aA + p))
-          val vB = FloatVector.broadcast(SP, a(aB + p))
-          val vC = FloatVector.broadcast(SP, a(aC + p))
-          val vD = FloatVector.broadcast(SP, a(aD + p))
-          val b0 = p * n + j
-          val t0 = FloatVector.fromArray(SP, b, b0)
-          val t1 = FloatVector.fromArray(SP, b, b0 + L)
-          val t2 = FloatVector.fromArray(SP, b, b0 + 2 * L)
-          val t3 = FloatVector.fromArray(SP, b, b0 + 3 * L)
-          acc00 = t0.fma(vA, acc00); acc01 = t1.fma(vA, acc01)
-          acc02 = t2.fma(vA, acc02); acc03 = t3.fma(vA, acc03)
-          acc10 = t0.fma(vB, acc10); acc11 = t1.fma(vB, acc11)
-          acc12 = t2.fma(vB, acc12); acc13 = t3.fma(vB, acc13)
-          acc20 = t0.fma(vC, acc20); acc21 = t1.fma(vC, acc21)
-          acc22 = t2.fma(vC, acc22); acc23 = t3.fma(vC, acc23)
-          acc30 = t0.fma(vD, acc30); acc31 = t1.fma(vD, acc31)
-          acc32 = t2.fma(vD, acc32); acc33 = t3.fma(vD, acc33)
-          p += 1
-        }
-        acc00.intoArray(out, oA + j); acc01.intoArray(out, oA + j + L)
-        acc02.intoArray(out, oA + j + 2 * L); acc03.intoArray(out, oA + j + 3 * L)
-        acc10.intoArray(out, oB + j); acc11.intoArray(out, oB + j + L)
-        acc12.intoArray(out, oB + j + 2 * L); acc13.intoArray(out, oB + j + 3 * L)
-        acc20.intoArray(out, oC + j); acc21.intoArray(out, oC + j + L)
-        acc22.intoArray(out, oC + j + 2 * L); acc23.intoArray(out, oC + j + 3 * L)
-        acc30.intoArray(out, oD + j); acc31.intoArray(out, oD + j + L)
-        acc32.intoArray(out, oD + j + 2 * L); acc33.intoArray(out, oD + j + 3 * L)
-        j += 4 * L
-      }
-      while (j < n1v) {
-        var accA = FloatVector.zero(SP); var accB = FloatVector.zero(SP)
-        var accC = FloatVector.zero(SP); var accD = FloatVector.zero(SP)
-        var p = 0
-        while (p < k) {
-          val t = FloatVector.fromArray(SP, b, p * n + j)
-          accA = t.fma(FloatVector.broadcast(SP, a(aA + p)), accA)
-          accB = t.fma(FloatVector.broadcast(SP, a(aB + p)), accB)
-          accC = t.fma(FloatVector.broadcast(SP, a(aC + p)), accC)
-          accD = t.fma(FloatVector.broadcast(SP, a(aD + p)), accD)
-          p += 1
-        }
-        accA.intoArray(out, oA + j); accB.intoArray(out, oB + j)
-        accC.intoArray(out, oC + j); accD.intoArray(out, oD + j)
-        j += L
-      }
-      while (j < n) {
-        var sA = 0f; var sB = 0f; var sC = 0f; var sD = 0f
-        var p = 0
-        while (p < k) {
-          val t = b(p * n + j)
-          sA = Math.fma(a(aA + p), t, sA); sB = Math.fma(a(aB + p), t, sB)
-          sC = Math.fma(a(aC + p), t, sC); sD = Math.fma(a(aD + p), t, sD)
-          p += 1
-        }
-        out(oA + j) = sA; out(oB + j) = sB
-        out(oC + j) = sC; out(oD + j) = sD
-        j += 1
-      }
-      i += 4
-    }
-    // --- remainder rows, one at a time (same per-element order)
-    while (i < m) {
-      val aOff = i * k
-      val oOff = i * n
-      var j = 0
-      while (j < n4v) {
-        var acc0 = FloatVector.zero(SP); var acc1 = FloatVector.zero(SP)
-        var acc2 = FloatVector.zero(SP); var acc3 = FloatVector.zero(SP)
-        var p = 0
-        while (p < k) {
-          val v = FloatVector.broadcast(SP, a(aOff + p))
-          val b0 = p * n + j
-          acc0 = FloatVector.fromArray(SP, b, b0).fma(v, acc0)
-          acc1 = FloatVector.fromArray(SP, b, b0 + L).fma(v, acc1)
-          acc2 = FloatVector.fromArray(SP, b, b0 + 2 * L).fma(v, acc2)
-          acc3 = FloatVector.fromArray(SP, b, b0 + 3 * L).fma(v, acc3)
-          p += 1
-        }
-        acc0.intoArray(out, oOff + j); acc1.intoArray(out, oOff + j + L)
-        acc2.intoArray(out, oOff + j + 2 * L); acc3.intoArray(out, oOff + j + 3 * L)
-        j += 4 * L
-      }
-      while (j < n1v) {
-        var acc = FloatVector.zero(SP)
-        var p = 0
-        while (p < k) {
-          acc = FloatVector.fromArray(SP, b, p * n + j)
-            .fma(FloatVector.broadcast(SP, a(aOff + p)), acc)
-          p += 1
-        }
-        acc.intoArray(out, oOff + j)
-        j += L
-      }
-      while (j < n) {
-        var s = 0f
-        var p = 0
-        while (p < k) { s = Math.fma(a(aOff + p), b(p * n + j), s); p += 1 }
-        out(oOff + j) = s
-        j += 1
-      }
-      i += 1
-    }
-  }
-
-  /** Direct convolution with the gemmDense register tile (see
+  /** Direct convolution with the 4x4-vector register tile (see
     * Kernels.convDirect for the contract). Row i of the virtual im2col
     * matrix starts at x offset rowBase(i) = b*chans*sg + s; its element p
     * sits at rowBase(i) + off, where off steps by 1 per tap and by
@@ -171,7 +48,9 @@ private[graft] object VectorGemm {
     * carried across nested channel/tap loops, the vector accumulators got
     * boxed by C2 (17x slower in a prototype). Each finished tile is spilled
     * to ws(WS.PROD); [[putTile]] runs the epilogue on it lanes at a time
-    * (scalar column tails go through `st.put`).
+    * (scalar column tails go through `st.put`; filling the tile with the
+    * whole tail and storing it with one `st.put` per row block measured
+    * slower at the 1280x64x60 morph projection).
     */
   def convDirect(x: Array[Float], batch: Int, seqLen: Int, chans: Int, kernel: Int,
                  pad: Int, w: Array[Float], n: Int, st: ConvStore, ws: Workspace): Unit = {
@@ -320,9 +199,10 @@ private[graft] object VectorGemm {
 
   /** ConvStore.put over full vectors: rows r0 until r0+rows of the spilled
     * tile (row stride ts), filters j0 until j0+cols (cols a multiple of L).
-    * Per lane the same IEEE operations as put — add, select, sub, mul,
-    * add, none fused — so the bits match; the select (compare + blend)
-    * is `if (v > 0f) v else 0f` exactly, NaN and -0f included. A guarded
+    * Per lane the same IEEE operations as put — add (none without a
+    * bias), select, sub, mul, add, none fused — so the bits match; the
+    * select (compare + blend) is `if (v > 0f) v else 0f` exactly, NaN and
+    * -0f included. A guarded
     * output is strided per filter: the vector goes back into its tile slot
     * and out lane by lane (the Vector API scatter store gave run-to-run
     * different results under C2 on JDK 17).
@@ -342,7 +222,8 @@ private[graft] object VectorGemm {
         val j = j0 + q
         var v = zero
         if (!masked) {
-          v = FloatVector.fromArray(SP, tile, rr * ts + q).add(FloatVector.fromArray(SP, st.bias, j))
+          v = FloatVector.fromArray(SP, tile, rr * ts + q)
+          if (st.bias != null) v = v.add(FloatVector.fromArray(SP, st.bias, j))
           if (st.mean != null)
             v = zero.blend(v, v.compare(VectorOperators.GT, 0f))
               .sub(FloatVector.fromArray(SP, st.mean, j))

@@ -45,7 +45,8 @@ object WS {
   val ENC_A = 2      // guarded CNN layer output, ping
   val ENC_B = 3      // guarded CNN layer output, pong
   val PROD = 4       // conv product on its way to the epilogue: dense tile spill
-                     // or scalar row, sparse per-item [F,S] (live within one layer)
+                     // or scalar row, sparse per-item [F,S] (live within one
+                     // layer or one dense Linear/rel product)
   val ENC_OUT = 5    // [B,S,C] encoder output, written by the last layer
                      // (live until the model's heads consume it)
   val NER_OUT = 6    // NER emissions (live until CRF decode)

@@ -113,32 +113,9 @@ object Pipeline {
   private def inferTokenized(batch: Seq[SentRow], toks: Array[Array[Token]],
                              pack: ModelPack, ws: Workspace): Seq[ParsedSent] = {
     val n = batch.length
-    val seqLen = math.max(1, toks.iterator.map(_.length).max)
-    val ns = n * seqLen
-    val wordIds = ws.i(WS.WORD_IDS, ns)
-    val shapeIds = ws.i(WS.SHAPE_IDS, ns)
-    val padMask = ws.b(WS.PAD_MASK, ns)
-    val valid = ws.b(WS.VALID, ns)
-    val wv = pack.wordVocab
-    val shapeByOrd = pack.shapeIdByOrdinal
-    java.util.Arrays.fill(wordIds, 0, ns, wv.padId)
-    java.util.Arrays.fill(shapeIds, 0, ns, pack.shapeVocab.padId)
-    var b = 0
-    while (b < n) {
-      val ts = toks(b)
-      var s = 0
-      while (s < seqLen) {
-        val p = b * seqLen + s
-        if (s < ts.length) {
-          val w = ts(s).text
-          wordIds(p) = wv.encodeLower(w)
-          shapeIds(p) = shapeByOrd(Shape.shapeOrdinal(w))
-          padMask(p) = false; valid(p) = true
-        } else { padMask(p) = true; valid(p) = false }
-        s += 1
-      }
-      b += 1
-    }
+    val seqLen = pack.encode(toks, (t: Token) => t.text, ws)
+    val padMask = ws.b(WS.PAD_MASK, n * seqLen)
+    val valid = ws.b(WS.VALID, n * seqLen)
 
     // shared embedding + guarded transpose computed ONCE for all 3 trunks
     // when the pack shares the instance (navec weight sharing)
@@ -159,7 +136,7 @@ object Pipeline {
       n, seqLen, padMask, valid, ws)
 
     val out = new ArrayBuffer[ParsedSent](n)
-    b = 0
+    var b = 0
     while (b < n) {
       val row = batch(b)
       val ts = toks(b)

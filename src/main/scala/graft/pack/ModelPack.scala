@@ -124,7 +124,7 @@ final case class NerModel(emb: WordShapeEmbedding, encoder: CNNEncoder,
                padMask: Array[Boolean], ws: Workspace): Array[Float] = {
     val enc = encoder.forwardT(xT, batch, seqLen, padMask, ws)
     val out = ws.f(WS.NER_OUT, batch * seqLen * proj.outDim)
-    proj.into(enc, batch * seqLen, out)
+    proj.into(enc, batch * seqLen, out, ws)
     out
   }
 }
@@ -146,7 +146,7 @@ final case class MorphModel(emb: WordShapeEmbedding, encoder: CNNEncoder,
                padMask: Array[Boolean], ws: Workspace): Array[Float] = {
     val enc = encoder.forwardT(xT, batch, seqLen, padMask, ws)
     val out = ws.f(WS.MORPH_OUT, batch * seqLen * proj.outDim)
-    proj.into(enc, batch * seqLen, out)
+    proj.into(enc, batch * seqLen, out, ws)
     out
   }
 }
@@ -233,6 +233,45 @@ final case class ModelPack(
     */
   @transient lazy val shapeIdByOrdinal: Array[Int] =
     graft.text.Shape.SHAPES.map(shapeVocab.encode).toArray
+
+  /** Rectangular encode of pre-tokenized items (exec/encoders.py:25-49)
+    * into ws(WS.WORD_IDS), ws(WS.SHAPE_IDS), ws(WS.PAD_MASK) and
+    * ws(WS.VALID), [items.length * seqLen], pads filled with the pad ids;
+    * `text` reads a token's word. Returns seqLen (the longest item, >= 1).
+    */
+  private[graft] def encode[T <: AnyRef](items: Array[Array[T]], text: T => String,
+                                        ws: Workspace): Int = {
+    val n = items.length
+    var seqLen = 1
+    var i = 0
+    while (i < n) { if (items(i).length > seqLen) seqLen = items(i).length; i += 1 }
+    val ns = n * seqLen
+    val wordIds = ws.i(WS.WORD_IDS, ns)
+    val shapeIds = ws.i(WS.SHAPE_IDS, ns)
+    val padMask = ws.b(WS.PAD_MASK, ns)
+    val valid = ws.b(WS.VALID, ns)
+    val wv = wordVocab
+    val shapeByOrd = shapeIdByOrdinal
+    java.util.Arrays.fill(wordIds, 0, ns, wv.padId)
+    java.util.Arrays.fill(shapeIds, 0, ns, shapeVocab.padId)
+    i = 0
+    while (i < n) {
+      val ts = items(i)
+      var s = 0
+      while (s < seqLen) {
+        val p = i * seqLen + s
+        if (s < ts.length) {
+          val w = text(ts(s))
+          wordIds(p) = wv.encodeLower(w)
+          shapeIds(p) = shapeByOrd(graft.text.Shape.shapeOrdinal(w))
+          padMask(p) = false; valid(p) = true
+        } else { padMask(p) = true; valid(p) = false }
+        s += 1
+      }
+      i += 1
+    }
+    seqLen
+  }
 
   /** all three task models share one embedding instance (navec weight
     * sharing, exec/model.py:536-557) and one encoder input guard — then

@@ -122,21 +122,27 @@ class KernelSpec extends AnyFunSuite {
       naive(wSparse, bias, in).toSeq)
   }
 
-  test("SIMD gemmDense is bit-identical to the scalar kernel (all tail shapes)") {
+  test("SIMD dense GEMM (kernel-1 convDirect) is bit-identical to the scalar twin") {
     assert(Kernels.simdAvailable, "vector module missing in test JVM")
     val rnd = new java.util.Random(11)
+    val (ws1, ws2) = (new Workspace, new Workspace)
     // shapes hit: 4-vector tiles, 1-vector tiles, scalar column tails,
-    // odd final row, k%4 remainders, tiny-n
+    // odd final row, k%4 remainders, tiny-n; then the ref-dims morph
+    // projection, FF and biaffine-rel products
     for ((m, k, n) <- Seq((5, 7, 3), (2, 990, 256), (3, 768, 128), (7, 33, 65),
                           (1, 5, 17), (4, 384, 64), (9, 13, 100), (2, 4, 130),
-                          (6, 50, 96), (8, 990, 256), (5, 7, 40))) {
+                          (6, 50, 96), (8, 990, 256), (5, 7, 40),
+                          (1280, 64, 60), (1344, 64, 32), (1280, 32, 1280))) {
       val a = Array.fill(m * k)(rnd.nextFloat() * 2 - 1)
       val b = Array.fill(k * n)(rnd.nextFloat() * 2 - 1)
-      val o1 = new Array[Float](m * n)
-      val o2 = Array.fill(m * n)(Float.NaN) // scalar path must overwrite all
-      VectorGemm.gemmDense(a, m, k, b, n, o1)
-      Kernels.gemmDenseScalar(a, m, k, b, n, o2)
-      assert(java.util.Arrays.equals(o1, o2), s"mismatch at m=$m k=$k n=$n")
+      val o1 = Array.fill(m * n)(Float.NaN) // both paths must overwrite all
+      val o2 = Array.fill(m * n)(Float.NaN)
+      // GEMM = convolution with seqLen 1, chans k, kernel 1, pad 0; no bias
+      VectorGemm.convDirect(a, m, 1, k, 1, 0, b, n,
+        new ConvStore(null, null, null, o1, 1, n, -1), ws1)
+      Kernels.convDirectScalar(a, m, 1, k, 1, 0, b, n,
+        new ConvStore(null, null, null, o2, 1, n, -1), ws2)
+      assert(bitsEqual(o1, o2, m * n), s"mismatch at m=$m k=$k n=$n")
     }
   }
 
@@ -171,6 +177,38 @@ class KernelSpec extends AnyFunSuite {
         "rel19,rel19,rel19,rel19,rel19",
         "P0,P0,P55,P39,P55,P39,P55,P39,P55,P39,P55,P0,P0,P50,P6")),
       s"got $golden")
+  }
+
+  test("reference-dims pack: SHA-256 of the raw forwardT score bits") {
+    // the golden sentences above, one batch; pins every dense product
+    // (morph projection, FF, biaffine rel) bit for bit, not only its argmax
+    val pack = graft.pack.SynthPack.buildRandom(graft.pack.SynthPack.Dims(vocab = 2000))
+    val words = Array(
+      "w000017 w000420 w001999 w000001.",
+      "Иван Петров купил завод в Москве.",
+      "w000100 w000200 w000300 w000400 w000500 w000600 w000700.")
+      .map(t => graft.text.Tokenizer.tokenize(t).map(_.text))
+    val ws = new Workspace
+    val n = words.length
+    val seqLen = pack.encode(words, (w: String) => w, ws)
+    val ns = n * seqLen
+    val pad = ws.b(WS.PAD_MASK, ns)
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    def add(a: Array[Float], len: Int): Unit = {
+      val bb = java.nio.ByteBuffer.allocate(4 * len) // big-endian raw bits
+      (0 until len).foreach(i => bb.putInt(java.lang.Float.floatToRawIntBits(a(i))))
+      sha.update(bb.array())
+    }
+    add(pack.ner.forwardT(pack.ner.encoder.embT(pack.ner.emb, n, seqLen, ws), n, seqLen, pad, ws),
+      ns * pack.ner.proj.outDim)
+    add(pack.morph.forwardT(pack.morph.encoder.embT(pack.morph.emb, n, seqLen, ws), n, seqLen,
+      pad, ws), ns * pack.morph.proj.outDim)
+    pack.syntax.forwardT(pack.syntax.encoder.embT(pack.syntax.emb, n, seqLen, ws), n, seqLen, pad,
+      ws.b(WS.VALID, ns), ws)
+    add(ws.f(WS.HEAD_SC, ns * (seqLen + 1)), ns * (seqLen + 1))
+    add(ws.f(WS.REL_SC, ns * pack.syntax.rel.rels), ns * pack.syntax.rel.rels)
+    val hex = sha.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(hex == "cd546d7ec7096ff7afe19c1753ee81816d2d2c5b350a028568eb5cfec586808e")
   }
 
   test("SyntaxHead/SyntaxRel rigged pack semantics on one sentence") {
@@ -244,8 +282,12 @@ class KernelSpec extends AnyFunSuite {
   private val genF = Gen.frequency(1 -> Gen.choose(1, lanes - 1),
     3 -> Gen.choose(lanes, 8 * lanes + 3))
   private val genK = Gen.oneOf(1, 3, 5)
+  private val genOn = Gen.oneOf(true, false)
 
-  /** The seed's dense conv: im2col [B*S, C*K] + gemmDense + bias, [B,F,S]. */
+  /** The seed's dense conv: im2col [B*S, C*K] + GEMM + bias, [B,F,S]. The
+    * GEMM accumulates each output over p ascending with Math.fma, the dense
+    * kernel's contract.
+    */
   private def im2colConv(w: Array[Float], bias: Array[Float], in: Array[Float],
                          bN: Int, sN: Int, cN: Int, fN: Int, kN: Int): Array[Float] = {
     val ck = cN * kN
@@ -256,13 +298,14 @@ class KernelSpec extends AnyFunSuite {
       col((b * sN + s) * ck + c * kN + t) =
         if (si >= 0 && si < sN) in((b * cN + c) * sN + si) else 0f
     }
-    val wT = new Array[Float](ck * fN)
-    for (f <- 0 until fN; p <- 0 until ck) wT(p * fN + f) = w(f * ck + p)
-    val tmp = new Array[Float](bN * sN * fN)
-    Kernels.gemmDense(col, bN * sN, ck, wT, fN, tmp)
     val out = new Array[Float](bN * fN * sN)
-    for (b <- 0 until bN; f <- 0 until fN; s <- 0 until sN)
-      out((b * fN + f) * sN + s) = tmp((b * sN + s) * fN + f) + bias(f)
+    for (b <- 0 until bN; f <- 0 until fN; s <- 0 until sN) {
+      val r = (b * sN + s) * ck
+      var acc = 0f
+      var p = 0
+      while (p < ck) { acc = Math.fma(col(r + p), w(f * ck + p), acc); p += 1 }
+      out((b * fN + f) * sN + s) = acc + bias(f)
+    }
     out
   }
 
@@ -288,7 +331,7 @@ class KernelSpec extends AnyFunSuite {
   private def randArr(rnd: java.util.Random, n: Int): Array[Float] =
     Array.fill(n)(rnd.nextFloat() * 2 - 1)
 
-  test("property: direct dense conv == im2col + gemmDense + bias, bit for bit") {
+  test("property: direct dense conv == im2col + FMA GEMM + bias, bit for bit") {
     check("direct-vs-im2col", Prop.forAll(Gen.choose(1, 5), genS, Gen.choose(1, 40), genF,
         genK, Gen.long) { (bN, sN, cN, fN, kN, seed) =>
       val rnd = new java.util.Random(seed)
@@ -305,17 +348,22 @@ class KernelSpec extends AnyFunSuite {
     val ws1 = new Workspace
     val ws2 = new Workspace
     check("simd-vs-scalar", Prop.forAll(Gen.choose(1, 5), genS, Gen.choose(1, 40), genF,
-        genK, Gen.oneOf(-1, 0, 1, 2), Gen.long) { (bN, sN, cN, fN, kN, outPad, seed) =>
+        genK, Gen.oneOf(-1, 0, 1, 2), Gen.zip(genOn, genOn, genOn), Gen.long) {
+        (bN, sN, cN, fN, kN, outPad, withBiasNormMask, seed) =>
+      // absent bias, norm or mask: the stores of Linear (bias only) and of
+      // the biaffine-rel product (nothing)
+      val (withBias, withNorm, withMask) = withBiasNormMask
       val rnd = new java.util.Random(seed)
       val pad = kN / 2
       val sg = sN + 2 * pad
       val x = new Array[Float](bN * cN * sg)
       for (bc <- 0 until bN * cN; s <- 0 until sN) x(bc * sg + pad + s) = rnd.nextFloat() * 2 - 1
       val w = randArr(rnd, cN * kN * fN)
-      val bias = randArr(rnd, fN)
-      val norm = BatchNorm1d(randArr(rnd, fN), randArr(rnd, fN), randArr(rnd, fN),
-        Array.fill(fN)(0.5f + rnd.nextFloat()))
-      val mask = Array.fill(bN * sN)(rnd.nextInt(4) == 0)
+      val bias = if (withBias) randArr(rnd, fN) else null
+      val norm = if (!withNorm) null
+        else BatchNorm1d(randArr(rnd, fN), randArr(rnd, fN), randArr(rnd, fN),
+          Array.fill(fN)(0.5f + rnd.nextFloat()))
+      val mask = if (withMask) Array.fill(bN * sN)(rnd.nextInt(4) == 0) else null
       val n = if (outPad < 0) bN * sN * fN else bN * fN * (sN + 2 * outPad)
       val o1 = Array.fill(n)(Float.NaN)
       val o2 = Array.fill(n)(Float.NaN)
