@@ -1,7 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each catalog query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  * args = sfDir outDir [query ...]; the optional names restrict the run.
+  * Every query runs even when an earlier one fails; the run then prints
+  * failed/attempted and exits 1 if any query failed (an unknown name
+  * counts as a failure).
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
@@ -19,18 +24,23 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    val unknown = only -- SparkEntry.catalog.keySet
+    unknown.foreach(name => System.err.println(s"[verify] $name failed: unknown query"))
+    val runs = SparkEntry.catalog.filter { case (name, _) => only.isEmpty || only.contains(name) }
+    val failed = unknown.size + runs.count { case (name, query) =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        query.build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        false
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        true
       }
     }
     spark.stop()
+    System.err.println(s"[verify] $failed/${runs.size + unknown.size} failed")
+    if (failed > 0) sys.exit(1)
   }
 }

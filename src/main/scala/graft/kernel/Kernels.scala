@@ -900,13 +900,6 @@ final case class SyntaxRel(head: FF, tail: FF, root: Array[Float],
 
 object SyntaxOps {
   /** Prepend learned ROOT vector (exec/model.py:364-371): [B,S,D] -> [B,S+1,D]. */
-  def appendRoot(input: Array[Float], batch: Int, seqLen: Int, dim: Int,
-                 root: Array[Float]): Array[Float] = {
-    val out = new Array[Float](batch * (seqLen + 1) * dim)
-    appendRootInto(input, batch, seqLen, dim, root, out)
-    out
-  }
-
   def appendRootInto(input: Array[Float], batch: Int, seqLen: Int, dim: Int,
                      root: Array[Float], out: Array[Float]): Unit = {
     val s1 = seqLen + 1
@@ -919,13 +912,6 @@ object SyntaxOps {
   }
 
   /** Select per-token predicted-head vectors (exec/model.py:415-427). */
-  def gatherHead(input: Array[Float], batch: Int, seqLen: Int, dim: Int,
-                 root: Array[Float], headIds: Array[Int]): Array[Float] = {
-    val out = new Array[Float](batch * seqLen * dim)
-    gatherHeadInto(input, batch, seqLen, dim, root, headIds, out)
-    out
-  }
-
   def gatherHeadInto(input: Array[Float], batch: Int, seqLen: Int, dim: Int,
                      root: Array[Float], headIds: Array[Int],
                      out: Array[Float]): Unit = {

@@ -497,6 +497,10 @@ object Analytics {
     * hop (eager localCheckpoint) so the plan stays O(1) deep; the edge
     * set is persisted once and reused by every hop.
     *
+    * The superstep is [[shortestPathForest]]'s, with its parent column
+    * dropped: the forest's min(struct(dist, parent)) keeps the same
+    * minimum dist per entity.
+    *
     * No driver-local fast path here (unlike pageRank/labelProp): with
     * maxHops small the distributed loop is a handful of narrow jobs and
     * the local twin would add a second code path for no measured win.
@@ -504,20 +508,7 @@ object Analytics {
   def bfsDistances(triples: DataFrame, seeds: DataFrame, maxHops: Int,
                    undirected: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"bfsDistances: maxHops must be >= 1, got $maxHops")
-    val edges = edgeSet(triples, undirected).persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = seeds.select(col("entity_id")).distinct()
-      .withColumn("dist", lit(0))
-      .localCheckpoint()
-    for (i <- 1 to maxHops) {
-      val frontier = dist.where(col("dist") === i - 1)
-      val next = frontier.join(edges, frontier("entity_id") === edges("src"))
-        .select(edges("dst").as("entity_id"), lit(i).as("dist"))
-      dist = dist.unionByName(next)
-        .groupBy("entity_id").agg(min("dist").as("dist"))
-        .localCheckpoint()
-    }
-    edges.unpersist()
-    dist
+    shortestPathForest(triples, seeds, maxHops, undirected).select("entity_id", "dist")
   }
 
   /** Entity similarity by shared neighborhood: Jaccard over undirected

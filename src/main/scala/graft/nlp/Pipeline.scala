@@ -31,19 +31,6 @@ object Pipeline {
     */
   val DefaultMaxSeqLen = 256
 
-  /** Batched inference over one partition iterator — the Spark analogue of
-    * the reference's generator pipeline (exec/infer.py:37-51): lazy, bounded
-    * memory, model state pinned per executor via the broadcast value.
-    * Batching mirrors `chop` (api.py:33-35); callers should length-bucket
-    * upstream (sortWithinPartitions) to minimize pad waste
-    * (encoders/buffer.py:38-47).
-    */
-  def inferPartition(rows: Iterator[SentRow], pack: ModelPack,
-                     batchSize: Int): Iterator[ParsedSent] = {
-    val ws = new Workspace
-    rows.grouped(batchSize).flatMap(batch => inferBatch(batch, pack, ws))
-  }
-
   def inferBatch(batch: Seq[SentRow], pack: ModelPack): Seq[ParsedSent] =
     inferBatch(batch, pack, new Workspace)
 

@@ -52,14 +52,6 @@ object TextStats {
       when(cyr > lat, "ru").when(lat > 0, "en").otherwise("unk").as("lang_pred"))
   }
 
-  /** Rolling-hash document fingerprint (native codegen expression) +
-    * md5 content fingerprint of the token-normalized text.
-    */
-  def fingerprints(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      F.poly_hash(col("text")).as("poly_fp"),
-      md5(array_join(tokens(F.lower_simple(col("text"))), " ")).as("norm_fp"))
-
   /** Gopher/C4-style repetition metrics, entirely ROW-LOCAL (no shuffle,
     * stays inside whole-stage codegen): dup_word_ratio = 1 − distinct/total
     * words; top_bigram_ratio = occurrences of the most frequent adjacent
@@ -1273,12 +1265,6 @@ object Dedup {
     }
     p
   }
-  /** Drop all cached shingle tables (call after materializing results). */
-  def unpersistShingles(): Unit = {
-    var old = liveShingles.poll()
-    while (old != null) { old.unpersist(blocking = false); old = liveShingles.poll() }
-  }
-
   /** Distinct (doc, shingle) pairs of n-token shingles (shingle = the
     * joined token text — required where the downstream hash must be
     * oracle-reproducible, i.e. the MinHash md5 base hash). */
@@ -1470,21 +1456,11 @@ object Dedup {
   private[graft] def baseHash(shingle: Column): Column =
     conv(substring(md5(shingle), 1, 15), 16, 10).cast("long") % MinhashP
 
-  /** MinHash signatures: k affine slots mh_k = (a_k*h + b_k) mod P over the
-    * md5 base hash, all k computed in ONE aggregation pass — no k-fold row
-    * explode: the shuffle carries |docs| wide partial rows instead of
-    * |shingles|*k exploded rows (a 32x shuffle-volume cut at defaults, the
-    * difference between viable and not at 100 TB).
-    */
-  def minhashSignatures(docs: DataFrame, n: Int, numHashes: Int): DataFrame = {
-    // long format (doc_id, k, mh) for API compatibility — unpivot AFTER
-    // the aggregation, so the expansion is |docs|*k, not |shingles|*k
-    val wide = signaturesWide(shingles(docs, n), numHashes)
-    val stackArgs = (0 until numHashes).map(k => s"$k, mh_$k").mkString(", ")
-    wide.selectExpr("doc_id", s"stack($numHashes, $stackArgs) AS (k, mh)")
-  }
-
-  /** (doc_id, mh_0..mh_{numHashes-1}): per-slot affine constants are plain
+  /** MinHash signatures (doc_id, mh_0..mh_{numHashes-1}): k affine slots
+    * mh_k = (a_k*h + b_k) mod P over the md5 base hash, all k computed in
+    * ONE aggregation pass — no k-fold row explode: the shuffle carries
+    * |docs| wide partial rows instead of |shingles|*k exploded rows (a 32x
+    * shuffle-volume cut at defaults). Per-slot affine constants are plain
     * Scala longs, arithmetic identical to the previous per-row form.
     */
   private[graft] def signaturesWide(sh: DataFrame, numHashes: Int): DataFrame =

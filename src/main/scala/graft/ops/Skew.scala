@@ -21,19 +21,4 @@ object Skew {
       .agg(count(lit(1)).as("partial"))
       .groupBy("k")
       .agg(sum("partial").as("n"))
-
-  /** Salted broadcast-side replication join for a skewed probe side:
-    * replicate each build row `salts` times with a salt id, add a random
-    * salt to probe rows, join on (key, salt). Keeps one hot key from
-    * landing in a single task when the join must shuffle.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, keyCol: String,
-                 salts: Int): DataFrame = {
-    val saltedBig = big.withColumn("_salt",
-      pmod(xxhash64(col(keyCol), monotonically_increasing_id()), lit(salts)))
-    val saltedSmall = small
-      .withColumn("_salt", explode(sequence(lit(0), lit(salts - 1))))
-      .withColumn("_salt", col("_salt").cast("long"))
-    saltedBig.join(saltedSmall, Seq(keyCol, "_salt")).drop("_salt")
-  }
 }

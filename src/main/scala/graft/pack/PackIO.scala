@@ -37,19 +37,6 @@ object PackIO {
     out
   }
 
-  def writeInts(path: File, a: Array[Int]): Unit = {
-    val bb = ByteBuffer.allocate(a.length * 4).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asIntBuffer().put(a)
-    Files.write(path.toPath, bb.array())
-  }
-
-  def readInts(path: File): Array[Int] = {
-    val bytes = Files.readAllBytes(path.toPath)
-    val out = new Array[Int](bytes.length / 4)
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asIntBuffer().get(out)
-    out
-  }
-
   /** gzip vocab: one item per line (exec/pack.py:59-72, io.py load_gz_lines). */
   def writeVocab(path: File, v: Vocab): Unit = {
     val out = new GZIPOutputStream(new BufferedOutputStream(new FileOutputStream(path)))

@@ -1,4 +1,8 @@
-import duckdb, json, sys, glob
+"""Compare a graft.Verify output dir against the DuckDB oracle: runs each
+oracle_sql.json entry over the sf0.01 tables and diffs it against
+<out>/<name>/*.parquet. Exits 1 if any entry is not OK or has no output
+directory. Usage: python3 tools/check_oracle.py [out]  (default /tmp/vout)"""
+import duckdb, json, os, sys
 import pandas as pd
 
 sf = "/root/testdata/sf0.01"
@@ -8,7 +12,10 @@ for t in ["documents","embeddings","events","lineitem","orders","customer","nati
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+fails = []
 for name, sql in sorted(oracle.items()):
+    if not os.path.isdir(f"{out}/{name}"):
+        print(f"{name}: MISSING output dir {out}/{name}"); fails.append(name); continue
     try:
         got = con.sql(f"SELECT * FROM parquet_scan('{out}/{name}/*.parquet')").df()
         exp = con.sql(sql).df()
@@ -16,11 +23,11 @@ for name, sql in sorted(oracle.items()):
         got = got[sorted(got.columns)]
         exp = exp[sorted(exp.columns)]
         if list(got.columns) != list(exp.columns):
-            print(f"{name}: COLUMN MISMATCH got={list(got.columns)} exp={list(exp.columns)}"); continue
+            print(f"{name}: COLUMN MISMATCH got={list(got.columns)} exp={list(exp.columns)}"); fails.append(name); continue
         g = got.sort_values(by=list(got.columns)).reset_index(drop=True)
         e = exp.sort_values(by=list(exp.columns)).reset_index(drop=True)
         if len(g) != len(e):
-            print(f"{name}: ROWCOUNT got={len(g)} exp={len(e)}"); continue
+            print(f"{name}: ROWCOUNT got={len(g)} exp={len(e)}"); fails.append(name); continue
         # normalize dtypes
         ok = True
         for c in g.columns:
@@ -39,5 +46,10 @@ for name, sql in sorted(oracle.items()):
                 ok = False; print(f"{name}: compare error col={c}: {ex}"); break
         if ok:
             print(f"{name}: OK rows={len(g)} dtypes_match={all(got.dtypes[c]==exp.dtypes[c] for c in g.columns)}")
+        else:
+            fails.append(name)
     except Exception as ex:
-        print(f"{name}: ERROR {ex}")
+        print(f"{name}: ERROR {ex}"); fails.append(name)
+
+print(f"{len(oracle) - len(fails)}/{len(oracle)} OK" + (f"; failed: {' '.join(fails)}" if fails else ""))
+sys.exit(1 if fails else 0)
