@@ -3,18 +3,21 @@ package graft
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
-/** Hardware-ceiling probe: per-thread register-only FMA throughput at a
-  * given thread count. No memory traffic, no allocation — any per-thread
-  * drop when threads increase is the BOX (all-core frequency scaling +
-  * hypervisor steal + shared-core contention), not the workload.
+/** Hardware-ceiling probe: per-thread register-only scalar FMA and
+  * 512-bit SIMD throughput, and per-thread DRAM read bandwidth, at two
+  * thread counts (`sample`). The compute kernels touch no memory and
+  * allocate nothing, so any per-thread drop when threads increase is the
+  * BOX (all-core frequency scaling + hypervisor steal + shared-core
+  * contention), not the workload.
   *
-  * Used by Bench to bracket its scaling legs in time: the recorded leg
-  * efficiency is then reported raw AND normalized by the pure-compute
-  * scaling the box offered in the same window (`efficiency_vs_hw`). On a
-  * real N -> 4N EXECUTOR scale-out each node brings its own cores, caches
-  * and memory bus, so the box-level ceiling does not transfer — the
-  * normalized figure is the cluster-faithful estimate, the raw figure the
-  * in-sandbox observation (both are kept).
+  * `Bench` samples it before and after its N and 4N legs: each leg
+  * efficiency is reported raw AND normalized by the scaling the box
+  * offered in the same window (`efficiency_vs_hw`). On a real N -> 4N
+  * EXECUTOR scale-out each node brings its own cores, caches and memory
+  * bus, so the box-level ceiling does not transfer — the normalized figure
+  * is the cluster-faithful estimate, the raw figure the in-sandbox
+  * observation (both are kept). perfbench records `sample(1, nproc)`
+  * around a traced run and `quickGflops1` before an untraced one.
   */
 object HwCeiling {
 
@@ -34,22 +37,23 @@ object HwCeiling {
     x + y + z + w
   }
 
-  /** (wall seconds, summed thread-CPU seconds) of `work` on n threads.
+  /** (wall seconds, summed thread-CPU seconds) of `work(thread index)` on
+    * n threads.
     * Thread CPU time (ThreadMXBean) excludes hypervisor steal and
     * descheduling — a stolen-away thread accrues wall time but not CPU
     * time — so flops/cpuSec across thread counts isolates the CLOCK
     * component of the ceiling (all-core frequency scaling), steal-free.
     */
-  private def onThreads(n: Int)(work: () => Unit): (Double, Double) = {
+  private def onThreads(n: Int)(work: Int => Unit): (Double, Double) = {
     val bean = java.lang.management.ManagementFactory.getThreadMXBean
     val pool = Executors.newFixedThreadPool(n)
     val start = new CountDownLatch(1)
     val done = new CountDownLatch(n)
     val cpuNs = new AtomicLong
-    for (_ <- 0 until n) pool.execute { () =>
+    for (t <- 0 until n) pool.execute { () =>
       start.await()
       val c0 = bean.getCurrentThreadCpuTime
-      work()
+      work(t)
       cpuNs.addAndGet(bean.getCurrentThreadCpuTime - c0)
       done.countDown()
     }
@@ -65,11 +69,11 @@ object HwCeiling {
     * GFLOPS per thread-CPU-second) at `nt` threads. The second figure's
     * high/low ratio is the pure clock ratio (see onThreads).
     */
-  def gflopsPerThread2(nt: Int): (Double, Double) = {
+  private def gflopsPerThread2(nt: Int): (Double, Double) = {
     val iters = 150000000L
     sink.addAndGet(flopKernel(iters / 8).toLong) // JIT
     val runs = (1 to 3).map(_ =>
-      onThreads(nt)(() => sink.addAndGet(flopKernel(iters).toLong)))
+      onThreads(nt)(_ => sink.addAndGet(flopKernel(iters).toLong)))
     (iters * 16.0 / runs.map(_._1).min / 1e9,
       iters * 16.0 * nt / runs.map(_._2).min / 1e9)
   }
@@ -114,14 +118,14 @@ object HwCeiling {
     * The cpu-based ratio tracks the AVX-512 all-core frequency license
     * curve with steal excluded.
     */
-  def simdGflopsPerThread2(nt: Int): (Double, Double) = {
+  private def simdGflopsPerThread2(nt: Int): (Double, Double) = {
     val lanes =
       try jdk.incubator.vector.FloatVector.SPECIES_PREFERRED.length()
       catch { case _: Throwable => return (0.0, 0.0) }
     val iters = 40000000L
     sink.addAndGet(simdKernel(iters / 8).toLong)
     val runs = (1 to 3).map(_ =>
-      onThreads(nt)(() => sink.addAndGet(simdKernel(iters).toLong)))
+      onThreads(nt)(_ => sink.addAndGet(simdKernel(iters).toLong)))
     (iters * 8.0 * lanes / runs.map(_._1).min / 1e9,
       iters * 8.0 * lanes * nt / runs.map(_._2).min / 1e9)
   }
@@ -149,35 +153,23 @@ object HwCeiling {
     * streams a disjoint stripe of the shared array, `nt` passes, so bytes
     * per thread are constant across thread counts (strong-scaling shape).
     */
-  def bwGBpsPerThread(nt: Int): Double = {
+  private def bwGBpsPerThread(nt: Int): Double = {
     val stripe = bwArr.length / nt
     sink.addAndGet(bwSumStripe(0, math.min(bwArr.length, 1 << 20)).toLong) // JIT
     val best = (1 to 3).map { _ =>
-      onThreads2(nt) { t =>
+      onThreads(nt) { t =>
         var r = 0
         var s = 0.0
         while (r < nt) { s += bwSumStripe(t * stripe, (t + 1) * stripe); r += 1 }
         sink.addAndGet(s.toLong)
-      }
+      }._1
     }.min
     nt.toLong * stripe * 4.0 / best / 1e9
   }
 
-  private def onThreads2(n: Int)(work: Int => Unit): Double = {
-    val pool = Executors.newFixedThreadPool(n)
-    val start = new CountDownLatch(1)
-    val done = new CountDownLatch(n)
-    for (t <- 0 until n) pool.execute { () =>
-      start.await(); work(t); done.countDown()
-    }
-    val t0 = System.nanoTime()
-    start.countDown()
-    done.await()
-    val dt = (System.nanoTime() - t0) / 1e9
-    pool.shutdown(); pool.awaitTermination(10, TimeUnit.SECONDS)
-    dt
-  }
-
+  /** Per-thread scalar and SIMD GF/s (wall), DRAM GB/s, and scalar and
+    * SIMD GF per thread-CPU-second (steal-free: their high/low ratio is
+    * the all-core clock ratio), at the low and high thread counts. */
   final case class Sample(perThreadLow: Double, perThreadHigh: Double,
                           simdLow: Double, simdHigh: Double,
                           bwLow: Double, bwHigh: Double,
@@ -188,29 +180,14 @@ object HwCeiling {
     /** 512-bit-SIMD scaling efficiency (the GEMM workload's frequency
       * curve); falls back to scalar if the Vector module is absent */
     def simdEff: Double = if (simdLow > 0) simdHigh / simdLow else eff
-    /** DRAM-stream scaling efficiency (the shared-memory-bus ceiling) */
-    def bwEff: Double = if (bwLow > 0) bwHigh / bwLow else eff
-    /** pure CLOCK ratio high/low for scalar code, measured in flops per
-      * thread-CPU-second (steal-free): the factor by which the SAME work
-      * costs more CPU SECONDS at the high core count purely from all-core
-      * frequency scaling. Normalizes cpu-second-based work-invariance
-      * figures; a real N->4N scale-OUT keeps per-node active-core counts
-      * (and thus clocks) constant, so it does not inherit this ceiling.
-      */
-    def cpuFreqEff: Double = if (cpuLow > 0) cpuHigh / cpuLow else eff
-    /** clock ratio under the AVX-512 license (the GEMM path's curve) */
-    def simdCpuFreqEff: Double =
-      if (simdCpuLow > 0) simdCpuHigh / simdCpuLow else cpuFreqEff
   }
 
-  /** Quick single-thread scalar-FMA probe (~0.7 s, best-of-2): the
-    * in-bracket covariate Bench samples immediately before each scaling
-    * leg. Healthy values on this box are 3.1-3.9 GF/thread; a co-tenant
-    * epoch that evades /proc/stat steal accounting AND cpu_util (round-4's
-    * 45.96 s leg passed both at probe 0.5 GF) still collapses this number,
-    * because a descheduled or frequency-starved core simply executes fewer
-    * register FMAs per wall second. Purely external: no Spark, no memory
-    * traffic, independent of the measured workload.
+  /** Quick single-thread scalar-FMA probe (~0.7 s, best-of-2), for runs
+    * too short to pay for `sample`. A co-tenant epoch that evades
+    * /proc/stat steal accounting still collapses this number, because a
+    * descheduled or frequency-starved core simply executes fewer register
+    * FMAs per wall second. Purely external: no Spark, no memory traffic,
+    * independent of the measured workload.
     */
   def quickGflops1(): Double = {
     val iters = 60000000L

@@ -3,7 +3,8 @@ package graft
 import graft.corpus.RuCorpus
 import graft.nlp.{Pipeline, SentRow}
 import graft.pack.SynthPack
-import graft.text.{Shape, Tokenizer}
+import graft.kernel.{WS, Workspace}
+import graft.text.{Token, Tokenizer}
 
 /** Single-threaded phase attribution for the fused inference hot path.
   * No Spark — isolates pure-compute cost per stage so optimization targets
@@ -47,51 +48,25 @@ object MicroBench {
       acc
     }
 
-    val toks = sents.map(s => Tokenizer.tokenize(s.text))
-
-    time("shape+vocab encode", 3) {
-      var acc = 0L
-      var i = 0
-      while (i < toks.length) {
-        val ts = toks(i)
-        var j = 0
-        while (j < ts.length) {
-          acc += pack.wordVocab.encode(Shape.lowerFast(ts(j).text))
-          acc += pack.shapeVocab.encode(Shape.wordShape(ts(j).text))
-          j += 1
-        }
-        i += 1
-      }
-      acc
-    }
-
-    // batched forwards on pre-tokenized input
+    // batched forwards on pre-tokenized input, encoded as the engine
+    // encodes them (ModelPack.encode into a Workspace)
     val batchSize = if (args.length > 1) args(1).toInt else 64
     val batches = sents.grouped(batchSize).toArray
-    def encodeBatch(batch: Array[SentRow]) = {
-      val n = batch.length
-      val ts = batch.map(r => Tokenizer.tokenize(r.text))
-      val seqLen = math.max(1, ts.iterator.map(_.length).max)
-      val wordIds = new Array[Int](n * seqLen)
-      val shapeIds = new Array[Int](n * seqLen)
-      val padMask = new Array[Boolean](n * seqLen)
-      java.util.Arrays.fill(wordIds, pack.wordVocab.padId)
-      java.util.Arrays.fill(shapeIds, pack.shapeVocab.padId)
-      var b = 0
-      while (b < n) {
-        var s = 0
-        while (s < seqLen) {
-          if (s < ts(b).length) {
-            wordIds(b * seqLen + s) = pack.wordVocab.encode(Shape.lowerFast(ts(b)(s).text))
-            shapeIds(b * seqLen + s) = pack.shapeVocab.encode(Shape.wordShape(ts(b)(s).text))
-          } else padMask(b * seqLen + s) = true
-          s += 1
-        }
-        b += 1
-      }
-      (n, seqLen, wordIds, shapeIds, padMask)
+    val batchToks = batches.map(_.map(r => Tokenizer.tokenize(r.text)))
+    val ws = new Workspace
+    time("encode", 3) {
+      var acc = 0L
+      for (ts <- batchToks) acc += pack.encode(ts, (t: Token) => t.text, ws)
+      acc
     }
-    val encoded = batches.map(encodeBatch)
+    // the allocating forwards below read exact-length copies of the slots
+    val encoded = batchToks.map { ts =>
+      val n = ts.length
+      val sl = pack.encode(ts, (t: Token) => t.text, ws)
+      (n, sl, java.util.Arrays.copyOf(ws.i(WS.WORD_IDS, n * sl), n * sl),
+        java.util.Arrays.copyOf(ws.i(WS.SHAPE_IDS, n * sl), n * sl),
+        java.util.Arrays.copyOf(ws.b(WS.PAD_MASK, n * sl), n * sl))
+    }
 
     time("ner.forward", 2) {
       var acc = 0L
@@ -119,7 +94,6 @@ object MicroBench {
       for ((n, sl, w, sh, pm) <- encoded) acc += pack.syntax.forward(w, sh, n, sl, pm)._1.length
       acc
     }
-    val ws = new graft.kernel.Workspace
     time("inferBatch FULL(ws)", 2) {
       var acc = 0L
       for (b <- batches) acc += Pipeline.inferBatch(b.toSeq, pack, ws).length

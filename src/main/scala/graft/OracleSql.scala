@@ -36,6 +36,21 @@ object OracleSql {
     s"xor($z2, $z2 >> 31)"
   }
 
+  /** The engine's poly_hash (h*31 + c over code points) of a string SQL
+    * expression, folded unsigned mod 2^64 through HUGEINT. */
+  private[graft] def polyHashSql(str: String): String =
+    "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
+      s"[unicode(c)::HUGEINT for c in string_split($str, '')]), " +
+      "(h, c) -> (h * 31 + c) % 18446744073709551616)"
+
+  /** polyHashSql as the engine's signed 64-bit value: the unsigned hash
+    * converted to BIGINT two's complement. */
+  private def polySignedSql(key: String): String = {
+    val u = polyHashSql(key) + "::HUGEINT"
+    s"((($u) - CASE WHEN ($u) >= 9223372036854775808::HUGEINT " +
+      "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::BIGINT)"
+  }
+
   private def list(xs: Seq[String]): String =
     xs.map(w => s"'$w'").mkString("[", ", ", "]")
 
@@ -684,14 +699,8 @@ object OracleSql {
   def qKgWalks(walksPerStart: Int, walkLen: Int, seed: Long): String = {
     // signed poly_hash of the step-choice key, as a SQL expression over
     // walk-state columns (cur, walk_no) with step/seed inlined literals
-    def polySigned(step: Int): String = {
-      val key = s"'$seed:' || cur || ':$step:' || walk_no::VARCHAR"
-      val u = "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
-        s"[unicode(c)::HUGEINT for c in string_split($key, '')]), " +
-        "(h, c) -> (h * 31 + c) % 18446744073709551616)::HUGEINT"
-      s"((($u) - CASE WHEN ($u) >= 9223372036854775808::HUGEINT " +
-        "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::BIGINT)"
-    }
+    def polySigned(step: Int): String =
+      polySignedSql(s"'$seed:' || cur || ':$step:' || walk_no::VARCHAR")
     val steps = (1 to walkLen).map { i =>
       s"""wh$i AS MATERIALIZED (SELECT start, walk_no, cur, odeg,
              ${polySigned(i)} AS h
@@ -730,26 +739,19 @@ object OracleSql {
     * key, +1 re-pick on self-collision.
     */
   def qKgTranse(negatives: Int): String = {
-    def polySignedOf(key: String): String = {
-      val u = "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
-        s"[unicode(c)::HUGEINT for c in string_split($key, '')]), " +
-        "(h, c) -> (h * 31 + c) % 18446744073709551616)::HUGEINT"
-      s"((($u) - CASE WHEN ($u) >= 9223372036854775808::HUGEINT " +
-        "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::BIGINT)"
-    }
     val probeKey = "'transe' || chr(1) || subj_id || chr(1) || pred || " +
       "chr(1) || obj_id || chr(1) || nn::VARCHAR"
     s"""
     WITH RECURSIVE $triplesCanonicalCtes,
     te AS MATERIALIZED (SELECT e, row_number() OVER (
-            ORDER BY ((${polySignedOf("e")} % 64) + 64) % 64, e) - 1 AS eid
+            ORDER BY ((${polySignedSql("e")} % 64) + 64) % 64, e) - 1 AS eid
           FROM (SELECT subj_id AS e FROM ktriples
                 UNION SELECT obj_id FROM ktriples) u),
     tn AS (SELECT count(*) AS n FROM te),
     tb AS (SELECT DISTINCT subj_id, pred, obj_id FROM ktriples),
     tp AS MATERIALIZED (SELECT subj_id, pred, obj_id, nn AS neg_no,
             CASE WHEN nn % 2 = 0 THEN 'obj' ELSE 'subj' END AS corrupt,
-            ((${polySignedOf(probeKey)} % n) + n) % n AS idx, n
+            ((${polySignedSql(probeKey)} % n) + n) % n AS idx, n
           FROM tb CROSS JOIN (SELECT unnest(range(0, $negatives)) AS nn) g
           CROSS JOIN tn),
     tj AS MATERIALIZED (SELECT tp.*, te.e AS neg0
@@ -859,19 +861,12 @@ object OracleSql {
     * fanouts(h-1), then frontier equi-joins; hops unrolled as
     * MATERIALIZED CTEs. */
   def qKgNeighborSample(fanouts: Seq[Int], seed: Long): String = {
-    def polySignedOf(key: String): String = {
-      val u = "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
-        s"[unicode(c)::HUGEINT for c in string_split($key, '')]), " +
-        "(h, c) -> (h * 31 + c) % 18446744073709551616)::HUGEINT"
-      s"((($u) - CASE WHEN ($u) >= 9223372036854775808::HUGEINT " +
-        "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::BIGINT)"
-    }
     val samp = fanouts.zipWithIndex.map { case (k, i) =>
       val key = s"'sample' || chr(1) || '$seed' || chr(1) || '${i + 1}'" +
         " || chr(1) || src || chr(1) || dst"
       s"""nss${i + 1} AS MATERIALIZED (SELECT src, dst FROM (
            SELECT src, dst, row_number() OVER (PARTITION BY src
-               ORDER BY ${polySignedOf(key)}, dst) AS rn FROM nse) r
+               ORDER BY ${polySignedSql(key)}, dst) AS rn FROM nse) r
          WHERE rn <= $k)"""
     }.mkString(",\n    ")
     val fronts = (1 to fanouts.length).map { h =>
@@ -928,13 +923,6 @@ object OracleSql {
     * steps unrolled as MATERIALIZED CTEs. */
   def qKgNode2vec(walksPerStart: Int, walkLen: Int, returnWeight: Long,
                   inOutWeight: Long, seed: Long): String = {
-    def polySignedOf(key: String): String = {
-      val u = "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
-        s"[unicode(c)::HUGEINT for c in string_split($key, '')]), " +
-        "(h, c) -> (h * 31 + c) % 18446744073709551616)::HUGEINT"
-      s"((($u) - CASE WHEN ($u) >= 9223372036854775808::HUGEINT " +
-        "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::BIGINT)"
-    }
     val steps = (1 to walkLen).map { i =>
       val wExpr =
         if (i == 1) "1000::BIGINT"
@@ -952,7 +940,7 @@ object OracleSql {
     nw$i AS (SELECT *, sum(w) OVER (PARTITION BY start, walk_no
                ORDER BY x ROWS UNBOUNDED PRECEDING) AS cum,
              sum(w) OVER (PARTITION BY start, walk_no) AS tot FROM nc$i),
-    nh$i AS (SELECT *, ((${polySignedOf(key)} % tot) + tot) % tot AS r
+    nh$i AS (SELECT *, ((${polySignedSql(key)} % tot) + tot) % tot AS r
            FROM nw$i WHERE tot > 0),
     nv$i AS MATERIALIZED (SELECT start, walk_no, cur AS prev, x AS cur
            FROM nh$i WHERE cum - w <= r AND r < cum)"""
@@ -999,13 +987,6 @@ object OracleSql {
     * mention explode, distinct, signed-poly hash rank per entity with
     * the full-column tie order, rank <= k. */
   def qKgAnnotationSample(k: Int, seed: Long): String = {
-    def polySignedOf(key: String): String = {
-      val u = "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
-        s"[unicode(c)::HUGEINT for c in string_split($key, '')]), " +
-        "(h, c) -> (h * 31 + c) % 18446744073709551616)::HUGEINT"
-      s"((($u) - CASE WHEN ($u) >= 9223372036854775808::HUGEINT " +
-        "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)::BIGINT)"
-    }
     val key = s"'ann' || chr(1) || '$seed' || chr(1) || entity_id || " +
       "chr(1) || docId || chr(1) || spanOrder::VARCHAR || chr(1) || " +
       "sentIdx::VARCHAR || chr(1) || pred || chr(1) || other_id || " +
@@ -1019,7 +1000,7 @@ object OracleSql {
       SELECT obj_id, 'obj', docId, spanOrder, sentIdx, pred, subj_id
       FROM ktriples) u),
     asr AS (SELECT *, row_number() OVER (PARTITION BY entity_id
-             ORDER BY ${polySignedOf(key)} ASC, docId ASC, spanOrder ASC,
+             ORDER BY ${polySignedSql(key)} ASC, docId ASC, spanOrder ASC,
                sentIdx ASC, pred ASC, other_id ASC, role ASC) AS pick
            FROM asm)
     SELECT entity_id, pick, role, docId AS doc_id,

@@ -589,7 +589,7 @@ object SparkEntry {
     // (round-6 absorbs their <=1-ulp spread)
     "q_hll_distinct" -> new Query((s, d) =>
       TextStats.hllTokenDistinct(tbl(s, d, "documents")), {
-        val u = polyHashSql("w")
+        val u = OracleSql.polyHashSql("w")
         s"""
         WITH tok AS (SELECT lang, unnest(${toks("lower(text)")}) AS w FROM documents),
         hh0 AS (SELECT lang, $u AS u0 FROM tok),
@@ -622,7 +622,7 @@ object SparkEntry {
     // & 1023; registers are plain counts, estimate = min across rows —
     // all integers, hash-checkable
     "q_cms_topk" -> new Query((s, d) => TextStats.cmsTopK(tbl(s, d, "documents")), {
-        def u(i: Int) = polyHashSql(s"w || chr(1) || '$i'")
+        def u(i: Int) = OracleSql.polyHashSql(s"w || chr(1) || '$i'")
         val mCtes = (0 until TextStats.CmsDepth).map { i =>
           s"""u$i AS (SELECT w, ${u(i)} AS u0 FROM tok),
         m$i AS MATERIALIZED (SELECT w,
@@ -658,7 +658,7 @@ object SparkEntry {
       TextStats.dsirSelect(docs.where(col("doc_id") % 23 =!= 0),
         docs.where(col("doc_id") % 23 === 0), k)
     }, {
-        val u = polyHashSql("feat")
+        val u = OracleSql.polyHashSql("feat")
         val m = TextStats.DsirBuckets
         s"""
         WITH tk AS (SELECT doc_id, ${toks("lower(text)")} AS toks FROM documents),
@@ -1736,7 +1736,7 @@ object SparkEntry {
         benchFilter = Some(benchBloom97(s, d)),
         docShingles = Some(shingleHashes3(s, d)))
     }, {
-        val u = polyHashSql("feat")
+        val u = OracleSql.polyHashSql("feat")
         val m = TextStats.DsirBuckets
         s"""
         WITH RECURSIVE
@@ -1892,12 +1892,6 @@ object SparkEntry {
                           (coalesce(c1, 0) + v)::DOUBLE) * 1000000 + 0.5)::BIGINT AS mn
                FROM bi LEFT JOIN big USING (w1, w2) LEFT JOIN uni USING (w1)
                CROSS JOIN vv)"""
-  // the engine's poly_hash (h*31 + c over code points) of a string
-  // expression, folded unsigned through HUGEINT
-  private def polyHashSql(str: String): String =
-    "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
-      s"[unicode(c)::HUGEINT for c in string_split($str, '')]), " +
-      "(h, c) -> (h * 31 + c) % 18446744073709551616)"
   // the curate chain after `gated`: near-dup pairs among the gated docs,
   // CC survivors, then decontamination against the doc_id % 97 bench
   // slice, ending in clean(*); shared by q_curate and q_curate_dsir

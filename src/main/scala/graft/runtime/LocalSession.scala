@@ -3,7 +3,7 @@ package graft.runtime
 import org.apache.spark.sql.SparkSession
 
 /** The one `local[cpus]` session of the in-process mains (Verify, Explain,
-  * Bench's thread legs): shuffle partitions = cores, session time zone
+  * Bench's fallback legs): shuffle partitions = cores, session time zone
   * UTC, no UI, WARN logging. AQE is Spark's default. */
 object LocalSession {
   def apply(cpus: Int, appName: String): SparkSession = {

@@ -26,11 +26,11 @@ object Docs {
     import spark.implicits._
     // splits sized by DATA (like files.maxPartitionBytes on a real scan),
     // NOT by cluster size: 640 docs/slice ≈ one Pipeline sort-buffer fill
-    // (~1600 sents), the granularity ClusterProbe measured work-invariant
-    // across 8 vs 32 cores. The old defaultParallelism*8 rule made task
-    // size shrink as cores grew, inflating per-task overhead + pad waste
-    // at the 4N leg (+13% CPU at 32 cores) — a decomposition artifact a
-    // real N->4N cluster reading fixed-size splits never sees. The
+    // (~1600 sents), measured work-invariant across 8 vs 32 cores
+    // (BASELINE.md; OPTIMIZATION_r06.md b10). The old defaultParallelism*8
+    // rule made task size shrink as cores grew, inflating per-task
+    // overhead + pad waste at the 4N leg (+13% CPU at 32 cores) — a
+    // decomposition artifact real N->4N clusters on fixed splits never see. The
     // data-sized count is then WAVE-ALIGNED (rounded to a full multiple
     // of the session's core count, task size only coarsening or finening
     // by <= half a wave): a 39-slice input on 32 cores otherwise runs 2

@@ -2,7 +2,7 @@ package graft.text
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Teacher-path text utilities (reference: slovnet/bert.py:5-43).
+/** Teacher-path text utilities (reference: slovnet/bert.py:5-38).
   * `bertChunks` is the `\w+|[^\w\s]` word splitter (a ~0.3%-different
   * approximation of the main tokenizer, useful as a fallback);
   * `wordpiece` is greedy longest-match-first subword splitting with the
@@ -46,10 +46,6 @@ object Subword {
   /** safe_wordpiece (slovnet/bert.py:33-38): fall back to the whole word. */
   def safeWordpiece(word: String, vocab: collection.Set[String]): List[String] =
     wordpiece(word, vocab).getOrElse(List(word))
-
-  /** bert_subs (slovnet/bert.py:41-43): text -> subwords. */
-  def bertSubs(text: String, vocab: collection.Set[String]): Array[String] =
-    bertChunks(text).flatMap(safeWordpiece(_, vocab))
 }
 
 /** Batching utilities (reference: slovnet/chop.py:3-34). `chop` is

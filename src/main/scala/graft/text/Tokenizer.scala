@@ -195,8 +195,6 @@ object Tokenizer {
     out.toArray
   }
 
-  def textWords(text: String): Array[String] = tokenize(text).map(_.text)
-
   // ---- sentence splitting (razdel sentenize architecture) ----
 
   /** Abbreviations a single trailing dot does not terminate a sentence

@@ -82,6 +82,39 @@ class TokenizerSpec extends AnyFunSuite {
       assert(text.substring(t.start, t.stop) == t.text)
   }
 
+  test("property: tokenize and sentenize spans slice their text, in order, disjoint; tokens hold no whitespace") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // the tokenizer's own separator set: Java whitespace plus the Zs block
+    // (NBSP, U+202F, ...) and NEL
+    def space(c: Char) = Character.isWhitespace(c) || Character.isSpaceChar(c) || c == '\u0085'
+    val piece = Gen.frequency(
+      6 -> Gen.oneOf("Иван", "пётр", "ЁЖ", "Москве", "т", "г", "ИЛ", "Газпром"),
+      3 -> Gen.oneOf("Pal", "abc", "X", "iPhone"),
+      3 -> Gen.oneOf("1941", "0", "3,5", "0.5", "50/64", "123-45-67"),
+      5 -> Gen.oneOf(".", ",", "!", "?", "...", "…", "?!", "«", "»", "„", "“", "\"", "'",
+        "(", ")", "[", "]", ";", ":", "-", "—", "–", "/", "№", "%", "+", "_"),
+      4 -> Gen.oneOf(" ", "  ", "\n", "\n\n", "\t", "\r\n", "\u00a0", "\u202f", " \n   "),
+      // supplementary characters: emoji, math letter, Linear B
+      2 -> Gen.oneOf("\uD83D\uDE00", "\uD835\uDD38", "\uD800\uDC00", "см³"))
+    val text = Gen.choose(0, 40).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    def spansOk(t: String, spans: Seq[(Int, Int, String)]): Prop = {
+      val ends = spans.map(_._2).scanLeft(0)((_, e) => e)
+      Prop.all(spans.zip(ends).map { case ((start, stop, s), prevStop) =>
+        Prop(prevStop <= start && start < stop && stop <= t.length &&
+          t.substring(start, stop) == s) :| s"span ($start,$stop) '$s' after $prevStop"
+      }: _*)
+    }
+    val p = Prop.forAll(text) { t =>
+      val toks = Tokenizer.tokenize(t).toSeq
+      val sents = Tokenizer.sentenize(t).toSeq
+      (spansOk(t, toks.map(x => (x.start, x.stop, x.text))) :| "tokenize") &&
+        (spansOk(t, sents.map(x => (x.start, x.stop, x.text))) :| "sentenize") &&
+        (Prop(toks.forall(!_.text.exists(space))) :| "whitespace inside a token")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(500), p)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("sentenize splits on terminal + uppercase and drops empties") {
     val text = "Иван купил завод. Пётр продал офис.\n\n«Газпром» открыл филиал."
     val sents = Tokenizer.sentenize(text).map(_.text).toSeq

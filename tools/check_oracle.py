@@ -1,12 +1,16 @@
 """Compare a graft.Verify output dir against the DuckDB oracle: runs each
-oracle_sql.json entry over the sf0.01 tables and diffs it against
-<out>/<name>/*.parquet. Exits 1 if any entry is not OK or has no output
-directory. Usage: python3 tools/check_oracle.py [out]  (default /tmp/vout)"""
+oracle_sql.json entry over the tables of the sf dir the Verify run read and
+diffs it against <out>/<name>/*.parquet. Exits 1 if any entry is not OK or
+has no output directory.
+Usage: python3 tools/check_oracle.py [out [sfDir]]
+  (defaults /tmp/vout and /root/testdata/sf0.01)"""
 import duckdb, json, os, sys
 import pandas as pd
 
-sf = "/root/testdata/sf0.01"
 out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/vout"
+sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+if not os.path.isdir(sf):
+    sys.exit(f"no sf dir {sf}")
 con = duckdb.connect()
 for t in ["documents","embeddings","events","lineitem","orders","customer","nation","supplier","part","region"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
