@@ -2,7 +2,7 @@ package graft
 
 import graft.kernel.{WS, Workspace}
 import graft.nlp.SentRow
-import graft.pack.{ModelPack, PackIO}
+import graft.pack.ModelPack
 import graft.text._
 
 /** In-process API parity surface — the reference's top-level public API
@@ -55,7 +55,7 @@ final class NER(val pack: ModelPack, val batchSize: Int = 8) extends Serializabl
 }
 
 object NER {
-  def load(dir: String): NER = new NER(PackIO.load(dir))
+  def load(dir: String): NER = new NER(Api.loadSlovnet(new java.io.File(dir)))
 }
 
 /** Pre-tokenized words -> POS + feats (api.py:66-88, exec/infer.py:54-74). */
@@ -88,7 +88,7 @@ final class Morph(val pack: ModelPack, val batchSize: Int = 8) extends Serializa
 }
 
 object Morph {
-  def load(dir: String): Morph = new Morph(PackIO.load(dir))
+  def load(dir: String): Morph = new Morph(Api.loadSlovnet(new java.io.File(dir)))
 }
 
 /** Pre-tokenized words -> dependency tree; 1-based ids, head 0 = root
@@ -122,5 +122,5 @@ final class Syntax(val pack: ModelPack, val batchSize: Int = 8) extends Serializ
 }
 
 object Syntax {
-  def load(dir: String): Syntax = new Syntax(PackIO.load(dir))
+  def load(dir: String): Syntax = new Syntax(Api.loadSlovnet(new java.io.File(dir)))
 }

@@ -31,7 +31,7 @@ object SlovnetPack {
 
   // ---------------------------------------------------------------- load
 
-  final case class LoadedNer(words: Vocab, shapes: Vocab, tags: Vocab, model: NerModel)
+  final case class LoadedNer(id: String, words: Vocab, shapes: Vocab, tags: Vocab, model: NerModel)
   final case class LoadedMorph(words: Vocab, shapes: Vocab, tags: Vocab, model: MorphModel)
   final case class LoadedSyntax(words: Vocab, shapes: Vocab, rels: Vocab, model: SyntaxModel)
 
@@ -71,10 +71,31 @@ object SlovnetPack {
     Wt(dims, node.get("dtype").asText(), id)
   }
 
-  /** decode arrays/<id>.bin per numpy dtype name (little-endian raw). */
-  private def floatsOf(w: Wt, r: PackReader): Array[Float] = {
+  /** arrays/<id>.bin as a little-endian buffer, its byte length checked
+    * against shape x dtype width: a member written at another width (a
+    * u8 navec `indexes` stored as 4-byte ids) or truncated must fail
+    * loudly, not decode its prefix or die mid-read.
+    */
+  private def arrayOf(w: Wt, r: PackReader): ByteBuffer = {
     require(w.id >= 0, "weight is stripped (navec?) — inject before use")
-    val bb = ByteBuffer.wrap(r.bytes(s"arrays/${w.id}.bin")).order(ByteOrder.LITTLE_ENDIAN)
+    val name = s"arrays/${w.id}.bin"
+    val width = w.dtype match {
+      case "float64" | "int64" => 8
+      case "float32" | "int32" => 4
+      case "uint16"            => 2
+      case "uint8" | "int8"    => 1
+      case d => throw new IllegalArgumentException(s"$name: unsupported dtype $d")
+    }
+    val bytes = r.bytes(name)
+    val want = w.n.toLong * width
+    require(bytes.length == want, s"$name: ${bytes.length} bytes, want $want for " +
+      s"${w.dtype} shape [${w.shape.mkString(", ")}]")
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+  }
+
+  /** decode a float array per numpy dtype name. */
+  private def floatsOf(w: Wt, r: PackReader): Array[Float] = {
+    val bb = arrayOf(w, r)
     w.dtype match {
       case "float32" =>
         val out = new Array[Float](w.n); bb.asFloatBuffer().get(out); out
@@ -83,36 +104,22 @@ object SlovnetPack {
       case d => throw new IllegalArgumentException(s"unsupported float dtype $d")
     }
   }
-  /** integer ids as u8 bytes (centroids <= 256, the navec dtype rule). */
-  private def idsOf(w: Wt, r: PackReader): Array[Byte] = {
-    require(w.id >= 0, "weight is stripped (navec?) — inject before use")
-    val bb = ByteBuffer.wrap(r.bytes(s"arrays/${w.id}.bin")).order(ByteOrder.LITTLE_ENDIAN)
-    def check(v: Long): Byte = {
-      require(v >= 0 && v < 256, s"centroid id $v out of u8 range")
-      v.toByte
-    }
-    w.dtype match {
-      case "int64"  => Array.tabulate(w.n)(i => check(bb.getLong(i * 8)))
-      case "int32"  => Array.tabulate(w.n)(i => check(bb.getInt(i * 4).toLong))
-      case "uint16" => Array.tabulate(w.n)(i => check((bb.getShort(i * 2) & 0xffff).toLong))
-      case "uint8" | "int8" => Array.tabulate(w.n)(i => bb.get(i))
+  /** integer ids per numpy int dtype (8-bit ones read unsigned), each
+    * checked to lie in [0, limit) — 256 for u8, 65536 for u16 navec ids.
+    */
+  private def idsOf(w: Wt, r: PackReader, limit: Int): Int => Int = {
+    val bb = arrayOf(w, r)
+    val at: Int => Long = w.dtype match {
+      case "int64"          => i => bb.getLong(i * 8)
+      case "int32"          => i => bb.getInt(i * 4).toLong
+      case "uint16"         => i => (bb.getShort(i * 2) & 0xffff).toLong
+      case "uint8" | "int8" => i => (bb.get(i) & 0xff).toLong
       case d => throw new IllegalArgumentException(s"unsupported int dtype $d")
     }
-  }
-  /** integer ids as u16 shorts (centroids > 256). */
-  private def ids16Of(w: Wt, r: PackReader): Array[Short] = {
-    require(w.id >= 0, "weight is stripped (navec?) — inject before use")
-    val bb = ByteBuffer.wrap(r.bytes(s"arrays/${w.id}.bin")).order(ByteOrder.LITTLE_ENDIAN)
-    def check(v: Long): Short = {
-      require(v >= 0 && v < 65536, s"centroid id $v out of u16 range")
-      v.toShort
-    }
-    w.dtype match {
-      case "int64"  => Array.tabulate(w.n)(i => check(bb.getLong(i * 8)))
-      case "int32"  => Array.tabulate(w.n)(i => check(bb.getInt(i * 4).toLong))
-      case "uint16" => Array.tabulate(w.n)(i => bb.getShort(i * 2))
-      case "uint8" | "int8" => Array.tabulate(w.n)(i => (bb.get(i) & 0xff).toShort)
-      case d => throw new IllegalArgumentException(s"unsupported int dtype $d")
+    i => {
+      val v = at(i)
+      require(v >= 0 && v < limit, s"centroid id $v out of range [0, $limit)")
+      v.toInt
     }
   }
 
@@ -142,12 +149,15 @@ object SlovnetPack {
       val idx = wt(wn.get("indexes")); val cod = wt(wn.get("codes"))
       if (idx.id >= 0 && cod.id >= 0) {
         val centroids = cod.shape(1)
-        (if (centroids <= 256)
-          NavecEmbedding(idsOf(idx, r), idx.shape(1), floatsOf(cod, r),
-            centroids, cod.shape(2))
-        else // navec dtype rule: u16 ids above 256 centroids
+        (if (centroids <= 256) {
+          val ids = idsOf(idx, r, 256)
+          NavecEmbedding(Array.tabulate(idx.n)(ids(_).toByte), idx.shape(1),
+            floatsOf(cod, r), centroids, cod.shape(2))
+        } else { // navec dtype rule: u16 ids above 256 centroids
+          val ids = idsOf(idx, r, 65536)
           NavecEmbedding(null, idx.shape(1), floatsOf(cod, r),
-            centroids, cod.shape(2), ids16Of(idx, r))).validateIds()
+            centroids, cod.shape(2), Array.tabulate(idx.n)(ids(_).toShort))
+        }).validateIds()
       } else navec.getOrElse(throw new IllegalArgumentException(
         s"navec '${wn.get("id").asText()}' is stripped from the pack — pass one to inject"))
     }
@@ -169,11 +179,11 @@ object SlovnetPack {
 
   def loadNer(file: File, navec: Option[NavecEmbedding] = None): LoadedNer = {
     val r = new PackReader(file)
-    r.checkProtocol()
+    val id = r.checkProtocol()
     val m = r.json("model.json")
     val head = m.get("head")
     val tr = wt(head.get("crf").get("transitions"))
-    LoadedNer(r.vocab("word"), r.vocab("shape"), r.vocab("tag"),
+    LoadedNer(id, r.vocab("word"), r.vocab("shape"), r.vocab("tag"),
       NerModel(emb(m.get("emb"), r, navec), encoder(m.get("encoder"), r),
         linear(head.get("proj"), r), CRF(floatsOf(tr, r), tr.shape(0))))
   }
@@ -426,11 +436,13 @@ object SlovnetPack {
     dumpSyntax(pack, new File(dir, "syntax.tar"), stripNavec = stripNavec)
   }
 
-  /** Load all three task packs and assemble (navec injected if stripped). */
+  /** Load all three task packs and assemble (navec injected if stripped)
+    * under the id in ner.tar's meta.json.
+    */
   def loadAll(dir: File, navec: Option[NavecEmbedding] = None): ModelPack = {
     val ner = loadNer(new File(dir, "ner.tar"), navec)
     val morph = loadMorph(new File(dir, "morph.tar"), navec)
     val syntax = loadSyntax(new File(dir, "syntax.tar"), navec)
-    assemble("slovnet_pack", ner, morph, syntax)
+    assemble(ner.id, ner, morph, syntax)
   }
 }

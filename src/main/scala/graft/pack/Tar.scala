@@ -2,7 +2,6 @@ package graft.pack
 
 import java.io.{File, FileInputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 /** Minimal ustar archive IO (reference: slovnet/tar.py:8-41 — the
   * reference ships model packs as tar files whose members are the
@@ -91,25 +90,5 @@ object Tar {
       }
       out.result()
     } finally is.close()
-  }
-
-  /** tar up a directory tree (relative member names, '/'-separated). */
-  def fromDir(dir: File, out: File): Unit = {
-    def walk(f: File, prefix: String): Seq[(String, Array[Byte])] =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).toSeq
-          .flatMap(c => walk(c, if (prefix.isEmpty) c.getName else s"$prefix/${c.getName}"))
-      else Seq(prefix -> Files.readAllBytes(f.toPath))
-    write(out, walk(dir, ""))
-  }
-
-  /** extract into a directory */
-  def toDir(in: File, dir: File): Unit = {
-    for ((name, data) <- read(in)) {
-      require(!name.contains(".."), s"unsafe member name: $name")
-      val f = new File(dir, name)
-      f.getParentFile.mkdirs()
-      Files.write(f.toPath, data)
-    }
   }
 }

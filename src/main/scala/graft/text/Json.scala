@@ -2,8 +2,8 @@ package graft.text
 
 /** The one JSON string escaper (reference semantics: json.dumps on the
   * Python side). Three hand-rolled variants with diverging control-char
-  * coverage used to live in Verify/PackIO/InteropDump — any future
-  * escaping fix happens here once.
+  * coverage used to live in Verify, InteropDump and a pack writer — any
+  * future escaping fix happens here once.
   */
 object Json {
   def quote(s: String): String = {

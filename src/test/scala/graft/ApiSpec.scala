@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.RuCorpus
 import graft.nlp.Pipeline
-import graft.pack.{PackIO, SynthPack}
+import graft.pack.{SlovnetPack, SynthPack}
 import graft.text.Tokenizer
 
 /** The reference's e2e API oracle shape (tests/test_api.py): load packs
@@ -16,7 +16,7 @@ class ApiSpec extends AnyFunSuite {
   test("NER/Morph/Syntax public API matches the pipeline oracle after disk round-trip") {
     val pack = SynthPack.build()
     val dir = java.nio.file.Files.createTempDirectory("graft_pack").toString
-    PackIO.dump(pack, dir)
+    SlovnetPack.dumpAll(pack, new java.io.File(dir))
     val ner = NER.load(dir)
     val morph = Morph.load(dir)
     val syntax = Syntax.load(dir)

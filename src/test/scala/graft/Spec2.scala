@@ -30,11 +30,20 @@ class SubwordSpec extends AnyFunSuite {
 }
 
 class PackIoSpec extends AnyFunSuite {
+  import graft.pack.{SlovnetPack, Tar}
+
+  private def dumped(pack: graft.pack.ModelPack): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("pack").toFile
+    SlovnetPack.dumpAll(pack, dir)
+    dir
+  }
+  /** rewrite one member of a dumped task tar in place */
+  private def rewrite(tar: java.io.File, member: String)(f: Array[Byte] => Array[Byte]): Unit =
+    Tar.write(tar, Tar.read(tar).map { case (n, b) => n -> (if (n == member) f(b) else b) })
+
   test("dump + load round trip preserves model behavior exactly") {
     val pack = graft.pack.SynthPack.build()
-    val dir = java.nio.file.Files.createTempDirectory("pack").toString
-    graft.pack.PackIO.dump(pack, dir)
-    val loaded = graft.pack.PackIO.load(dir)
+    val loaded = Api.loadSlovnet(dumped(pack))
     assert(loaded.id == pack.id)
     assert(loaded.wordVocab.items.toSeq == pack.wordVocab.items.toSeq)
     assert(loaded.rels.items.toSeq == pack.rels.items.toSeq)
@@ -50,43 +59,65 @@ class PackIoSpec extends AnyFunSuite {
 
   test("tar container round trip (the reference's shipping format, tar.py:8-41)") {
     val pack = graft.pack.SynthPack.build()
-    val tarFile = java.nio.file.Files.createTempDirectory("packtar").toString + "/pack.tar"
-    graft.pack.PackIO.dumpTar(pack, tarFile)
-    val loaded = graft.pack.PackIO.loadTar(tarFile)
+    val dir = dumped(pack)
+    val loaded = Syntax.load(dir.toString).pack
     assert(loaded.wordVocab.items.toSeq == pack.wordVocab.items.toSeq)
     import graft.nlp.{Pipeline, SentRow}
     val row = Seq(SentRow("d0", 0, 0, 0, 10, "Анна Сидоров посетил музей."))
     assert(Pipeline.inferBatch(row, pack).map(_.syn.toSeq) ==
       Pipeline.inferBatch(row, loaded).map(_.syn.toSeq))
     // and the raw member list matches the reference layout
-    val names = graft.pack.Tar.read(new java.io.File(tarFile)).map(_._1)
+    val names = Tar.read(new java.io.File(dir, "syntax.tar")).map(_._1)
     assert(names.contains("meta.json") && names.contains("model.json"))
     assert(names.exists(_.startsWith("arrays/")) && names.exists(_.startsWith("vocabs/")))
   }
 
   test("stale u32-layout navec indexes.bin fails loudly, not as garbage") {
-    val pack = graft.pack.SynthPack.build()
-    val dir = java.nio.file.Files.createTempDirectory("pack").toString
-    graft.pack.PackIO.dump(pack, dir)
-    val idx = java.nio.file.Paths.get(dir, "navec", "indexes.bin")
-    val u8 = java.nio.file.Files.readAllBytes(idx)
-    // simulate the pre-round-3 int32 layout: 4 bytes per id
-    val u32 = java.nio.ByteBuffer.allocate(u8.length * 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    u8.foreach(b => u32.putInt(b & 0xff))
-    java.nio.file.Files.write(idx, u32.array())
-    val e = intercept[IllegalArgumentException](graft.pack.PackIO.load(dir))
-    assert(e.getMessage.contains("indexes.bin"))
+    val dir = dumped(graft.pack.SynthPack.build())
+    val tar = new java.io.File(dir, "ner.tar")
+    val model = Tar.read(tar).collectFirst { case ("model.json", b) => b }.get
+    val idx = new com.fasterxml.jackson.databind.ObjectMapper().readTree(model)
+      .at("/emb/word/indexes")
+    assert(idx.get("dtype").asText() == "uint8")
+    val member = s"arrays/${idx.get("array").asInt()}.bin"
+    // the old int32 layout: 4 bytes per id, model.json still says uint8
+    rewrite(tar, member) { u8 =>
+      val u32 = java.nio.ByteBuffer.allocate(u8.length * 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      u8.foreach(b => u32.putInt(b & 0xff))
+      u32.array()
+    }
+    val e = intercept[IllegalArgumentException](Api.loadSlovnet(dir))
+    assert(e.getMessage.contains(member) && e.getMessage.contains("uint8"), e.getMessage)
   }
 
   test("protocol check rejects wrong version") {
-    val pack = graft.pack.SynthPack.build()
-    val dir = java.nio.file.Files.createTempDirectory("pack").toString
-    graft.pack.PackIO.dump(pack, dir)
-    val meta = java.nio.file.Paths.get(dir, "meta.json")
-    java.nio.file.Files.writeString(meta,
-      java.nio.file.Files.readString(meta).replace("\"protocol\": 1", "\"protocol\": 2"))
-    intercept[IllegalArgumentException](graft.pack.PackIO.load(dir))
+    val dir = dumped(graft.pack.SynthPack.build())
+    rewrite(new java.io.File(dir, "ner.tar"), "meta.json") { b =>
+      val meta = new String(b, "UTF-8")
+      assert(meta.contains("\"protocol\" : 1"), meta)
+      meta.replace("\"protocol\" : 1", "\"protocol\" : 2").getBytes("UTF-8")
+    }
+    intercept[IllegalArgumentException](NER.load(dir.toString))
+  }
+
+  test("dumped reference-layout tars match their SHA-256 golden") {
+    // pins every dumped byte (member order, model.json tree, dtypes,
+    // shapes, array bytes, gzip vocabs): Tar's mtime is fixed and Java's
+    // GZIP header carries mtime 0. It stands in for the reference-loader
+    // run (tools/check_slovnet_interop.py): a change that moves a hash is
+    // re-checked with that tool before the golden is updated
+    def hashes(dir: java.io.File): Seq[String] = Seq("ner", "morph", "syntax").map { t =>
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      md.digest(java.nio.file.Files.readAllBytes(new java.io.File(dir, s"$t.tar").toPath))
+        .map(b => f"${b & 0xff}%02x").mkString
+    }
+    val got = hashes(dumped(graft.pack.SynthPack.build()))
+    assert(got == hashes(dumped(graft.pack.SynthPack.build())), "dump is not deterministic")
+    assert(got == Seq(
+      "d0df441e4bef09e0fc169024847b773d60a429ac36bf871e10e4fae39af8ad31",
+      "66135d5709191e3fcd34acbb01103e644195166d0d7e3c3a4080864909cdd739",
+      "e74e14c829aedd87e7bdb07445c1826ee629ae7aa17a6f2f40e6ed1cc950db27"))
   }
 
   test("assemble keeps per-task shape embeddings (shares only the navec word part)") {
