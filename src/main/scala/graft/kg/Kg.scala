@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 import graft.nlp.ParsedSent
@@ -227,53 +227,6 @@ object Kg {
     RuCorpus.aliasDict.toDF("alias", "entity_id", "tpe")
   }
 
-  /** Broadcast hint conditional on dictionary size: explicit `broadcast()`
-    * only while the dict fits comfortably on every executor
-    * (`spark.graft.link.broadcastMaxRows`, default 4M rows of two short
-    * strings ≈ hundreds of MB — inside the broadcast ceiling); above it the
-    * hint is dropped so the planner/AQE picks a shuffled hash join with
-    * skew split — a 100M+-alias Wikidata slice must not OOM the driver
-    * because of a hard-coded hint.
-    */
-  private def maybeBroadcast(spark: SparkSession, df: DataFrame, rows: Long): DataFrame = {
-    val max = spark.conf.get("spark.graft.link.broadcastMaxRows", "4000000").toLong
-    if (rows <= max) broadcast(df) else df
-  }
-  /** driver-known dict size (upper bound for its grouped/derived forms) */
-  private def dictRows: Long = RuCorpus.aliasDict.size.toLong
-
-  /** Entity linking: normalized-mention equi-join against the alias
-    * dictionary (blocked scoring: the block key IS the normalized
-    * alias; deterministic winner = min entity_id). Unlinkable mentions
-    * become literal nodes `M:<norm>`.
-    * Dict is broadcast below the size threshold (maybeBroadcast); at a real
-    * Wikidata-slice size the same plan runs unhinted as a shuffled hash
-    * join + AQE skew split.
-    */
-  def link(spark: SparkSession, triples: Dataset[Triple]): Dataset[LinkedTriple] = {
-    import spark.implicits._
-    // one alias row per alias: deterministic representative before the join
-    val dict = maybeBroadcast(spark,
-      aliasDf(spark).groupBy("alias").agg(min("entity_id").as("entity_id")), dictRows)
-    val t = triples.toDF()
-      .withColumn("subj_norm", graft.functions.F.lower_simple(col("subj")))
-      .withColumn("obj_norm", graft.functions.F.lower_simple(col("obj")))
-    val linked = t
-      .join(dict.as("ds"), col("subj_norm") === col("ds.alias"), "left")
-      .withColumnRenamed("entity_id", "subj_eid")
-      .drop("alias")
-      .join(dict.as("do"), col("obj_norm") === col("do.alias"), "left")
-      .withColumnRenamed("entity_id", "obj_eid")
-      .drop("alias")
-    linked.select(
-      col("docId"), col("spanOrder"), col("sentIdx"),
-      coalesce(col("subj_eid"), concat(lit("M:"), col("subj_norm"))).as("subjId"),
-      col("subjType"), col("pred"),
-      coalesce(col("obj_eid"), concat(lit("M:"), col("obj_norm"))).as("objId"),
-      col("objType")
-    ).as[LinkedTriple]
-  }
-
   /** same-as edges: entity ids sharing an alias (self-join on alias key). */
   def aliasEdges(spark: SparkSession): DataFrame = {
     val d = aliasDf(spark)
@@ -296,37 +249,30 @@ object Kg {
       ConnectedComponents.runAdaptive(edges, vertices).cache()
     }
 
-  /** alias -> canonical entity id, composed at the driver: the per-alias
-    * representative (min entity) remapped through the connected-component
-    * minimum. Lets the fused path do TWO broadcast-join probes per triple
-    * instead of four (link probe + canonical probe per side) — the join
-    * probes were the top CPU frame once inference went zero-alloc.
-    */
-  private val aliasCanonCache = new SessionCache[Unit, DataFrame]
-  def aliasCanonicalDf(spark: SparkSession): DataFrame =
-    aliasCanonCache(spark, ()) {
-      val rep = aliasDf(spark).groupBy("alias").agg(min("entity_id").as("entity_id"))
-      rep.join(canonicalMap(spark), col("entity_id") === col("id"), "left")
-        .select(col("alias"),
-          coalesce(col("component"), col("entity_id")).as("canonical_id"))
-        .cache()
-    }
-
-  /** alias -> canonical map as a plain broadcast variable, one per
-    * session: the DataFrame-join form rebuilds+reships its
+  /** alias -> (linked id, canonical id) as a plain broadcast variable,
+    * one per session, from one driver collect. The linked id is the
+    * alias's deterministic representative (Spark's min entity_id); the
+    * canonical id is that id remapped through the connected-component
+    * minimum of [[canonicalMap]], so canonicalizing costs no second
+    * probe. The dictionary (`RuCorpus.aliasDict`) already sits whole in
+    * driver memory. A DataFrame-join form rebuilds+reships its
     * BroadcastExchange on EVERY action (two broadcast-build jobs and
     * ~0.3-0.5 s of driver-serial time per run measured at 8 executors —
     * an Amdahl tail that caps N->4N scaling no matter how wide the
     * cluster), while an explicit `sc.broadcast` ships once and is
     * memory-mapped by every subsequent job in the session.
     */
-  private val aliasCanonBcCache =
-    new SessionCache[Unit, Broadcast[java.util.HashMap[String, String]]]
-  private def aliasCanonicalBc(spark: SparkSession) =
-    aliasCanonBcCache(spark, ()) {
-      val rows = aliasCanonicalDf(spark).select("alias", "canonical_id").collect()
-      val m = new java.util.HashMap[String, String](rows.length * 2)
-      rows.foreach(r => m.put(r.getString(0), r.getString(1)))
+  private val aliasMapCache =
+    new SessionCache[Unit, Broadcast[java.util.HashMap[String, Array[String]]]]
+  private def aliasMap(spark: SparkSession) =
+    aliasMapCache(spark, ()) {
+      val rows = aliasDf(spark).groupBy("alias").agg(min("entity_id").as("entity_id"))
+        .join(canonicalMap(spark), col("entity_id") === col("id"), "left")
+        .select(col("alias"), col("entity_id"),
+          coalesce(col("component"), col("entity_id")))
+        .collect()
+      val m = new java.util.HashMap[String, Array[String]](rows.length * 2)
+      rows.foreach(r => m.put(r.getString(0), Array(r.getString(1), r.getString(2))))
       spark.sparkContext.broadcast(m)
     }
 
@@ -361,69 +307,44 @@ object Kg {
     }
     sb.toString
   }
-  private def canonOf(m: java.util.HashMap[String, String], norm: String): String =
-    if (norm == null) null
-    else { val c = m.get(norm); if (c != null) c else "M:" + norm }
 
-  /** link + canonicalize fused: identical output to
-    * `canonicalize(spark, link(spark, triples))` (the composition
-    * comp(min-entity(alias)) equals the two-step mapping because all
-    * entities sharing an alias are in one component; unlinked mentions
-    * fall back to M:<norm> literals in both).
-    *
-    * Broadcast-scale dicts take the OBJECT path: a mapPartitions probe of
-    * the session-cached broadcast map, which Catalyst chains onto the
-    * extraction flatMap with no serialization boundary — the whole
-    * pipeline (scan -> sentenize -> inference -> extract -> link ->
-    * canonicalize) is ONE object stage and ONE Spark job, with no
-    * per-action broadcast rebuild. Above the threshold the declarative
-    * join form below runs unhinted, so the planner/AQE picks a shuffled
-    * hash join with skew split (a 100M-alias Wikidata slice must not be
-    * collected to the driver).
+  /** Entity id `k` (0 = linked, 1 = canonical) of a normalized mention;
+    * unlinkable mentions become literal nodes `M:<norm>`. */
+  private def idOf(m: java.util.HashMap[String, Array[String]], norm: String, k: Int): String =
+    if (norm == null) null
+    else { val e = m.get(norm); if (e != null) e(k) else "M:" + norm }
+
+  /** The one linking probe: a mapPartitions over the session's broadcast
+    * alias map, which Catalyst chains onto the extraction flatMap with no
+    * serialization boundary — the whole pipeline (scan -> sentenize ->
+    * inference -> extract -> link) is ONE object stage and ONE Spark job,
+    * with no join, no exchange and no per-action broadcast rebuild.
+    * Blocked scoring: the block key IS the normalized alias.
     */
-  def linkCanonicalize(spark: SparkSession, triples: Dataset[Triple]): DataFrame = {
-    val max = spark.conf.get("spark.graft.link.broadcastMaxRows", "4000000").toLong
-    if (dictRows <= max) {
-      val bc = aliasCanonicalBc(spark)
-      import spark.implicits._
-      return triples.mapPartitions { it =>
-        val m = bc.value
-        it.map { t =>
-          CanonTriple(t.docId, t.spanOrder, t.sentIdx,
-            canonOf(m, normSimple(t.subj)), t.subjType, t.pred,
-            canonOf(m, normSimple(t.obj)), t.objType)
-        }
-      }.toDF()
+  private def probe[T: Encoder](spark: SparkSession, triples: Dataset[Triple], k: Int)(
+      row: (Triple, String, String) => T): Dataset[T] = {
+    val bc = aliasMap(spark)
+    triples.mapPartitions { it =>
+      val m = bc.value
+      it.map(t => row(t, idOf(m, normSimple(t.subj), k), idOf(m, normSimple(t.obj), k)))
     }
-    val m = maybeBroadcast(spark, aliasCanonicalDf(spark), dictRows)
-    triples.toDF()
-      .withColumn("subj_norm", graft.functions.F.lower_simple(col("subj")))
-      .withColumn("obj_norm", graft.functions.F.lower_simple(col("obj")))
-      .join(m.as("ms"), col("subj_norm") === col("ms.alias"), "left")
-      .withColumnRenamed("canonical_id", "subj_c")
-      .drop("alias")
-      .join(m.as("mo"), col("obj_norm") === col("mo.alias"), "left")
-      .withColumnRenamed("canonical_id", "obj_c")
-      .drop("alias")
-      .select(col("docId"), col("spanOrder"), col("sentIdx"),
-        coalesce(col("subj_c"), concat(lit("M:"), col("subj_norm"))).as("subj_id"),
-        col("subjType").as("subj_type"), col("pred"),
-        coalesce(col("obj_c"), concat(lit("M:"), col("obj_norm"))).as("obj_id"),
-        col("objType").as("obj_type"))
   }
 
-  /** Remap linked triples to canonical entity ids. */
-  def canonicalize(spark: SparkSession, linked: Dataset[LinkedTriple]): DataFrame = {
-    val cm = maybeBroadcast(spark, canonicalMap(spark), dictRows)
-    linked.toDF()
-      .join(cm.as("cs"), col("subjId") === col("cs.id"), "left")
-      .withColumn("subj_c", coalesce(col("cs.component"), col("subjId")))
-      .drop("id", "component")
-      .join(cm.as("co"), col("objId") === col("co.id"), "left")
-      .withColumn("obj_c", coalesce(col("co.component"), col("objId")))
-      .select(col("docId"), col("spanOrder"), col("sentIdx"),
-        col("subj_c").as("subj_id"), col("subjType").as("subj_type"),
-        col("pred"),
-        col("obj_c").as("obj_id"), col("objType").as("obj_type"))
+  /** Entity linking: each mention maps to its alias's min entity_id, or
+    * to the literal `M:<norm>` when no alias matches. */
+  def link(spark: SparkSession, triples: Dataset[Triple]): Dataset[LinkedTriple] = {
+    import spark.implicits._
+    probe(spark, triples, 0)((t, s, o) =>
+      LinkedTriple(t.docId, t.spanOrder, t.sentIdx, s, t.subjType, t.pred, o, t.objType))
+  }
+
+  /** link + canonicalize in the same probe: each linked id remapped to
+    * its [[canonicalMap]] component (all entities sharing an alias are in
+    * one component); `M:<norm>` literals pass through unchanged.
+    */
+  def linkCanonicalize(spark: SparkSession, triples: Dataset[Triple]): DataFrame = {
+    import spark.implicits._
+    probe(spark, triples, 1)((t, s, o) =>
+      CanonTriple(t.docId, t.spanOrder, t.sentIdx, s, t.subjType, t.pred, o, t.objType)).toDF()
   }
 }

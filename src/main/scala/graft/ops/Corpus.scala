@@ -237,7 +237,7 @@ object Corpus {
     *   1. k-means clusters the embeddings ([[Similarity.kmeans]] —
     *      integer-quantized, bit-reproducible assignments)
     *   2. near-dup pairs restricted to SAME-CLUSTER candidates
-    *      ([[Dedup.embeddingDupPairsInClusters]] — cluster id ∧ LSH
+    *      ([[Dedup.embeddingDupPairs]] with `assign` — cluster id ∧ LSH
     *      bucket blocking, exact-cosine verify)
     *   3. connected components over the pair graph, one survivor per
     *      component = min vec_id ([[Dedup.dedupClustersFromPairs]])
@@ -268,8 +268,8 @@ object Corpus {
       case None => Similarity.kmeans(emb, k, iters)
         .select(col("vec_id"), col("cluster")).localCheckpoint()
     }
-    val pairs = Dedup.embeddingDupPairsInClusters(
-      emb, assign, threshold, bits, dim, tables, seed)
+    val pairs = Dedup.embeddingDupPairs(
+      emb, threshold, bits, dim, tables, seed, Some(assign))
     val cc = Dedup.dedupClustersFromPairs(
       emb.select(col("vec_id").as("doc_id")),
       pairs.select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))

@@ -1268,13 +1268,19 @@ object Dedup {
   /** Distinct (doc, shingle) pairs of n-token shingles (shingle = the
     * joined token text — required where the downstream hash must be
     * oracle-reproducible, i.e. the MinHash md5 base hash). */
-  def shingles(docs: DataFrame, n: Int): DataFrame = {
-    val t = docs.select(col("doc_id"), TextStats.tokens(F.lower_simple(col("text"))).as("toks"))
-    t.select(col("doc_id"),
+  def shingles(docs: DataFrame, n: Int): DataFrame =
+    shingleRows(docs, n)(identity).distinct()
+
+  /** One (doc_id, shingle) row per n-token shingle POSITION, `shingle` =
+    * `f` of the window's space-joined token text (tokens of
+    * lower_simple(text); a doc shorter than n yields its whole text). The
+    * token array is bound to a column BEFORE the shingle lambda (no CSE
+    * into HOF lambdas — see gramRows). */
+  private def shingleRows(docs: DataFrame, n: Int)(f: Column => Column): DataFrame =
+    docs.select(col("doc_id"), TextStats.tokens(F.lower_simple(col("text"))).as("toks"))
+      .select(col("doc_id"),
         explode(transform(sequence(lit(0), greatest(size(col("toks")) - n, lit(0))),
-          i => array_join(slice(col("toks"), i + 1, lit(n)), " "))).as("shingle"))
-      .distinct()
-  }
+          i => f(array_join(slice(col("toks"), i + 1, lit(n)), " ")))).as("shingle"))
 
   /** Distinct (doc_id, shingle=xxhash64, mdh=md5-base-hash) in ONE pass:
     * both hashes every shingle consumer needs, computed row-locally on the
@@ -1288,15 +1294,11 @@ object Dedup {
     * xxhash64 and the ~31-bit md5-mod-P base hash — simultaneously
     * (~2^-95), strictly rarer than the 2^-64 single-hash caveat
     * [[shingleHashes]] has always documented. */
-  def shingleDoubleHashes(docs: DataFrame, n: Int): DataFrame = {
-    val t = docs.select(col("doc_id"), TextStats.tokens(F.lower_simple(col("text"))).as("toks"))
-    t.select(col("doc_id"),
-        explode(transform(sequence(lit(0), greatest(size(col("toks")) - n, lit(0))),
-          i => array_join(slice(col("toks"), i + 1, lit(n)), " "))).as("shingle"))
+  def shingleDoubleHashes(docs: DataFrame, n: Int): DataFrame =
+    shingleRows(docs, n)(identity)
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"),
         baseHash(col("shingle")).as("mdh"))
       .distinct()
-  }
 
   /** Distinct (doc, shingle) with the shingle reduced to its xxhash64 —
     * for equality-only consumers (decontamination, Jaccard blocking) the
@@ -1310,12 +1312,8 @@ object Dedup {
     * POSITION. Callers that can discard most shingles map-side (the Bloom
     * pre-filter) want to do so BEFORE paying the distinct's shuffle.
     */
-  private def shingleHashStream(docs: DataFrame, n: Int): DataFrame = {
-    val t = docs.select(col("doc_id"), TextStats.tokens(F.lower_simple(col("text"))).as("toks"))
-    t.select(col("doc_id"),
-        explode(transform(sequence(lit(0), greatest(size(col("toks")) - n, lit(0))),
-          i => xxhash64(array_join(slice(col("toks"), i + 1, lit(n)), " ")))).as("shingle"))
-  }
+  private def shingleHashStream(docs: DataFrame, n: Int): DataFrame =
+    shingleRows(docs, n)(xxhash64(_))
 
   /** Benchmark decontamination (the classic n-gram collision rule — GPT-3
     * removed training docs sharing any 13-gram with an eval set): flag
@@ -1653,50 +1651,31 @@ object Dedup {
     * verified. Every join is an equi-join on a bucket/id key — no
     * BroadcastNestedLoopJoin anywhere, so the shape survives 100 TB.
     * The DuckDB oracle inlines the identical seeded planes.
+    *
+    * With `assign`, a k-means assignment frame (vec_id, cluster), the
+    * candidate set is further restricted to SAME-CLUSTER pairs: the
+    * cluster joins the LSH bucket as the blocking key, so candidates must
+    * share BOTH before the exact-cosine verify — the pair-generation
+    * stage of SemDeDup (Abbas et al. 2023, arXiv:2303.09540). At 100 TB
+    * the cluster term is what makes the self-join tractable: bucket
+    * populations are corpus-wide under plain LSH, but cluster∧bucket
+    * blocks are bounded by the cluster size, and clusters are sized by
+    * choosing k (the paper runs k ≈ √N). On a corpus whose k-means
+    * clusters are well separated (inter-cluster cosine < threshold) the
+    * restriction loses NO pairs — asserted in SemDedupSpec.
     */
   def embeddingDupPairs(emb: DataFrame, threshold: Double, bits: Int = 8,
-                        dim: Int = 64, tables: Int = 4, seed: Long = 42L): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"))
+                        dim: Int = 64, tables: Int = 4, seed: Long = 42L,
+                        assign: Option[DataFrame] = None): DataFrame = {
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val base = assign.fold(vecs)(a =>
+      vecs.join(a.select(col("vec_id"), col("cluster")), "vec_id"))
     val cand = (0 until tables).map { t =>
       val b = base.withColumn("bucket",
         F.hyperplane_sig(col("embedding"), Similarity.planes(bits, dim, seed + t)))
+      val sameBlock = col("a.bucket") === col("b.bucket")
       b.as("a").join(b.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-    }.reduce(_ unionAll _).distinct()
-    cand
-      .join(base.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), "id_a")
-      .join(base.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(F.cosine(col("emb_a"), col("emb_b")), 6).as("cos"))
-      .where(col("cos") >= threshold)
-  }
-
-  /** [[embeddingDupPairs]] with the candidate set further restricted to
-    * SAME-CLUSTER pairs: a k-means assignment frame (vec_id, cluster)
-    * joins the hyperplane-LSH bucket as the blocking key, so candidates
-    * must share BOTH a semantic cluster and an LSH bucket before the
-    * exact-cosine verify — the pair-generation stage of SemDeDup (Abbas
-    * et al. 2023, arXiv:2303.09540). At 100 TB the cluster term is what
-    * makes the self-join tractable: bucket populations are corpus-wide
-    * under plain LSH, but cluster∧bucket blocks are bounded by the
-    * cluster size, and clusters are sized by choosing k (the paper runs
-    * k ≈ √N). On a corpus whose k-means clusters are well separated
-    * (inter-cluster cosine < threshold) the restriction loses NO pairs —
-    * asserted against [[embeddingDupPairs]] in SemDedupSpec.
-    */
-  def embeddingDupPairsInClusters(emb: DataFrame, assign: DataFrame,
-                                  threshold: Double, bits: Int = 8,
-                                  dim: Int = 64, tables: Int = 4,
-                                  seed: Long = 42L): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"))
-      .join(assign.select(col("vec_id"), col("cluster")), "vec_id")
-    val cand = (0 until tables).map { t =>
-      val b = base.withColumn("bucket",
-        F.hyperplane_sig(col("embedding"), Similarity.planes(bits, dim, seed + t)))
-      b.as("a").join(b.as("b"),
-          col("a.cluster") === col("b.cluster") &&
-            col("a.bucket") === col("b.bucket") &&
+          assign.fold(sameBlock)(_ => col("a.cluster") === col("b.cluster") && sameBlock) &&
             col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
     }.reduce(_ unionAll _).distinct()

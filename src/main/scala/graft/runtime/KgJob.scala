@@ -318,17 +318,18 @@ object KgJob {
           .where(col("rn") === 1)
       }
     val rows = picked.select(col("snapshot_id"), col("files")).collect()
-    rows.flatMap { r =>
-      val sid = r.getLong(0)
-      r.getSeq[String](1).map { f =>
-        val path = s"$outDir/$f"
-        require(new java.io.File(path).exists(),
-          s"snapshot $sid references expired data file $f — " +
-            "the bucket was rewritten and vacuumed after this snapshot; " +
-            "read a newer one")
-        path
-      }
-    }.toSeq
+    rows.flatMap(r => r.getSeq[String](1).map(retainedFile(outDir, r.getLong(0), _))).toSeq
+  }
+
+  /** Data file `f` of snapshot `sid`, resolved against the table dir;
+    * fails loudly when it no longer exists. */
+  private def retainedFile(outDir: String, sid: Long, f: String): String = {
+    val path = s"$outDir/$f"
+    require(new java.io.File(path).exists(),
+      s"snapshot $sid references expired data file $f — " +
+        "the bucket was rewritten and vacuumed after this snapshot; " +
+        "read a newer one")
+    path
   }
 
   /** Time travel: the triple table exactly as of `snapshotId` (1-based,
@@ -372,22 +373,52 @@ object KgJob {
     * behind the live pipeline.
     */
   def compactBucket(spark: SparkSession, outDir: String, bucket: Int,
-                    runId: String, targetFiles: Int = 1): Unit = {
+                    runId: String, targetFiles: Int = 1): Unit =
+    rewriteBucket(spark, outDir, bucket, runId, "compactBucket", "compact", "rewrite") { src =>
+      // coalesce (no shuffle) when shrinking; repartition when the target
+      // exceeds the scan's partition count (coalesce cannot grow)
+      (if (src.rdd.getNumPartitions >= targetFiles) src.coalesce(targetFiles)
+       else src.repartition(targetFiles), None)
+    }
+
+  /** The tail every bucket rewrite (compact / z-order / upsert) shares:
+    * require a committed snapshot of `bucket`, read its head manifest's
+    * files, write the content `rewrite` derives from them to a tmp dir,
+    * publish it as `<kind>-<runId>-<i>.parquet` and append one `op`
+    * commit row. A CDC change set `rewrite` returns is recorded to
+    * `_changes/` after the data files and before the commit — crash-safe
+    * by write order: data files first, the change file second, the atomic
+    * commit rename last; a pre-commit death leaves only orphans that
+    * manifest reads never see.
+    */
+  private def rewriteBucket(spark: SparkSession, outDir: String, bucket: Int,
+                            runId: String, caller: String, kind: String, op: String)(
+      rewrite: DataFrame => (DataFrame, Option[DataFrame])): Unit = {
     require(committedBuckets(spark, outDir).contains(bucket),
-      s"compactBucket: bucket $bucket has no committed snapshot")
-    val cur = headBucketFiles(spark, outDir, bucket)
-    val tmp = s"$outDir/_tmp_compact_${runId}_$bucket"
-    val src = spark.read.parquet(cur: _*)
-    // coalesce (no shuffle) when shrinking; repartition when the target
-    // exceeds the scan's partition count (coalesce cannot grow)
-    val shaped = if (src.rdd.getNumPartitions >= targetFiles)
-      src.coalesce(targetFiles) else src.repartition(targetFiles)
-    shaped.write.mode(SaveMode.Overwrite).parquet(tmp)
+      s"$caller: bucket $bucket has no committed snapshot")
+    val (content, changes) =
+      rewrite(spark.read.parquet(headBucketFiles(spark, outDir, bucket): _*))
+    val tmp = s"$outDir/_tmp_${kind}_${runId}_$bucket"
+    content.write.mode(SaveMode.Overwrite).parquet(tmp)
     val (moved, nNew) =
-      publishBucketFiles(spark, outDir, bucket, tmp, s"compact-$runId")
+      publishBucketFiles(spark, outDir, bucket, tmp, s"$kind-$runId")
+    val changeFiles = changes.toSeq.map { c =>
+      val ctmp = s"$outDir/_tmp_changes_${runId}_$bucket"
+      c.coalesce(1).write.mode(SaveMode.Overwrite).parquet(ctmp)
+      val cname = s"changes-$runId-$bucket.parquet"
+      val cdst = new java.io.File(s"$outDir/_changes/$cname")
+      cdst.getParentFile.mkdirs()
+      val cpart = new java.io.File(ctmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(cpart.toPath, cdst.toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ctmp))
+      s"_changes/$cname"
+    }
     appendCommit(spark, outDir, Commit(runId, bucket, 0L, 0L, nNew, "",
       System.currentTimeMillis(), counters_exact = true,
-      files = moved.map(f => s"triples/bucket=$bucket/$f"), op = "rewrite"))
+      files = moved.map(f => s"triples/bucket=$bucket/$f"), op = op,
+      change_files = changeFiles))
   }
 
   /** Data files of `bucket` referenced by the LATEST manifest. */
@@ -506,37 +537,28 @@ object KgJob {
     require(zCols.nonEmpty, "compactBucketZOrder: zCols must be non-empty")
     require(targetFiles >= 1 && bits >= 1 && bits * zCols.length <= 63,
       s"compactBucketZOrder: need 1 <= bits*k <= 63, got bits=$bits k=${zCols.length}")
-    require(committedBuckets(spark, outDir).contains(bucket),
-      s"compactBucketZOrder: bucket $bucket has no committed snapshot")
-    val cur = headBucketFiles(spark, outDir, bucket)
-    val df = spark.read.parquet(cur: _*)
-    zCols.foreach(c => require(df.columns.contains(c),
-      s"compactBucketZOrder: column $c not in table schema"))
-    require(!df.columns.contains("__zval"),
-      "compactBucketZOrder: __zval is reserved")
-    // left-align each column's bins to the shared bit width: a
-    // low-cardinality column (e.g. ~10 predicates vs thousands of
-    // subjects) otherwise leaves its high bits zero and the curve
-    // degenerates to a single-column sort — its most significant
-    // EFFECTIVE bit must land at position bits-1 to interleave at the
-    // same granularity as the wide column
-    val bins = zCols.map { c =>
-      val bnd = sampleBoundaries(df, c, bits)
-      val effBits = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
-        math.max(1L, bnd.length.toLong)))
-      shiftleft(rangeBin(c, bnd), bits - effBits)
+    rewriteBucket(spark, outDir, bucket, runId, "compactBucketZOrder", "zorder", "rewrite") { df =>
+      zCols.foreach(c => require(df.columns.contains(c),
+        s"compactBucketZOrder: column $c not in table schema"))
+      require(!df.columns.contains("__zval"),
+        "compactBucketZOrder: __zval is reserved")
+      // left-align each column's bins to the shared bit width: a
+      // low-cardinality column (e.g. ~10 predicates vs thousands of
+      // subjects) otherwise leaves its high bits zero and the curve
+      // degenerates to a single-column sort — its most significant
+      // EFFECTIVE bit must land at position bits-1 to interleave at the
+      // same granularity as the wide column
+      val bins = zCols.map { c =>
+        val bnd = sampleBoundaries(df, c, bits)
+        val effBits = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
+          math.max(1L, bnd.length.toLong)))
+        shiftleft(rangeBin(c, bnd), bits - effBits)
+      }
+      (df.withColumn("__zval", interleaveBits(bins, bits))
+        .repartitionByRange(targetFiles, col("__zval"))
+        .sortWithinPartitions("__zval")
+        .drop("__zval"), None)
     }
-    val tmp = s"$outDir/_tmp_zorder_${runId}_$bucket"
-    df.withColumn("__zval", interleaveBits(bins, bits))
-      .repartitionByRange(targetFiles, col("__zval"))
-      .sortWithinPartitions("__zval")
-      .drop("__zval")
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val (moved, nNew) =
-      publishBucketFiles(spark, outDir, bucket, tmp, s"zorder-$runId")
-    appendCommit(spark, outDir, Commit(runId, bucket, 0L, 0L, nNew, "",
-      System.currentTimeMillis(), counters_exact = true,
-      files = moved.map(f => s"triples/bucket=$bucket/$f"), op = "rewrite"))
   }
 
   /** MERGE/upsert one bucket: replace the bucket's rows matching
@@ -569,43 +591,20 @@ object KgJob {
                    runId: String, updates: DataFrame,
                    keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "upsertBucket: keys must be non-empty")
-    require(committedBuckets(spark, outDir).contains(bucket),
-      s"upsertBucket: bucket $bucket has no committed snapshot")
-    val cur = headBucketFiles(spark, outDir, bucket)
-    val old = spark.read.parquet(cur: _*)
-    require(old.columns.sorted.sameElements(updates.columns.sorted),
-      s"upsertBucket: updates schema ${updates.columns.sorted.mkString(",")} " +
-        s"!= table schema ${old.columns.sorted.mkString(",")}")
-    keys.foreach(k => require(old.columns.contains(k),
-      s"upsertBucket: key column $k not in table schema"))
-    val u = updates.select(old.columns.map(col).toIndexedSeq: _*).localCheckpoint()
-    val uKeys = u.select(keys.map(col): _*).distinct()
-    val retracted = old.join(uKeys, keys, "left_semi").localCheckpoint()
-    val newContent = old.join(uKeys, keys, "left_anti").unionByName(u)
-
-    val tmp = s"$outDir/_tmp_upsert_${runId}_$bucket"
-    newContent.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val (moved, nNew) =
-      publishBucketFiles(spark, outDir, bucket, tmp, s"upsert-$runId")
-
-    // CDC pair, recorded before the commit makes the snapshot live
-    val changes = retracted.withColumn("change_type", lit("delete"))
-      .unionByName(u.withColumn("change_type", lit("insert")))
-    val ctmp = s"$outDir/_tmp_changes_${runId}_$bucket"
-    changes.coalesce(1).write.mode(SaveMode.Overwrite).parquet(ctmp)
-    val cname = s"changes-$runId-$bucket.parquet"
-    val cdst = new java.io.File(s"$outDir/_changes/$cname")
-    cdst.getParentFile.mkdirs()
-    val cpart = new java.io.File(ctmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(cpart.toPath, cdst.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ctmp))
-
-    appendCommit(spark, outDir, Commit(runId, bucket, 0L, 0L, nNew, "",
-      System.currentTimeMillis(), counters_exact = true,
-      files = moved.map(f => s"triples/bucket=$bucket/$f"), op = "upsert",
-      change_files = Seq(s"_changes/$cname")))
+    rewriteBucket(spark, outDir, bucket, runId, "upsertBucket", "upsert", "upsert") { old =>
+      require(old.columns.sorted.sameElements(updates.columns.sorted),
+        s"upsertBucket: updates schema ${updates.columns.sorted.mkString(",")} " +
+          s"!= table schema ${old.columns.sorted.mkString(",")}")
+      keys.foreach(k => require(old.columns.contains(k),
+        s"upsertBucket: key column $k not in table schema"))
+      val u = updates.select(old.columns.map(col).toIndexedSeq: _*).localCheckpoint()
+      val uKeys = u.select(keys.map(col): _*).distinct()
+      val retracted = old.join(uKeys, keys, "left_semi").localCheckpoint()
+      // CDC pair, recorded before the commit makes the snapshot live
+      (old.join(uKeys, keys, "left_anti").unionByName(u).coalesce(1),
+        Some(retracted.withColumn("change_type", lit("delete"))
+          .unionByName(u.withColumn("change_type", lit("insert")))))
+    }
   }
 
   /** Typed changelog over (fromSnapshot, toSnapshot]: every row change
@@ -631,12 +630,7 @@ object KgJob {
       val sid = r.getLong(0)
       r.getString(1) match {
         case "append" =>
-          val fs = r.getSeq[String](2).map { f =>
-            val p = s"$outDir/$f"
-            require(new java.io.File(p).exists(),
-              s"snapshot $sid references expired data file $f — read a newer one")
-            p
-          }
+          val fs = r.getSeq[String](2).map(retainedFile(outDir, sid, _))
           if (fs.isEmpty) None
           else Some(spark.read.parquet(fs: _*)
             .withColumn("change_type", lit("insert"))

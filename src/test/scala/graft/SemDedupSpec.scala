@@ -53,7 +53,7 @@ class SemDedupSpec extends AnyFunSuite {
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
     val global = ops.Dedup.embeddingDupPairs(emb, 0.9, dim = Dim)
       .collect().map(key).toSet
-    val blocked = ops.Dedup.embeddingDupPairsInClusters(emb, assign, 0.9, dim = Dim)
+    val blocked = ops.Dedup.embeddingDupPairs(emb, 0.9, dim = Dim, assign = Some(assign))
       .collect().map(key).toSet
     assert(global.nonEmpty, "fixture should contain intra-group near-dups")
     assert(blocked == global,

@@ -54,12 +54,15 @@ class SessionCacheSpec extends AnyFunSuite {
   }
 
   test("a cold nested chain fills without a recursive update") {
-    // uniVocab6 -> uniScores6 -> bpeVocab6 -> bpeMerges6, and
-    // aliasCanonicalDf -> canonicalMap, all unfilled in a fresh session
+    // uniVocab6 -> uniScores6 -> bpeVocab6 -> bpeMerges6, and the
+    // linker's alias map -> canonicalMap, all unfilled in a fresh session
     val fresh = spark.newSession()
     val vocab = SparkEntry.uniVocab6(fresh, dirA)
     assert(vocab.count() > 0)
     assert(SparkEntry.uniVocab6(fresh, dirA) eq vocab)
-    assert(Kg.aliasCanonicalDf(fresh).count() > 0)
+    import fresh.implicits._
+    val linked = Kg.link(fresh, Seq(graft.kg.Triple("d", 0, 0,
+      "Газпром", "ORG", "is", "нечто", "NOUN")).toDS()).collect()
+    assert(linked.map(l => (l.subjId.startsWith("M:"), l.objId)).toSeq == Seq((false, "M:нечто")))
   }
 }

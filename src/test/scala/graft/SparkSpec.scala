@@ -180,68 +180,95 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("fused linkCanonicalize == canonicalize(link(...)) row for row") {
+    import spark.implicits._
     val triples = graft.kg.Kg.triples(Pipeline.parse(
       Docs.sentences(Docs.russianDocs(spark, 120L)), SparkEntry.packBc(spark)))
-    val twoStep = graft.kg.Kg.canonicalize(spark, graft.kg.Kg.link(spark, triples))
-      .collect().map(_.toString).sorted
+    // two-step reference: link's ids remapped through the canonical map
+    val cm = graft.kg.Kg.canonicalMap(spark).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val twoStep = graft.kg.Kg.link(spark, triples).collect()
+      .map(l => graft.kg.CanonTriple(l.docId, l.spanOrder, l.sentIdx,
+        cm.getOrElse(l.subjId, l.subjId), l.subjType, l.pred,
+        cm.getOrElse(l.objId, l.objId), l.objType).toString)
+      .sorted
     val fusedDf = graft.kg.Kg.linkCanonicalize(spark, triples)
-    // broadcast-dict branch: the link probe is an object-mode
-    // mapPartitions fused onto the extraction flatMap — no join operator,
-    // no exchange, no per-action broadcast rebuild in the plan at all
+    // the link probe is an object-mode mapPartitions fused onto the
+    // extraction flatMap — no join operator, no exchange, no per-action
+    // broadcast rebuild in the plan at all
     val plan = fusedDf.queryExecution.executedPlan.toString
     assert(!plan.contains("Join") && !plan.contains("Exchange"),
       s"fused path must be join- and shuffle-free; plan:\n${plan.take(2000)}")
-    val fused = fusedDf.collect().map(_.toString).sorted
+    val fused = fusedDf.as[graft.kg.CanonTriple].collect().map(_.toString).sorted
     assert(fused.sameElements(twoStep))
     assert(fused.nonEmpty)
   }
 
-  test("linking above the broadcast threshold flips strategy, keeps rows identical") {
-    // simulate a Wikidata-slice-sized dictionary: drop the broadcast hint
-    // (threshold 0) and pin autoBroadcastJoinThreshold off so neither the
-    // hint nor AQE re-broadcasts — the plan must become a shuffle join and
-    // the output must not change by a single row
-    val triples = graft.kg.Kg.triples(Pipeline.parse(
-      Docs.sentences(Docs.russianDocs(spark, 80L)), SparkEntry.packBc(spark)))
-    val want = graft.kg.Kg.linkCanonicalize(spark, triples)
-      .collect().map(_.toString).sorted
-    val conf = spark.conf
-    val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      conf.set("spark.graft.link.broadcastMaxRows", "0")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the cached dict's InMemoryRelation stores the plan it was BUILT
-      // with (which legitimately used broadcasts) — judge the probe joins
-      // by the plan prefix above the first cached relation
-      def probePlan(df: org.apache.spark.sql.DataFrame): String = {
-        val s = df.queryExecution.executedPlan.toString
-        val cut = s.indexOf("InMemoryRelation")
-        if (cut >= 0) s.substring(0, cut) else s
+  test("link and linkCanonicalize == a DataFrame-join reference on generated mentions") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val kg = graft.kg.Kg
+    val aliases = RuCorpus.aliasDict.map(_.alias).distinct
+    // aliases that carry two ids (the planted L/Q twins)
+    val twins = RuCorpus.aliasDict.groupBy(_.alias).collect {
+      case (a, g) if g.size > 1 => a }.toSeq.sorted
+    assert(twins.nonEmpty)
+    def recase(s: String, up: Seq[Boolean]): String =
+      s.zip(up ++ Seq.fill(s.length)(false)).map { case (c, u) => if (u) c.toUpper else c }.mkString
+    val flips = Gen.listOfN(24, Gen.oneOf(true, false))
+    val mention: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      4 -> Gen.zip(Gen.oneOf(aliases), flips).map { case (a, f) => recase(a, f) },
+      3 -> Gen.zip(Gen.oneOf(twins), flips).map { case (a, f) => recase(a, f) },
+      2 -> Gen.zip(Gen.oneOf("Gazprom", "River Bank", "ОАО Ромашка", "x"), flips)
+        .map { case (a, f) => recase(a, f) },
+      // supplementary characters: a cased one (Deseret, U+10400 lowers to
+      // U+10428) and an uncased emoji, prefixed to a known alias
+      2 -> Gen.zip(Gen.oneOf("\uD801\uDC00", "\uD83D\uDE00"), Gen.oneOf(aliases), flips)
+        .map { case (p, a, f) => p + recase(a, f) })
+    val genTriples = Gen.choose(1, 30).flatMap(Gen.listOfN(_, Gen.zip(mention, mention)))
+      .map(_.zipWithIndex.map { case ((s, o), i) =>
+        graft.kg.Triple(s"d${i % 4}", i, 0, s, "PER", "p", o, "ORG") })
+
+    // reference: normalized-mention equi-joins against the alias table
+    // (min entity_id per alias), then optionally the canonical map
+    val dict = kg.aliasDf(spark).groupBy("alias").agg(min("entity_id").as("eid"))
+    val cm = kg.canonicalMap(spark)
+    def ref(t: DataFrame, canonical: Boolean): DataFrame = {
+      def linkSide(df: DataFrame, side: String): DataFrame = {
+        val norm = graft.functions.F.lower_simple(col(side))
+        val linked = df.join(dict.as(side), norm === col(s"$side.alias"), "left")
+          .withColumn(s"${side}_id",
+            coalesce(col(s"$side.eid"), concat(lit("M:"), norm)))
+          .drop("alias", "eid")
+        if (!canonical) linked
+        else linked.join(cm.as(s"c$side"), col(s"${side}_id") === col(s"c$side.id"), "left")
+          .withColumn(s"${side}_id",
+            coalesce(col(s"c$side.component"), col(s"${side}_id")))
+          .drop("id", "component")
       }
-      val df = graft.kg.Kg.linkCanonicalize(spark, triples)
-      val plan = probePlan(df)
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"hint must be dropped above the threshold; plan:\n${plan.take(2000)}")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        s"expected a shuffle join; plan:\n${plan.take(2000)}")
-      val got = df.collect().map(_.toString).sorted
-      assert(got.sameElements(want), "non-broadcast path must be row-identical")
-      // two-step path flips too
-      val two = graft.kg.Kg.canonicalize(spark, graft.kg.Kg.link(spark, triples))
-      assert(!probePlan(two).contains("BroadcastHashJoin"))
-      assert(two.collect().map(_.toString).sorted.sameElements(want))
-    } finally {
-      conf.set("spark.graft.link.broadcastMaxRows", "4000000")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+      linkSide(linkSide(t, "subj"), "obj").select(col("docId"), col("spanOrder"),
+        col("sentIdx"), col("subj_id"), col("subjType"), col("pred"),
+        col("obj_id"), col("objType"))
     }
+    def rows(df: DataFrame) =
+      df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\u0001")).sorted
+    val p = Prop.forAllNoShrink(genTriples) { ts =>
+      val t = ts.toDS()
+      val (l, lr) = (rows(kg.link(spark, t).toDF()), rows(ref(t.toDF(), canonical = false)))
+      val (c, cr) = (rows(kg.linkCanonicalize(spark, t)), rows(ref(t.toDF(), canonical = true)))
+      (Prop(l == lr) :| s"link $l\n != $lr") && (Prop(c == cr) :| s"linkCanonicalize $c\n != $cr")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(20), p)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("entity linking + canonicalization merge duplicate org ids") {
     import spark.implicits._
-    val linked = graft.kg.Kg.link(spark,
+    val canon = graft.kg.Kg.linkCanonicalize(spark,
       graft.kg.Kg.triples(Pipeline.parse(
         Docs.sentences(Docs.russianDocs(spark, 80L)), SparkEntry.packBc(spark))))
-    val canon = graft.kg.Kg.canonicalize(spark, linked)
     val subjIds = canon.select("subj_id").as[String].collect().toSet
     // PER/ORG subjects resolve to entity ids, not mention literals
     assert(subjIds.exists(_.startsWith("Q")) || subjIds.exists(_.startsWith("L")))
